@@ -23,7 +23,8 @@ object Tables {
 
   /** events.parquet's `ts` physical type has changed across driver data
     * generations: TIMESTAMP(NANOS) originally (Spark's vectorized reader
-    * rejects it — read nanos as long, convert with exact integer `div`),
+    * rejects it — Sessions.configure sets `nanosAsLong`, so it reads as
+    * long and converts with exact integer `div`),
     * plain TIMESTAMP(MICROS) since the round-7 regen (reads as
     * TIMESTAMP_NTZ under inferTimestampNTZ). Normalize BOTH to session-TZ
     * TIMESTAMP so every downstream operator and oracle sees one type; the
@@ -31,7 +32,6 @@ object Tables {
     * wall-clock-identity.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

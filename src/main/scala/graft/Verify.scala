@@ -15,16 +15,32 @@ object Verify {
       SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // queries install the tt catalog on demand; install it up front so
+    // the leak check below sees only conf a query failed to scope
+    graft.sources.TtCatalog.install(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      val before = spark.conf.getAll
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       spark.catalog.clearCache() // intra-query caches are dead past the sink
+      // a query that leaves session conf changed fails its line (its
+      // output is dropped, so the oracle compare reports it) and the
+      // snapshot is put back so the leak cannot reach later queries
+      val after = spark.conf.getAll
+      val leaked = graft.engine.Sessions.changedKeys(before, after)
+      if (leaked.nonEmpty) {
+        System.err.println(s"[verify] $name leaked conf: " +
+          leaked.map(k => s"$k=${after.getOrElse(k, "<unset>")}").mkString(", "))
+        val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+        graft.engine.Sessions.resetConf(spark, before, leaked)
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

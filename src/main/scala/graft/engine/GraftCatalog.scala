@@ -95,11 +95,8 @@ object GraftCatalog {
     s.sql(s"ANALYZE TABLE ${t("orders")} COMPUTE STATISTICS")
     s.sql(s"ANALYZE TABLE ${t("orders")} COMPUTE STATISTICS FOR COLUMNS o_totalprice")
     s.sql(s"ANALYZE TABLE ${t("customer")} COMPUTE STATISTICS")
-    val saved = Seq("spark.sql.cbo.enabled" -> s.conf.getOption("spark.sql.cbo.enabled"),
-      "spark.sql.cbo.joinReorder.enabled" -> s.conf.getOption("spark.sql.cbo.joinReorder.enabled"))
-    s.conf.set("spark.sql.cbo.enabled", "true")
-    s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    try {
+    Sessions.withConf(s)("spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true") {
       s.sql(
         s"""SELECT c_mktsegment, count(*) AS n,
            |  round(sum(o_totalprice), 2) AS top_revenue
@@ -107,9 +104,6 @@ object GraftCatalog {
            |WHERE o_totalprice > 499000
            |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
         .localCheckpoint() // materialize under CBO before confs restore
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

@@ -32,6 +32,50 @@ object Sessions {
       // an order it does not have and corrupt merge-join results.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
+      // events.parquet carried TIMESTAMP(NANOS) in early data generations,
+      // which the vectorized reader rejects; Tables.events converts the
+      // resulting longs. Set once here, never per read.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** Partition columns read back as plain strings: the tt stores and
+    * day-partitioned scratch stores compare `day` string-to-string.
+    */
+  val noPartitionInference: (String, String) =
+    "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"
+
+  /** Run `body` with the session conf keys `kvs` set, then put each key
+    * back as it was: its prior value, or unset if it had none (a key
+    * that only reads its default is unset, not pinned to the default).
+    * Restores when `body` throws. The whole scope holds one reentrant
+    * lock per session, so two threads flipping keys on one session
+    * serialize instead of interleaving save/restore and leaking a value.
+    * A streaming query's batches run on a cloned session with its own
+    * lock, so a foreachBatch body never waits on the driver thread that
+    * holds the parent session's lock while it awaits the stream.
+    */
+  def withConf[T](s: SparkSession)(kvs: (String, String)*)(body: => T): T = {
+    val conf = s.conf
+    conf.synchronized {
+      val prior = conf.getAll
+      kvs.foreach { case (k, v) => conf.set(k, v) }
+      try body finally resetConf(s, prior, kvs.map(_._1).distinct)
+    }
+  }
+
+  /** Keys whose value differs between two `conf.getAll` snapshots. */
+  def changedKeys(before: Map[String, String], after: Map[String, String]): Seq[String] =
+    (before.keySet ++ after.keySet).toSeq.sorted.filter(k => before.get(k) != after.get(k))
+
+  /** Put `keys` back as a `conf.getAll` snapshot had them: its value, or
+    * unset where the snapshot lacks the key.
+    */
+  def resetConf(s: SparkSession, snapshot: Map[String, String], keys: Seq[String]): Unit =
+    keys.foreach { k =>
+      snapshot.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None    => s.conf.unset(k)
+      }
+    }
 
   /** Local session for tests / CLIs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

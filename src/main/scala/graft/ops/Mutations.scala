@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Sessions.{noPartitionInference, withConf}
 
 /** Mutation-shaped operators a warehouse user expects from an engine:
   * MERGE-style upsert (update-matched + insert-unmatched in one pass) and
@@ -178,10 +179,8 @@ object Mutations {
     ev.write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val restated = ev.filter(col("event_type") === "click")
       .withColumn("value", col("value") * 2.0)
-    val saved = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-    try restated.write.partitionBy("event_type").mode("overwrite").parquet(dir)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    restated.write.partitionBy("event_type").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(dir)
     s.read.parquet(dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
@@ -237,10 +236,8 @@ object Mutations {
       val emptied = touched
         .join(remainder.select("day").distinct(), Seq("day"), "left_anti")
         .collect().map(_.getDate(0).toString)
-      val saved = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-      try remainder.write.partitionBy("day").mode("overwrite").parquet(dir)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+      remainder.write.partitionBy("day").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(dir)
       if (emptied.nonEmpty) {
         val root = new org.apache.hadoop.fs.Path(dir)
         val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -441,10 +438,8 @@ object Mutations {
       val rewrite = s.read.parquet(dir)
         .filter(col("day").isin(days: _*))
         .repartition(col("day"))
-      val saved = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-      try rewrite.write.partitionBy("day").mode("overwrite").parquet(dir)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+      rewrite.write.partitionBy("day").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(dir)
     }
     frag
   }
@@ -540,21 +535,11 @@ object Mutations {
           if (newer.nonEmpty) rebased = true
           val target = committed.map(_._1).max + 1
           if (occTryClaim(fs, dir, target, touched)) {
-            val savedInfer = s.conf.get(
-              "spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-            val savedMode =
-              s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-            s.conf.set(
-              "spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-            try {
+            withConf(s)(noPartitionInference) {
               s.read.parquet(staging)
-                .write.partitionBy("day").mode("overwrite").parquet(dir)
+                .write.partitionBy("day").mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic").parquet(dir)
               s.catalog.refreshByPath(dir) // drop cached file listings
-            } finally {
-              s.conf.set("spark.sql.sources.partitionOverwriteMode", savedMode)
-              s.conf.set(
-                "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
             }
             return OccResult(target, attempts, stagings, rebased)
           }
@@ -615,10 +600,7 @@ object Mutations {
   private[graft] def occScenario(s: SparkSession, d: String)
       : (String, OccResult, OccResult, OccResult) = {
     val dir = occStoreDir(s, d)
-    val savedInfer = s.conf
-      .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-    s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    try {
+    withConf(s)(noPartitionInference) {
       val allDays = s.read.parquet(dir).select("day").distinct()
         .collect().map(_.getString(0)).sorted // calendar-bounded
       val odd = allDays.filter(dd => dd.takeRight(2).toInt % 2 == 1)
@@ -639,8 +621,7 @@ object Mutations {
       val rb1 = wB1.commit() // v2: disjoint from A — rebase, no re-stage
       val rb2 = wB2.commit() // conflicts with v1 — MUST re-stage, then v3
       (dir, ra, rb1, rb2)
-    } finally s.conf.set(
-      "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
+    }
   }
 
   def occCommitRollup(s: SparkSession, d: String): DataFrame = {
@@ -1654,7 +1635,7 @@ object Mutations {
 
   private def ttHeadRelationWithStats(s: SparkSession, dir: String, v: Int,
       stats: Map[String, Map[String, graft.sources.ManifestFileIndex.ColStat]],
-      liveOverride: Option[Seq[String]] = None): DataFrame = ttConfLock.synchronized {
+      liveOverride: Option[Seq[String]] = None): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     // an explicit live set comes from the checkpoint-relation path
@@ -1698,10 +1679,7 @@ object Mutations {
       res.live
     }
     require(live.nonEmpty, s"version $v has no live files")
-    val savedInfer = s.conf
-      .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-    s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    try {
+    withConf(s)(noPartitionInference) {
       val idx = new graft.sources.TtSnapshotFileIndex(s,
         new org.apache.hadoop.fs.Path(dir), live.toSet, stats)
       val full = ttReadFiles(s, dir, live).schema
@@ -1713,8 +1691,7 @@ object Mutations {
         fileFormat = new ParquetFileFormat,
         options = Map.empty[String, String])(s)
       s.baseRelationToDataFrame(rel)
-    } finally s.conf.set(
-      "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
+    }
   }
 
   /** r16 verdict #7 (Missing #3) — snapshot resolution served from the
@@ -2500,16 +2477,10 @@ object Mutations {
       // this scenario's v1-v3 predate the first checkpoint, so the
       // bounded replay serves here — the path is shared regardless
       val touched = ttWriteCandidates(s, dir, v - 1, Some(Set(day))).data
-      val cur = ttConfLock.synchronized {
-        val savedInfer = s.conf
-          .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-        s.conf.set(
-          "spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        try s.read.option("basePath", dir)
+      val cur = withConf(s)(noPartitionInference) {
+        s.read.option("basePath", dir)
           .parquet(touched.map(f => s"$dir/$f"): _*)
           .localCheckpoint(true) // materialize before the metadata swap
-        finally s.conf.set(
-          "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
       }
       ttCommit(s, dir, v, writeBatch(tf(cur), sub), touched,
         meta = Seq(s"op=$op"))
@@ -2547,26 +2518,13 @@ object Mutations {
     * of partial file sets). External (clone-inherited) files read
     * WITHOUT the basePath day-recovery trick, so they must be listed
     * under their own day dirs — which they are, in the source's tree.
+    * Inference only matters during the eager schema resolution inside
+    * the `withConf` scope, so the returned DataFrame is safe outside it.
     */
-  /** Serializes every save→flip→read→restore of the session-global
-    * partition-inference conf: two CONCURRENT flippers (the OCC
-    * two-writer race — each commit's stats scan reads files) would
-    * otherwise interleave save/restore and leak `false` session-wide,
-    * silently turning every later partition column (Similarity's int
-    * cells, plain stores' date days) into strings. The conf only
-    * matters during the eager schema resolution inside the lock, so
-    * the returned lazy DataFrame is safe to use outside it. Reentrant
-    * (ttHeadRelation flips, then calls ttReadFiles).
-    */
-  private[graft] val ttConfLock = new Object
-
   private[graft] def ttReadFiles(s: SparkSession, dir: String,
-      files: Seq[String], mergeSchema: Boolean = false): DataFrame = ttConfLock.synchronized {
-    val savedInfer = s.conf
-      .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-    s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+      files: Seq[String], mergeSchema: Boolean = false): DataFrame = {
     val ms = mergeSchema.toString
-    try {
+    withConf(s)(noPartitionInference) {
       val (ext, local) = files.partition(_.startsWith("/"))
       val localDf =
         if (local.isEmpty) None
@@ -2590,8 +2548,7 @@ object Mutations {
         case (None, Some(e)) => e
         case _ => sys.error("empty file list")
       }
-    } finally s.conf.set(
-      "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
+    }
   }
 
   /** up15 — CHANGE DATA FEED (Delta's `table_changes` / Iceberg's

@@ -21,6 +21,13 @@ object TextAnalysis {
   /** Whitespace tokens (documents.text is single-space separated). */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** One row per lowercase letter run: the word tokenizer the subword
+    * learners (BPE, WordPiece, unigram) share. Empty runs survive; the
+    * callers filter them.
+    */
+  private def wordTokens(text: Column): Column =
+    explode(split(lower(text), "[^a-z]+"))
+
   /** BPE-ish subword count estimate: words + extra tokens for long words
     * (a word of length L costs ceil(L/4) subwords, floor 1) — a standard
     * whitespace+length heuristic when no tokenizer model is shipped.
@@ -2222,7 +2229,7 @@ object TextAnalysis {
   def bpeMerges(s: SparkSession, d: String, k: Int = 20,
       minCount: Long = 2L): DataFrame = {
     val words = documents(s, d)
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .select(wordTokens(col("text")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
     bpeMergesFromWords(s, words, k, minCount)
@@ -2354,7 +2361,7 @@ object TextAnalysis {
       minCount: Long = 2L): DataFrame = {
     import s.implicits._
     val words = documents(s, d)
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .select(wordTokens(col("text")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
     val chars = filter(split(col("w"), ""), x => length(x) > 0)
@@ -2434,7 +2441,7 @@ object TextAnalysis {
         val merges = wordpieceMerges(s, d, k).orderBy("step").collect()
           .map(r => (r.getString(1), r.getString(2)))
         val alphabet = documents(s, d)
-          .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+          .select(wordTokens(col("text")).as("w"))
           .filter(length(col("w")) > 0)
           .select(explode(filter(split(col("w"), ""),
             x => length(x) > 0)).as("c"))
@@ -2488,7 +2495,7 @@ object TextAnalysis {
     }
     val docWords = documents(s, d)
       .select(col("doc_id"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+        wordTokens(col("text")).as("w"))
       .filter(length(col("w")) > 0)
     val perDocWord = docWords.groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
     val vocabUnits = perDocWord.select("w").distinct()
@@ -2550,7 +2557,7 @@ object TextAnalysis {
     */
   private def wordInventory(s: SparkSession, d: String): DataFrame =
     documents(s, d)
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .select(wordTokens(col("text")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
@@ -2673,7 +2680,7 @@ object TextAnalysis {
     val lp = unigramVocab(s, d).map { case (p, _, lg) => p -> lg }
     val docWords = documents(s, d)
       .select(col("doc_id"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+        wordTokens(col("text")).as("w"))
       .filter(length(col("w")) > 0)
     val perDocWord = docWords.groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
     val vocabUnits = perDocWord.select("w").distinct()
@@ -2709,7 +2716,7 @@ object TextAnalysis {
     import s.implicits._
     val bc = s.sparkContext.broadcast(learnedMerges(s, d, k))
     val docWords = documents(s, d)
-      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .select(col("doc_id"), wordTokens(col("text")).as("w"))
       .filter(length(col("w")) > 0)
     val perDocWord = docWords.groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
     val vocabUnits = perDocWord.select("w").distinct().as[String]

@@ -187,7 +187,7 @@ object AsOf {
       .find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(
         s"column $n not found in ${p.output.map(_.name).mkString(",")}"))
-    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+    org.apache.spark.sql.GraftColumns.ofRows(spark,
       AsOfJoin(lPlan, rPlan,
         attr(lPlan, leftKey), attr(rPlan, rightKey),
         attr(lPlan, leftTime), attr(rPlan, rightTime)))

@@ -106,7 +106,7 @@ case class TtSqlMergeCommand(dir: String, source: LogicalPlan)
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] = {
-    val src = org.apache.spark.sql.graft.Bridge.ofRows(spark, source)
+    val src = org.apache.spark.sql.GraftColumns.ofRows(spark, source)
       .select("event_id", "event_type", "cents", "day")
     // OCC with RE-DERIVATION: a lost claim re-runs the probe/rewrite
     // against the head that actually won (the closure derives from
@@ -154,7 +154,7 @@ private[graft] object TtSqlCommands {
     * read the commands execute against.
     */
   def byName(e: Expression): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.Bridge.column(e.transform {
+    org.apache.spark.sql.GraftColumns.column(e.transform {
       case a: AttributeReference =>
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
     })

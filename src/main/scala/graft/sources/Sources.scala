@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Sessions.{noPartitionInference, withConf}
 
 /** Source/sink surface beyond csv+parquet scans: JSON lines in/out and
   * partitioned parquet with partition pruning.
@@ -811,15 +812,13 @@ object Sources {
     // its sort if the reader can skip, so the layout stores the key as a
     // session-zone timestamp in INT64 micros — the one encoding this
     // reader provably skips on.
-    val k = "spark.sql.parquet.outputTimestampType"
-    val saved = s.conf.get(k)
-    s.conf.set(k, "TIMESTAMP_MICROS")
-    try lineitem(s, d)
-      .withColumn("l_shipdate", col("l_shipdate").cast("timestamp"))
-      .repartitionByRange(16, col("l_shipdate"))
-      .sortWithinPartitions("l_shipdate", "l_orderkey", "l_linenumber")
-      .write.mode("overwrite").parquet(out)
-    finally s.conf.set(k, saved)
+    withConf(s)("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      lineitem(s, d)
+        .withColumn("l_shipdate", col("l_shipdate").cast("timestamp"))
+        .repartitionByRange(16, col("l_shipdate"))
+        .sortWithinPartitions("l_shipdate", "l_orderkey", "l_linenumber")
+        .write.mode("overwrite").parquet(out)
+    }
     out
   }
 
@@ -1557,14 +1556,8 @@ object Sources {
       dir
     }
 
-  private[graft] def evoGenRead(s: SparkSession, path: String): DataFrame = {
-    val saved = s.conf
-      .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-    s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    try s.read.parquet(path)
-    finally s.conf.set(
-      "spark.sql.sources.partitionColumnTypeInference.enabled", saved)
-  }
+  private[graft] def evoGenRead(s: SparkSession, path: String): DataFrame =
+    withConf(s)(noPartitionInference)(s.read.parquet(path))
 
   /** The declared cross-generation query: a day range straddling the
     * cutover, filtered to one event_type — partition-pruned under each

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Sessions.{noPartitionInference, withConf}
 
 /** Structured Streaming over the events table.
   *
@@ -702,17 +703,15 @@ object EventStreams {
     * dominated st13/st14's cost and its disk-latency variance burned
     * two rounds of adjudication). 8 partitions keep task sizes in the
     * tens-of-thousands of rows; a production deployment re-tunes this
-    * like any shuffle width.
+    * like any shuffle width. `more` conf pairs join the same scope.
     */
-  private def withShuffleWidth[T](s: SparkSession, n: Int)(f: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
+  private def withShuffleWidth[T](s: SparkSession, n: Int,
+      more: (String, String)*)(f: => T): T =
     // only ever LOWER the width: a session already narrower (the spec
     // harness runs at 4) keeps its own — raising it would widen the
     // per-restatement writer ceiling the st14 spec bounds files by
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(n, saved.toInt).toString)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", saved)
-  }
+    withConf(s)(("spark.sql.shuffle.partitions" -> math.min(n,
+      s.conf.get("spark.sql.shuffle.partitions").toInt).toString) +: more: _*)(f)
 
   /** Start `w` (by name, so the query PLANS at the lowered width — the
     * streaming engine pins the state partition count at first-batch
@@ -1139,10 +1138,7 @@ object EventStreams {
     fs.delete(new org.apache.hadoop.fs.Path(target), true)
     // keep the day partition column a plain string on read-back so the
     // pruning filter below compares string-to-string (inference would
-    // read it as DATE and the merge union would type-clash)
-    val savedInfer =
-      s.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-    s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    // read it as DATE and the merge union would type-clash).
     // The windowed-agg STATE is calendar-sized (hours × event types —
     // ~3k keys), but state-store file I/O is per (batch × stateful-op ×
     // STATE PARTITION): at the session's 32 shuffle partitions each of
@@ -1155,65 +1151,54 @@ object EventStreams {
     // production scale the operator re-tunes this like any shuffle
     // width. The merge writes in foreachBatch inherit the same width —
     // bounded data, and the day-repartition decides file layout anyway.
-    val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, savedShuffle.toInt).toString)
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(src)
-      .withWatermark("ts", "30 days")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("n"), col("sum_value"),
-        date_format(col("window.start"), "yyyy-MM-dd").as("day"))
-    val q = agg.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.persist()
-        // calendar-sized (days touched by one batch), not key-sized
-        val days = b.select("day").distinct().collect()
-          .map(_.getString(0)).toSet
-        if (days.nonEmpty) {
-          val merged =
-            if (fs.exists(new org.apache.hadoop.fs.Path(target))) {
-              sp.read.parquet(target)
-                .filter(col("day").isin(days.toSeq: _*)) // partition-pruned
-                .join(b.select("hour", "event_type").distinct(),
-                  Seq("hour", "event_type"), "left_anti")
-                .unionByName(b)
-            } else b
-          // materialize before the write: breaks lineage from the target
-          // path (Spark refuses to overwrite a path it is reading) at the
-          // cost of caching only the AFFECTED partitions' rows
-          val mat = phased("st12.batch.merge+ckpt")(merged.localCheckpoint(true))
-          val saved =
-            sp.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-          sp.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-          try phased("st12.batch.overwrite") {
-            mat.write.partitionBy("day").mode("overwrite").parquet(target)
+    withShuffleWidth(s, 8, noPartitionInference) {
+      val agg = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(src)
+        .withWatermark("ts", "30 days")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
+        .select(
+          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("event_type"), col("n"), col("sum_value"),
+          date_format(col("window.start"), "yyyy-MM-dd").as("day"))
+      val q = agg.writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val sp = batch.sparkSession
+          val b = batch.persist()
+          // calendar-sized (days touched by one batch), not key-sized
+          val days = b.select("day").distinct().collect()
+            .map(_.getString(0)).toSet
+          if (days.nonEmpty) {
+            val merged =
+              if (fs.exists(new org.apache.hadoop.fs.Path(target))) {
+                sp.read.parquet(target)
+                  .filter(col("day").isin(days.toSeq: _*)) // partition-pruned
+                  .join(b.select("hour", "event_type").distinct(),
+                    Seq("hour", "event_type"), "left_anti")
+                  .unionByName(b)
+              } else b
+            // materialize before the write: breaks lineage from the target
+            // path (Spark refuses to overwrite a path it is reading) at the
+            // cost of caching only the AFFECTED partitions' rows
+            val mat = phased("st12.batch.merge+ckpt")(merged.localCheckpoint(true))
+            phased("st12.batch.overwrite") {
+              mat.write.partitionBy("day").mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic").parquet(target)
+            }
           }
-          finally
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+          b.unpersist()
+          batchNo += 1
+          // OPTIMIZE cadence: every compactEvery-th batch, fold the small
+          // files the merges have accumulated back to one per partition —
+          // the in-stream half of the st14 composition
+          if (compactEvery > 0 && batchNo % compactEvery == 0)
+            phased("st12.batch.compact")(compactStore(sp, target, maxFiles = 1))
+          onBatch(days, phased("st12.batch.snapshot")(
+            partitionSnapshot(fs, target)))
         }
-        b.unpersist()
-        batchNo += 1
-        // OPTIMIZE cadence: every compactEvery-th batch, fold the small
-        // files the merges have accumulated back to one per partition —
-        // the in-stream half of the st14 composition
-        if (compactEvery > 0 && batchNo % compactEvery == 0)
-          phased("st12.batch.compact")(compactStore(sp, target, maxFiles = 1))
-        onBatch(days, phased("st12.batch.snapshot")(
-          partitionSnapshot(fs, target)))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-      s.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
     }
   }
 
@@ -1258,21 +1243,14 @@ object EventStreams {
       .filter(_._2.length > maxFiles).keys.toSeq.sorted
     if (crowded.nonEmpty) {
       val days = crowded.map(_.stripPrefix("day="))
-      val savedInfer = s.conf
-        .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-      s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      try {
-        val packed = s.read.parquet(target)
+      withConf(s)(noPartitionInference) {
+        s.read.parquet(target)
           .filter(col("day").isin(days: _*)) // partition-pruned read
           .repartition(col("day")) // one task per day → one file per day
           .localCheckpoint(true) // break lineage from the overwritten path
-        val saved =
-          s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-        try packed.write.partitionBy("day").mode("overwrite").parquet(target)
-        finally s.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
-      } finally s.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
+          .write.partitionBy("day").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(target)
+      }
     }
     crowded
   }
@@ -1363,16 +1341,6 @@ object EventStreams {
       val src = rangeSrc(s, d)
       val schema = Tables.events(s, d).schema
       val appended = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val savedInfer = s.conf
-        .get("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
-      s.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // batch-sized dedup/anti-join shuffles: 8 partitions, not the
-      // session's 32 — same over-partitioning tax runUpdateMerge pays
-      // (each micro-batch is ~1/4 of one day's events; 32 tasks of
-      // ~40k rows are dominated by task startup + shuffle-file I/O)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(8, savedShuffle.toInt).toString)
       // each delivery is a SEPARATE query with a FRESH checkpoint — the
       // re-delivery regime, not st11's same-checkpoint restart
       def deliver(): Unit = {
@@ -1427,17 +1395,17 @@ object EventStreams {
           .start()
         try q.awaitTermination() finally q.stop()
       }
-      try {
+      // batch-sized dedup/anti-join shuffles: 8 partitions, not the
+      // session's 32 — same over-partitioning tax runUpdateMerge pays
+      // (each micro-batch is ~1/4 of one day's events; 32 tasks of
+      // ~40k rows are dominated by task startup + shuffle-file I/O)
+      withShuffleWidth(s, 8, noPartitionInference) {
         phased("st15.delivery1")(deliver())
         val snap1 = phased("st15.snapshot1")(partitionSnapshot(fs, ledger))
         // full re-delivery: must be a byte-level no-op
         phased("st15.delivery2")(deliver())
         val snap2 = phased("st15.snapshot2")(partitionSnapshot(fs, ledger))
         (ledger, appended.toSeq, snap1, snap2)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.set(
-          "spark.sql.sources.partitionColumnTypeInference.enabled", savedInfer)
       }
     }
 

@@ -39,11 +39,8 @@ class GraftCatalogSpec extends SparkSpec {
     // sparkPlan (pre-AQE) is inspected: AQE's runtime size observation
     // would mask the compile-time CBO decision this pins.
     val t = GraftCatalog.registerPersistent(spark, sf0001, Seq("orders", "customer"))
-    val saved = Seq("spark.sql.cbo.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-    try {
+    graft.engine.Sessions.withConf(spark)("spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "1024") {
       def planOf: String = spark.sql(
         s"""SELECT c_mktsegment, count(*) AS n
            |FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey
@@ -59,9 +56,6 @@ class GraftCatalogSpec extends SparkSpec {
       val withStats = planOf
       assert(withStats.contains("BroadcastHashJoin"),
         s"column stats did not shrink the filtered side below threshold:\n$withStats")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -163,15 +163,13 @@ class SourcesSpec extends SparkSpec {
     // force tiny splits: a splittable source would fan out into many
     // partitions; gzip CANNOT split, so the scan still plans 1 task —
     // the serialization trap the operator exists to escape
-    val old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    graft.engine.Sessions.withConf(spark)("spark.sql.files.maxPartitionBytes" -> "2048") {
       val gzParts = spark.read.schema(Sources.gzipIngestSchema)
         .csv(gzDir).rdd.getNumPartitions
       val pqParts = spark.read.parquet(pqDir).rdd.getNumPartitions
       assert(gzParts == 1, s"gz scan planned $gzParts partitions")
       assert(pqParts > 1, s"recompressed scan did not fan out: $pqParts")
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    }
     // the text round-trip lost nothing: per-row content identical
     val src = graft.Tables.lineitem(spark, sf0001)
       .selectExpr("l_orderkey", "l_partkey", "l_quantity",
