@@ -186,6 +186,8 @@ object Bench {
       SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // up front, so the conf leak check sees only what a query left behind
+    graft.sources.TtCatalog.install(spark)
     // NOTE on run-to-run noise: per-query times in a 90-query single-JVM
     // sweep carry ±15% noise plus cold-start (first parquet scan, codegen
     // compile) on whichever queries run early — r2's apparent v5-vs-v1
@@ -272,23 +274,29 @@ object Bench {
     val stagedSet = SparkEntry.stagedQueries
     val results = (selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       var ok = true
+      def fail(): Unit = if (ok) { failed ::= name; ok = false }
       def runOnce(): Double = {
-        val t0 = System.nanoTime()
-        // noop sink (not count()): count() lets Catalyst prune unreferenced
-        // projections, so narrow queries would time little more than
-        // scan+count; noop computes every declared column.
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case e: Throwable =>
-          // a swallowed failure would masquerade as a fast query
-          if (ok) { failed ::= name; ok = false }
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        // the conf check sits outside the timed window; a leak fails the line
+        val (dt, leaked) = graft.engine.Sessions.leakChecked(spark, "bench", name) {
+          val t0 = System.nanoTime()
+          // noop sink (not count()): count() lets Catalyst prune unreferenced
+          // projections, so narrow queries would time little more than
+          // scan+count; noop computes every declared column.
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+          catch { case e: Throwable =>
+            // a swallowed failure would masquerade as a fast query
+            fail()
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          }
+          val dt = (System.nanoTime() - t0) / 1e9
+          // intra-query caches (LSH shingle tables, IVF assignments, ...) are
+          // dead once the sink completes; dropping them keeps each query's
+          // timing honest and stops 60+ queries of leaked blocks starving the
+          // expensive tail (ALS) of executor memory
+          spark.catalog.clearCache()
+          dt
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // intra-query caches (LSH shingle tables, IVF assignments, ...) are
-        // dead once the sink completes; dropping them keeps each query's
-        // timing honest and stops 60+ queries of leaked blocks starving the
-        // expensive tail (ALS) of executor memory
-        spark.catalog.clearCache()
+        if (leaked) fail()
         dt
       }
       // staged queries: first pass builds the memoized staging, untimed

@@ -22,24 +22,19 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      val before = spark.conf.getAll
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      val (_, leaked) = graft.engine.Sessions.leakChecked(spark, "verify", name) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
+        spark.catalog.clearCache() // intra-query caches are dead past the sink
       }
-      spark.catalog.clearCache() // intra-query caches are dead past the sink
-      // a query that leaves session conf changed fails its line (its
-      // output is dropped, so the oracle compare reports it) and the
-      // snapshot is put back so the leak cannot reach later queries
-      val after = spark.conf.getAll
-      val leaked = graft.engine.Sessions.changedKeys(before, after)
-      if (leaked.nonEmpty) {
-        System.err.println(s"[verify] $name leaked conf: " +
-          leaked.map(k => s"$k=${after.getOrElse(k, "<unset>")}").mkString(", "))
+      // a query that leaves session conf changed fails its line: its
+      // output is dropped, so the oracle compare reports it
+      if (leaked) {
         val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
         out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
-        graft.engine.Sessions.resetConf(spark, before, leaked)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

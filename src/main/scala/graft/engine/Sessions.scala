@@ -77,6 +77,23 @@ object Sessions {
       }
     }
 
+  /** Run one declared query's `body`; if it left the conf changed, print
+    * `[tag] name leaked conf: k=v, …` to stderr and put the snapshot back.
+    * Returns the body's value and whether it leaked.
+    */
+  def leakChecked[T](s: SparkSession, tag: String, name: String)(body: => T): (T, Boolean) = {
+    val before = s.conf.getAll
+    val out = body
+    val after = s.conf.getAll
+    val leaked = changedKeys(before, after)
+    if (leaked.nonEmpty) {
+      System.err.println(s"[$tag] $name leaked conf: " +
+        leaked.map(k => s"$k=${after.getOrElse(k, "<unset>")}").mkString(", "))
+      resetConf(s, before, leaked)
+    }
+    (out, leaked.nonEmpty)
+  }
+
   /** Local session for tests / CLIs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Iterate
 
 /** Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
   * embedding-cosine near-dup.
@@ -361,34 +362,10 @@ object Dedup {
 
   /** The iterative min-label/pointer-jumping core of [[dedupClusters]],
     * over an explicit undirected edge list (a, b) and node set (doc_id).
-    *
-    * Iteration cadence — the two costs a naive loop pays per round and
-    * this one doesn't:
-    *   - LINEAGE: each round's plan references the previous round's TWICE
-    *     (the pointer-jumping self-join), and Catalyst analyzes the plan
-    *     as a tree, not a DAG — so planning cost grows ~4× per round and
-    *     a 12-round loop would re-plan millions of nodes.
-    *     `localCheckpoint()` every [[CheckpointEvery]] rounds truncates
-    *     the logical plan to the materialized blocks (executor-local, no
-    *     reliable-storage round trip needed: the loop is
-    *     driver-synchronous and a lost executor just fails the job the
-    *     way any cached iterative job fails), bounding per-round planning
-    *     at 4^CheckpointEvery over a LogicalRDD leaf. The RESULT is also
-    *     checkpointed — one cheap pass over already-cached blocks — so
-    *     consumers compose it downstream against a leaf, not the loop's
-    *     plan history.
-    *   - ACTIONS (r19 reshape, guide §1/§2.4): each round is ONE
-    *     localCheckpoint job that materializes the new labels WITH the
-    *     previous label carried alongside, plus a filter+count over that
-    *     in-memory leaf (no shuffle, no recompute) for convergence. The
-    *     old cadence (cache rounds, checkpoint every 3rd, count every
-    *     2nd) made each job replay up to 3 rounds of lineage with the
-    *     pointer-jumping self-join doubling every layer, and the count
-    *     was a full labels⋈prev join. Convergence is now checked every
-    *     round, so the loop also stops at the first no-change round
-    *     instead of overshooting to the next even round — the fixpoint
-    *     (and therefore the result) is identical either way because
-    *     propagation is monotone.
+    * Each [[graft.engine.Iterate]] round is ONE checkpoint job that
+    * materializes the new labels WITH the previous label alongside; the
+    * stop test counts changed labels over that leaf, so the loop stops at
+    * the first no-change round, and the result is a projection of a leaf.
     */
   private[ops] def connectedComponents(nodes: DataFrame, undirected: DataFrame,
       maxRounds: Int = 20): DataFrame = {
@@ -403,13 +380,15 @@ object Dedup {
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .cache()
-    // a flat leaf from round 0: every round's joins then read
-    // executor-local blocks, never a lineage replay
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
+    val init = nodes.select(col("doc_id"), col("doc_id").as("label"))
       .localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
+    // silent non-convergence would return plausible-but-wrong labels;
+    // with pointer jumping 20 rounds covers any component a dedup corpus
+    // can realistically produce, so exhaustion is a hard error
+    val settled = Iterate("connectedComponents", init, maxRounds,
+        until = (next, _) => next.filter(col("label") =!= col("old")).count() == 0,
+        mustConverge = true) { (state, _) =>
+      val labels = state.select("doc_id", "label")
       val nbrMin = edges.join(labels, edges("a") === labels("doc_id"))
         .select(edges("b").as("doc_id"), col("label"))
         .groupBy("doc_id").agg(min("label").as("nmin"))
@@ -418,22 +397,12 @@ object Dedup {
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
       // pointer jumping: adopt the label's own label (path halving)
       val parents = stepped.select(col("doc_id").as("pid"), col("label").as("plabel"))
-      round += 1
-      val next = stepped.join(parents, stepped("label") === parents("pid"), "left")
+      Some(stepped.join(parents, stepped("label") === parents("pid"), "left")
         .select(col("doc_id"), coalesce(col("plabel"), col("label")).as("label"),
-          col("old"))
-        .localCheckpoint() // eager: the round's one real job
-      changed = next.filter(col("label") =!= col("old")).count() // leaf-only
-      labels = next.select("doc_id", "label")
+          col("old")))
     }
     edges.unpersist(blocking = false)
-    // silent non-convergence would return plausible-but-wrong labels;
-    // with pointer jumping 20 rounds covers any component a dedup corpus
-    // can realistically produce, so treat exhaustion as a hard error
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds ($changed labels still moving)")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+    settled.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
   /** d9 — the end-to-end near-dup dedup DECISION: d5's exact

@@ -1,18 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Iterate
 
 /** Iterative + combinatorial graph operators over relational edge lists:
   * PageRank (the canonical "ranks flow until fixpoint" loop) and exact
   * triangle counting (the canonical "bound the blow-up" self-join).
   *
-  * Both reuse the discipline the CC operator ([[Dedup.connectedComponents]])
-  * established for iterative DataFrame programs: per-iteration work is ONE
-  * shuffle, lineage is cut with localCheckpoint on a cadence, and nothing
-  * data-sized ever reaches the driver.
+  * The iterative operators here share one discipline: per-iteration work
+  * is ONE shuffle, the loop runs through [[graft.engine.Iterate]] (which
+  * owns the round cap, the stop test and the checkpoint cadence), and
+  * nothing data-sized ever reaches the driver.
   */
 object Graph {
   import Tables._
@@ -31,8 +32,8 @@ object Graph {
     *
     * At 100 TB: ranks is |nodes| rows partitioned by node; the join with
     * edges shuffles on src (or broadcasts ranks when nodes ≪ edges);
-    * localCheckpoint every 3 iterations stops Catalyst re-analyzing a
-    * plan that doubles per round — the same cadence d6 measured.
+    * [[Iterate]] checkpoints the ranks every iteration, so Catalyst never
+    * re-analyzes a plan that doubles per round.
     */
   def pageRank(edgesIn: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
@@ -52,28 +53,33 @@ object Graph {
       .select(col("node"), col("has_out").isNull.as("dang")).cache()
     val n = nodes.count().toDouble
 
-    var ranks = nodes.select(col("node"), col("dang"), lit(1.0 / n).as("rank"))
-    for (i <- 1 to iterations) {
+    val ranks = iterateRanks("pageRank", edges, nodes, lit(1.0 / n), iterations) {
+      (mass, dm) => lit((1 - damping) / n) + lit(damping) * (mass + dm / n)
+    }
+    nodes.unpersist()
+    ranks
+  }
+
+  /** The rank iteration [[pageRank]] and [[personalizedPageRank]] share:
+    * `base` is the cached node row (node, dang, …), `rank0` the starting
+    * rank, and `update(mass, dm)` the unrounded new rank from the
+    * in-flowing and the dangling mass.
+    */
+  private def iterateRanks(name: String, edges: DataFrame, base: DataFrame,
+      rank0: Column, iterations: Int)(update: (Column, Column) => Column): DataFrame = {
+    val init = base.select(col("node"), col("dang"), rank0.as("rank"))
+    Iterate(name, init, iterations) { (ranks, _) =>
       val dm = ranks
         .agg(coalesce(sum(when(col("dang"), col("rank"))), lit(0.0)).as("dm"))
       val contrib = edges.join(ranks, edges("src") === ranks("node"))
         .groupBy(edges("dst").as("cnode"))
         .agg(sum(col("w") * col("rank")).as("mass"))
-      ranks = nodes
-        .join(contrib, nodes("node") === col("cnode"), "left")
+      Some(base
+        .join(contrib, base("node") === col("cnode"), "left")
         .crossJoin(dm)
-        .select(col("node"), col("dang"),
-          round(lit((1 - damping) / n) +
-            lit(damping) * (coalesce(col("mass"), lit(0.0)) + col("dm") / n), 12)
-            .as("rank"))
-        // r19 (guide §2.4): checkpoint EVERY iteration — each iteration
-        // references the previous ranks twice (dm + contrib), so the old
-        // every-3rd cadence evaluated up to 2³ copies of the window's
-        // subtree per checkpoint job; one flat job per iteration is
-        // strictly less work and keeps the plan a leaf
-        .localCheckpoint()
-    }
-    ranks.select("node", "rank")
+        .select(base("node"), col("dang"),
+          round(update(coalesce(col("mass"), lit(0.0)), col("dm")), 12).as("rank")))
+    }.select("node", "rank")
   }
 
   /** PERSONALIZED PageRank (the random-walk-with-restart ranking behind
@@ -111,24 +117,11 @@ object Graph {
         col("has_out").isNull.as("dang"))
       .cache()
 
-    var ranks = pvec.select(col("node"), col("dang"), col("p").as("rank"))
-    for (i <- 1 to iterations) {
-      val dm = ranks
-        .agg(coalesce(sum(when(col("dang"), col("rank"))), lit(0.0)).as("dm"))
-      val contrib = edges.join(ranks, edges("src") === ranks("node"))
-        .groupBy(edges("dst").as("cnode"))
-        .agg(sum(col("w") * col("rank")).as("mass"))
-      ranks = pvec
-        .join(contrib, pvec("node") === col("cnode"), "left")
-        .crossJoin(dm)
-        .select(pvec("node"), col("dang"),
-          round(lit(1 - damping) * col("p") +
-            lit(damping) * (coalesce(col("mass"), lit(0.0))
-              + col("dm") * col("p")), 12).as("rank"))
-        // r19: per-iteration checkpoint — see pageRank
-        .localCheckpoint()
+    val ranks = iterateRanks("personalizedPageRank", edges, pvec, col("p"), iterations) {
+      (mass, dm) => lit(1 - damping) * col("p") + lit(damping) * (mass + dm * col("p"))
     }
-    ranks.select("node", "rank")
+    Seq(pvec, seeds, nodes).foreach(_.unpersist())
+    ranks
   }
 
   /** The nation-level trade graph g1 and g8 rank over: an edge
@@ -246,6 +239,21 @@ object Graph {
     cappedPairs(op, maxBasket).distinct()
   }
 
+  /** Part co-occurrence pairs (u < v) weighted by the number of orders
+    * the two parts share. Shared by g4 and g6.
+    */
+  private def weightedPartPairs(s: SparkSession, d: String): DataFrame =
+    cappedPairs(lineitem(s, d).select(col("l_orderkey").as("ok"),
+      col("l_partkey").as("pk")), maxBasket) // cappedPairs dedups per order
+      .groupBy("u", "v").agg(count(lit(1)).as("w"))
+
+  /** The deterministic seed set g3, g4 and g9 walk from: the nodes of the
+    * pair list `e` (u, v) whose id is a multiple of 97.
+    */
+  private def seeds97(e: DataFrame): DataFrame =
+    e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+      .filter(pmod(col("node"), lit(97)) === 0).distinct()
+
   def triangleStats(s: SparkSession, d: String): DataFrame = {
     val e = partCoEdges(s, d).cache()
     val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
@@ -318,18 +326,20 @@ object Graph {
     val feat = part(s, d).select(col("p_partkey").as("node"),
       expr("cast(round(p_retailprice * 100) as bigint)").as("h"))
     val nodes = und.select(col("u").as("node")).distinct()
-    var h = nodes.join(feat, "node").localCheckpoint()
-    val states = scala.collection.mutable.ArrayBuffer(h)
-    for (_ <- 1 to rounds) {
+    val h0 = nodes.join(feat, "node").localCheckpoint()
+    // the output carries every round's features: keep each leaf
+    val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Iterate("featurePropagation", h0, rounds) { (h, _) =>
+      states += h
       val nb = und.select(col("u").as("node"), col("v").as("nbr"))
       val hn = h.select(col("node").as("nbr"), col("h").as("nh"))
-      h = nb.join(hn, "nbr")
+      Some(nb.join(hn, "nbr")
         .groupBy("node").agg(sum("nh").as("sn"), count(lit(1)).as("cn"))
         .join(h, "node")
-        .select(col("node"), expr("(h + sn) div (1 + cn)").as("h"))
-        .localCheckpoint()
-      states += h
+        .select(col("node"), expr("(h + sn) div (1 + cn)").as("h")))
     }
+    states += last
+    Seq(und, e).foreach(_.unpersist())
     states.zipWithIndex
       .map { case (df, i) => df.select(col("node"), col("h").as(s"h$i")) }
       .reduce((a, b) => a.join(b, "node"))
@@ -338,36 +348,29 @@ object Graph {
 
   /** Multi-source BFS hop distances over a DIRECTED edge list
     * `(src, dst)` from a seed set `(node)`. Level-synchronous
-    * frontier expansion: each hop joins only the NEW frontier against
-    * edges, anti-joins the settled set, and localCheckpoints the level
-    * (BFS is the one iterative shape where a per-level driver action is
-    * inherent — the emptiness check IS the termination condition; each
-    * check is a count over an already-materialized level, not a
-    * recompute). Settled distances only ever grow by the frontier, so
-    * the cumulative state is |reached| rows — the textbook Pregel/BSP
-    * equivalent without per-vertex messaging.
+    * frontier expansion: each hop joins only the NEW frontier — the
+    * rows with `dist = hop - 1` in the one settled-state leaf — against
+    * edges and anti-joins the settled set. A round is one checkpoint job
+    * plus an emptiness test of the new level in that leaf, the
+    * termination condition. The state is |reached| rows — the textbook
+    * Pregel/BSP equivalent without per-vertex messaging.
     */
   def bfsDistances(edges: DataFrame, sources: DataFrame,
       maxHops: Int = 20): DataFrame = {
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
+    val seeds = sources.select(col("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint()
-    var frontier = dist
-    var hop = 0L
-    var grew = true
-    while (grew && hop < maxHops) {
-      hop += 1
-      val next = frontier.join(edges, frontier("node") === edges("src"))
+    // a union stacks its inputs' partitions: keep the state one shuffle wide,
+    // or every round's frontier scan widens with it (measured +65% tasks)
+    val width = sources.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    Iterate("bfsDistances", seeds, maxHops,
+        until = (dist, hop) => dist.filter(col("dist") === hop).isEmpty) { (dist, hop) =>
+      val frontier = dist.filter(col("dist") === hop - 1)
+      Some(frontier.join(edges, frontier("node") === edges("src"))
         .select(edges("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(hop).as("dist"))
-        .localCheckpoint()
-      if (next.isEmpty) grew = false
-      else {
-        dist = dist.union(next).localCheckpoint()
-        frontier = next
-      }
+        .select(col("node"), lit(hop.toLong).as("dist"))
+        .union(dist).coalesce(width))
     }
-    dist
   }
 
   /** g3 — BFS reachability/distance on the part co-occurrence graph from
@@ -378,10 +381,9 @@ object Graph {
     val e = partCoEdges(s, d).cache()
     val sym = e.select(col("u").as("src"), col("v").as("dst"))
       .union(e.select(col("v").as("src"), col("u").as("dst")))
-    val seeds = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node")))
-      .filter(pmod(col("node"), lit(97)) === 0).distinct()
-    bfsDistances(sym, seeds).orderBy("node")
+    val dist = bfsDistances(sym, seeds97(e))
+    e.unpersist()
+    dist.orderBy("node")
   }
 
   /** g9 — WEIGHTED multi-seed shortest paths (hop-bounded Bellman–Ford
@@ -394,7 +396,9 @@ object Graph {
     * over ≤k-edge paths, so frontier relaxation computes the same
     * k-bounded semantics as textbook Bellman–Ford at frontier-sized
     * (not graph-sized) join cost per round; an empty frontier is the
-    * fixpoint (= the true unbounded shortest distance). Declared
+    * fixpoint (= the true unbounded shortest distance); the frontier is
+    * the rows the last round improved, tagged in the state leaf as BFS
+    * tags its levels. Declared
     * semantics are `maxHops`-edge-bounded — exact-integer arithmetic,
     * fully oracled: the DuckDB recursive CTE carries (node, dist, hops)
     * and takes the same min. At 100 TB: per-round cost ∝ frontier ×
@@ -408,34 +412,26 @@ object Graph {
       .union(e.select(col("v").as("src"), col("u").as("dst")))
       .withColumn("wt", lit(1L) + pmod(col("src") + col("dst"), lit(7)))
       .cache()
-    val seeds = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node")))
-      .filter(pmod(col("node"), lit(97)) === 0).distinct()
-    var dist = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = dist
-    var hop = 0
-    var active = true
-    while (active && hop < maxHops) {
-      hop += 1
+    val init = seeds97(e).select(col("node"), lit(0L).as("dist"), lit(0).as("hop"))
+      .localCheckpoint()
+    val dist = Iterate("weightedSssp", init, maxHops,
+        until = (dist, hop) => dist.filter(col("hop") === hop).isEmpty) { (dist, hop) =>
+      val frontier = dist.filter(col("hop") === hop - 1)
       val cand = frontier.join(sym, frontier("node") === sym("src"))
         .select(sym("dst").as("node"),
           (frontier("dist") + sym("wt")).as("nd"))
         .groupBy("node").agg(min("nd").as("nd"))
       val improved = cand.join(dist, Seq("node"), "left")
         .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("node"), col("nd").as("dist"))
-        .localCheckpoint()
-      if (improved.isEmpty) active = false
-      else {
-        dist = dist.unionByName(improved)
-          .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
-        frontier = improved
-      }
+        .select(col("node"), col("nd").as("dist"), lit(hop).as("hop"))
+      // an improvement is strictly below the old distance, so the min
+      // row per node is the improved one (and carries this hop's tag)
+      Some(improved.unionByName(dist)
+        .groupBy("node").agg(min(struct(col("dist"), col("hop"))).as("m"))
+        .select(col("node"), col("m.dist").as("dist"), col("m.hop").as("hop")))
     }
-    e.unpersist()
-    sym.unpersist()
-    dist.orderBy("node")
+    Seq(sym, e).foreach(_.unpersist())
+    dist.select("node", "dist").orderBy("node")
   }
 
   /** g5 — k-CORE membership on the part co-occurrence graph: peel nodes
@@ -448,7 +444,7 @@ object Graph {
     * keyed on the node id the degree agg already shuffled on.
     *
     * Scale design: state is the surviving edge list (never grows),
-    * localCheckpoint per round cuts lineage, and the only driver values
+    * [[Iterate]]'s per-round leaf cuts lineage, and the only driver values
     * are the per-round edge counts (the termination test). Peeling is
     * monotone, so count equality ⇔ set equality — no expensive
     * anti-join diff. Convergence within [[maxRounds]] is a CONTRACT
@@ -462,28 +458,24 @@ object Graph {
     val e0 = partCoEdges(s, d).localCheckpoint()
     val nodes = e0.select(col("u").as("part"))
       .union(e0.select(col("v").as("part"))).distinct()
-    var edges = e0
-    var nEdges = edges.count()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      round += 1
+    var nEdges = e0.count()
+    val noPeel = (pruned: DataFrame, _: Int) => {
+      val n = pruned.count()
+      val same = n == nEdges
+      nEdges = n
+      same
+    }
+    val edges = Iterate(s"$k-core peeling", e0, maxRounds, until = noPeel,
+        mustConverge = true) { (edges, _) =>
       val keep = edges.select(col("u").as("node"))
         .union(edges.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k).select("node")
-      val pruned = edges
+      Some(edges
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select("u", "v")
-        .localCheckpoint()
-      val n = pruned.count()
-      if (n == nEdges) converged = true
-      else { edges = pruned; nEdges = n }
+        .select("u", "v"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"$k-core peeling did not converge in $maxRounds rounds")
     val core = edges.select(col("u").as("part"))
       .union(edges.select(col("v").as("part"))).distinct()
     nodes.join(core.select(col("part"), lit(1).as("c")), Seq("part"), "left")
@@ -541,34 +533,31 @@ object Graph {
     * hash join (labels ⋈ edges on dst), one (src, label) map-side-
     * combinable weight agg, and one per-src argmax window — the window
     * shuffles on src, the SAME key the agg hashed on, so the exchange is
-    * reused; labels are localCheckpointed per round (d6/g3 cadence).
+    * reused; [[Iterate]] checkpoints the labels every round.
     * Weights are integer co-occurrence counts — no fp in the argmax.
     */
   def labelPropagation(s: SparkSession, d: String, rounds: Int = 4): DataFrame = {
-    val op = lineitem(s, d).select(col("l_orderkey").as("ok"),
-      col("l_partkey").as("pk")) // cappedPairs dedups per order
-    val pairs = cappedPairs(op, maxBasket)
-      .groupBy("u", "v").agg(count(lit(1)).as("w"))
+    val pairs = weightedPartPairs(s, d)
     val und = pairs
       .select(col("u").as("src"), col("v").as("dst"), col("w"))
       .unionByName(pairs.select(col("v").as("src"), col("u").as("dst"), col("w")))
       .cache()
     val nodes = und.select(col("src").as("node")).distinct()
-    var labels = nodes.withColumn("label", col("node")).localCheckpoint()
+    val init = nodes.withColumn("label", col("node")).localCheckpoint()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("src").orderBy(desc("ws"), asc("label"))
-    for (_ <- 1 to rounds) {
+    val labels = Iterate("labelPropagation", init, rounds) { (labels, _) =>
       val best = und
         .join(labels.select(col("node").as("dst"), col("label")), "dst")
         .groupBy("src", "label").agg(sum("w").as("ws"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("src").as("node"), col("label").as("newl"))
-      labels = labels.join(best, Seq("node"), "left")
+      Some(labels.join(best, Seq("node"), "left")
         .select(col("node"),
-          coalesce(col("newl"), col("label")).as("label"))
-        .localCheckpoint()
+          coalesce(col("newl"), col("label")).as("label")))
     }
+    und.unpersist()
     labels.orderBy("node")
   }
 
@@ -604,6 +593,23 @@ object Graph {
        |SELECT node, label FROM l$rounds ORDER BY node""".stripMargin
   }
 
+  /** The trade-graph CTEs (e0, edges, nodes) both rank oracles open with. */
+  private val tradeGraphCtes =
+    """e0 AS MATERIALIZED (
+      |  SELECT c_nationkey AS src, s_nationkey AS dst,
+      |    CAST(count(*) AS DOUBLE) AS cnt
+      |  FROM lineitem
+      |  JOIN orders ON l_orderkey = o_orderkey
+      |  JOIN customer ON o_custkey = c_custkey
+      |  JOIN supplier ON l_suppkey = s_suppkey
+      |  GROUP BY 1, 2),
+      |edges AS MATERIALIZED (
+      |  SELECT src, dst,
+      |    round(cnt / sum(cnt) OVER (PARTITION BY src), 12) AS w
+      |  FROM e0),
+      |nodes AS MATERIALIZED (
+      |  SELECT src AS node FROM e0 UNION SELECT dst FROM e0),""".stripMargin
+
   private def pageRankOracle: String = {
     val steps = (1 to 10).map { i =>
       s"""pr$i AS MATERIALIZED (
@@ -618,20 +624,7 @@ object Graph {
          |    ON n.node = im.dnode)""".stripMargin
     }.mkString(",\n")
     s"""WITH
-       |e0 AS MATERIALIZED (
-       |  SELECT c_nationkey AS src, s_nationkey AS dst,
-       |    CAST(count(*) AS DOUBLE) AS cnt
-       |  FROM lineitem
-       |  JOIN orders ON l_orderkey = o_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  GROUP BY 1, 2),
-       |edges AS MATERIALIZED (
-       |  SELECT src, dst,
-       |    round(cnt / sum(cnt) OVER (PARTITION BY src), 12) AS w
-       |  FROM e0),
-       |nodes AS MATERIALIZED (
-       |  SELECT src AS node FROM e0 UNION SELECT dst FROM e0),
+       |$tradeGraphCtes
        |nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
        |dang AS MATERIALIZED (
        |  SELECT node FROM nodes WHERE node NOT IN (SELECT src FROM e0)),
@@ -655,20 +648,7 @@ object Graph {
          |    ON pv.node = im.dnode)""".stripMargin
     }.mkString(",\n")
     s"""WITH
-       |e0 AS MATERIALIZED (
-       |  SELECT c_nationkey AS src, s_nationkey AS dst,
-       |    CAST(count(*) AS DOUBLE) AS cnt
-       |  FROM lineitem
-       |  JOIN orders ON l_orderkey = o_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  GROUP BY 1, 2),
-       |edges AS MATERIALIZED (
-       |  SELECT src, dst,
-       |    round(cnt / sum(cnt) OVER (PARTITION BY src), 12) AS w
-       |  FROM e0),
-       |nodes AS MATERIALIZED (
-       |  SELECT src AS node FROM e0 UNION SELECT dst FROM e0),
+       |$tradeGraphCtes
        |seeds AS MATERIALIZED (
        |  SELECT n_nationkey AS node FROM nation
        |  JOIN region ON n_regionkey = r_regionkey
@@ -691,39 +671,29 @@ object Graph {
     * hash-partitioned on node). Bounding the rounds is what makes the
     * semantics exactly oracle-able: full SSSP's fixpoint is
     * data-dependent, but "cheapest ≤R-hop path" unrolls to R relax
-    * layers any engine can replay. `localCheckpoint` per round bounds
-    * plan lineage exactly as d6/g3 do.
+    * layers any engine can replay. [[Iterate]]'s per-round leaf bounds
+    * plan lineage.
     */
   def weightedHopCosts(edges: DataFrame, sources: DataFrame,
       rounds: Int = 4): DataFrame = {
-    var dist = sources.select(col("node"), lit(0L).as("cost"))
+    val seeds = sources.select(col("node"), lit(0L).as("cost"))
       .distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
+    Iterate("weightedHopCosts", seeds, rounds) { (dist, _) =>
       val relaxed = dist.join(edges, dist("node") === edges("src"))
         .select(edges("dst").as("node"), (dist("cost") + edges("w")).as("cost"))
-      dist = dist.union(relaxed)
-        .groupBy("node").agg(min("cost").as("cost"))
-        .localCheckpoint()
+      Some(dist.union(relaxed)
+        .groupBy("node").agg(min("cost").as("cost")))
     }
-    dist
   }
 
   /** g4 — 4-round weighted relaxation on the part co-occurrence graph,
     * edge weight = number of orders the two parts share, seeds as in g3.
     */
   def partWeightedHops(s: SparkSession, d: String): DataFrame = {
-    val op = lineitem(s, d).select(col("l_orderkey").as("ok"),
-      col("l_partkey").as("pk")) // cappedPairs dedups per order
-    val e = cappedPairs(op, maxBasket)
-      .groupBy(col("u"), col("v"))
-      .agg(count(lit(1)).as("w"))
-      .cache()
+    val e = weightedPartPairs(s, d).cache()
     val sym = e.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .union(e.select(col("v").as("src"), col("u").as("dst"), col("w")))
-    val seeds = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node")))
-      .filter(pmod(col("node"), lit(97)) === 0).distinct()
-    weightedHopCosts(sym, seeds).orderBy("node")
+    weightedHopCosts(sym, seeds97(e)).orderBy("node")
   }
 
   def defs: Seq[QueryDef] = Seq(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Iterate
 
 /** Similarity search over embedding columns (ARRAY<FLOAT>).
   *
@@ -1307,33 +1308,41 @@ object Similarity {
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cos", cosine(col("qv"), col("embedding")))
       .select("q_id", "vec_id", "cos")
-    var beam = graft.functions.TopK.perGroup(seeds, "q_id", "cos", "vec_id", ef)
+    val entry = graft.functions.TopK.perGroup(seeds, "q_id", "cos", "vec_id", ef)
       .select("q_id", "vec_id", "cos").localCheckpoint()
     // undirected neighbor view of the memoized kNN graph: an edge is
     // followable from either endpoint (NSW's search graph)
     val g0 = knnGraph(s, d).select(col("src"), col("dst"))
     val und = g0.union(g0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().cache()
-    val full = e.select(col("vec_id"), col("embedding").as("nv"))
-    for (_ <- 1 to rounds) {
-      val expand = beam.select(col("q_id"), col("vec_id").as("src"))
-        .join(und, "src")
-        .select(col("q_id"), col("dst").as("vec_id")).distinct()
-        .join(full, "vec_id")
-        .join(broadcast(q), "q_id")
-        .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos", cosine(col("qv"), col("nv")))
-        .select("q_id", "vec_id", "cos")
-      // the pool only grows: beam ∪ neighbors, deduped, best ef kept
-      val pool = beam.unionByName(expand)
-        .groupBy("q_id", "vec_id").agg(max("cos").as("cos"))
-      beam = graft.functions.TopK.perGroup(pool, "q_id", "cos", "vec_id", ef)
-        .select("q_id", "vec_id", "cos").localCheckpoint()
-    }
+    val beam = Iterate("graphSearchTopK", entry, rounds)((beam, _) =>
+      Some(beamRound(beam, und, e, q, ef)))
     graft.functions.TopK.perGroup(beam, "q_id", "cos", "vec_id", k)
       .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
         round(col("cos"), 6).as("cos"))
       .orderBy("q_id", "rank")
+  }
+
+  /** One beam round of the graph searches (v21, v22): expand the beam's
+    * members over the undirected graph `und` (src, dst), score the
+    * newcomers from `e` (vec_id, embedding) exactly against the queries
+    * `q` (q_id, qv), and keep the best `width` per query of the pool —
+    * beam ∪ neighbors, deduped, so the pool only grows.
+    */
+  private def beamRound(beam: DataFrame, und: DataFrame, e: DataFrame,
+      q: DataFrame, width: Int): DataFrame = {
+    val expand = beam.select(col("q_id"), col("vec_id").as("src"))
+      .join(und, "src")
+      .select(col("q_id"), col("dst").as("vec_id")).distinct()
+      .join(e.select(col("vec_id"), col("embedding").as("nv")), "vec_id")
+      .join(broadcast(q), "q_id")
+      .filter(col("q_id") =!= col("vec_id"))
+      .withColumn("cos", cosine(col("qv"), col("nv")))
+      .select("q_id", "vec_id", "cos")
+    val pool = beam.unionByName(expand)
+      .groupBy("q_id", "vec_id").agg(max("cos").as("cos"))
+    graft.functions.TopK.perGroup(pool, "q_id", "cos", "vec_id", width)
+      .select("q_id", "vec_id", "cos")
   }
 
   /** Deterministic exponential HNSW level: P(level ≥ ℓ) = 4^-ℓ via the
@@ -1463,21 +1472,6 @@ object Similarity {
 
     val q = e.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv")).cache()
-    val full = e.select(col("vec_id"), col("embedding").as("nv"))
-    def expandOnce(beam: DataFrame, und: DataFrame, width: Int): DataFrame = {
-      val expand = beam.select(col("q_id"), col("vec_id").as("src"))
-        .join(und, "src")
-        .select(col("q_id"), col("dst").as("vec_id")).distinct()
-        .join(full, "vec_id")
-        .join(broadcast(q), "q_id")
-        .filter(col("q_id") =!= col("vec_id"))
-        .withColumn("cos", cosine(col("qv"), col("nv")))
-        .select("q_id", "vec_id", "cos")
-      val pool = beam.unionByName(expand)
-        .groupBy("q_id", "vec_id").agg(max("cos").as("cos"))
-      graft.functions.TopK.perGroup(pool, "q_id", "cos", "vec_id", width)
-        .select("q_id", "vec_id", "cos").localCheckpoint()
-    }
     // entry: the top layer is small by construction — score it exactly
     val entryPool =
       if (top >= 1) members(top)
@@ -1486,15 +1480,17 @@ object Similarity {
         col("q_id") =!= col("vec_id"))
       .withColumn("cos", cosine(col("qv"), col("embedding")))
       .select("q_id", "vec_id", "cos")
-    var beam = graft.functions.TopK
+    val entry = graft.functions.TopK
       .perGroup(entryScored, "q_id", "cos", "vec_id", efUpper)
       .select("q_id", "vec_id", "cos").localCheckpoint()
     // route down through the upper layers, one beam round each
-    for (l <- top to 1 by -1) beam = expandOnce(beam, layerEdges(l), efUpper)
+    val routed = Iterate("hnsw descend", entry, top)((beam, i) =>
+      Some(beamRound(beam, layerEdges(top + 1 - i), e, q, efUpper)))
     // layer 0: the full v21 beam
-    beam = graft.functions.TopK.perGroup(beam, "q_id", "cos", "vec_id", ef)
+    val layer0 = graft.functions.TopK.perGroup(routed, "q_id", "cos", "vec_id", ef)
       .select("q_id", "vec_id", "cos").localCheckpoint()
-    for (_ <- 1 to rounds) beam = expandOnce(beam, und0, ef)
+    val beam = Iterate("hnsw layer 0", layer0, rounds)((beam, _) =>
+      Some(beamRound(beam, und0, e, q, ef)))
     // every beam round is eagerly localCheckpointed, so the final top-k
     // depends only on the (queries·ef)-sized last beam — the corpus and
     // query caches can be dropped before returning (r11 advice: cached

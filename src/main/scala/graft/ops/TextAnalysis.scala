@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Iterate
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
@@ -2219,8 +2220,9 @@ object TextAnalysis {
     * for web-scale text), so k rounds are k vocab-sized shuffles.
     * Ties argmax-broken by (count DESC, left, right) so the learned
     * merge table is a deterministic function of the corpus.
-    * localCheckpoint every 3 rounds truncates the growing fold
-    * lineage (the CC/PageRank discipline). Fully oracled since r12:
+    * [[Iterate]] checkpoints the symbols every 3 rounds to truncate the
+    * growing fold lineage (the cadence is argued in the loop). Fully
+    * oracled since r12:
     * the deterministic greedy is REPLAYED in a DuckDB recursive CTE
     * (see bpeReplayCtes) — argmax, tie-break, and the left-to-right
     * merge all bit-for-bit; in-memory-BPE parity and rerun
@@ -2243,52 +2245,56 @@ object TextAnalysis {
     import s.implicits._
     // initial symbols: characters plus an end-of-word marker, so merges
     // distinguish word-final units from word-internal ones
-    var syms = words.select(col("cnt").cast("long").as("cnt"),
+    val init = words.select(col("cnt").cast("long").as("cnt"),
       concat(filter(split(col("w"), ""), x => length(x) > 0),
         array(lit("</w>"))).as("sym"))
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
-    var step = 1
-    var done = false
-    while (step <= k && !done) {
-      val top = syms
-        .select(col("cnt"), explode(zip_with(
-          slice(col("sym"), lit(1), size(col("sym")) - 1),
-          slice(col("sym"), lit(2), size(col("sym")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("cnt").as("pc"))
+    // cadence 3, measured in r19: BPE's round is ONE job (the argmax
+    // collect), so per-round checkpointing ADDS a job without saving
+    // one — min-of-3 A/B showed 2.49 s → 2.74 s. WordPiece's round is
+    // two jobs and does win from per-round materialization (cadence 1).
+    Iterate("bpeMerges", init, k, every = 3) { (syms, step) =>
+      val top = pairCounts(syms)
         .orderBy(desc("pc"), asc("l"), asc("r"))
         .limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) < minCount) done = true
+      if (top.isEmpty || top(0).getLong(2) < minCount) None
       else {
         val l = top(0).getString(0)
         val r = top(0).getString(1)
         val pc = top(0).getLong(2)
         merges += ((step, l, r, pc))
-        // left-to-right greedy application: acc ends with `l` and the
-        // next symbol is `r` → pop, push the merged atom. The merged
-        // atom is a DIFFERENT string from `l` (r is never empty), so
-        // overlapping runs merge non-overlapping pairs exactly like
-        // the sequential algorithm ("aaaa" + (a,a) → [aa, aa])
-        val (lw, rw) = (lit(l), lit(r))
-        val next = syms.select(col("cnt"),
-          aggregate(col("sym"), array().cast("array<string>"),
-            (acc, x) => when(size(acc) > 0 &&
-                element_at(acc, -1) === lw && x === rw,
-              concat(slice(acc, lit(1), size(acc) - 1), array(concat(lw, rw))))
-              .otherwise(concat(acc, array(x)))).as("sym"))
-        // cadence 3, measured in r19: BPE's round is ONE job (the argmax
-        // collect), so per-round checkpointing ADDS a job without saving
-        // one — min-of-3 A/B showed 2.49 s → 2.74 s. WordPiece's round is
-        // two jobs and does win from per-round materialization; see
-        // wordpieceMerges.
-        syms = if (step % 3 == 0) next.localCheckpoint() else next
-        step += 1
+        Some(applyMerge(syms, l, r, l + r))
       }
     }
     merges.toSeq.toDF("step", "left", "right", "pair_count")
+  }
+
+  /** Adjacent-symbol pair counts (l, r, pc) of a (cnt, sym) vocabulary. */
+  private def pairCounts(syms: DataFrame): DataFrame =
+    syms.select(col("cnt"), explode(zip_with(
+        slice(col("sym"), lit(1), size(col("sym")) - 1),
+        slice(col("sym"), lit(2), size(col("sym")) - 1),
+        (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum("cnt").as("pc"))
+
+  /** One merge (l, r) → `merged` applied to every word of a (cnt, sym)
+    * vocabulary, greedily left to right: acc ends with `l` and the next
+    * symbol is `r` → pop, push the merged atom. The merged atom is a
+    * DIFFERENT string from `l` (r is never empty), so overlapping runs
+    * merge non-overlapping pairs exactly like the sequential algorithm
+    * ("aaaa" + (a,a) → [aa, aa]).
+    */
+  private def applyMerge(syms: DataFrame, l: String, r: String,
+      merged: String): DataFrame = {
+    val (lw, rw) = (lit(l), lit(r))
+    syms.select(col("cnt"),
+      aggregate(col("sym"), array().cast("array<string>"),
+        (acc, x) => when(size(acc) > 0 && element_at(acc, -1) === lw && x === rw,
+          concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
+          .otherwise(concat(acc, array(x)))).as("sym"))
   }
 
   /** Sequential application of an ordered merge list to one word — the
@@ -2365,22 +2371,14 @@ object TextAnalysis {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
     val chars = filter(split(col("w"), ""), x => length(x) > 0)
-    var syms = words.select(col("cnt").cast("long").as("cnt"),
+    val init = words.select(col("cnt").cast("long").as("cnt"),
       transform(chars, (c, i) =>
         when(i === 0, c).otherwise(concat(lit("##"), c))).as("sym"))
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long, Long, Long)]
-    var step = 1
-    var done = false
-    while (step <= k && !done) {
-      val pairs = syms.select(col("cnt"), explode(zip_with(
-          slice(col("sym"), lit(1), size(col("sym")) - 1),
-          slice(col("sym"), lit(2), size(col("sym")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("cnt").as("pc"))
-        .filter(col("pc") >= minCount)
+    Iterate("wordpieceMerges", init, k) { (syms, step) =>
+      val pairs = pairCounts(syms).filter(col("pc") >= minCount)
       val scounts = syms.select(col("cnt"), explode(col("sym")).as("s"))
         .groupBy("s").agg(sum("cnt").as("sc"))
       val scored = pairs
@@ -2391,7 +2389,7 @@ object TextAnalysis {
         // collect) — cache so the pair/symbol counts run once
         .cache()
       val mxRow = scored.agg(max("ds")).head
-      if (mxRow.isNullAt(0)) { scored.unpersist(blocking = false); done = true }
+      if (mxRow.isNullAt(0)) { scored.unpersist(blocking = false); None }
       else {
         val band = scored
           .filter(col("ds") >= mxRow.getDouble(0) * (1 - 1e-12))
@@ -2407,18 +2405,7 @@ object TextAnalysis {
         }
         val (l, r, pc, cl, cr) = win
         merges += ((step, l, r, pc, cl, cr))
-        val (lw, rw, mw) = (lit(l), lit(r), lit(l + r.stripPrefix("##")))
-        val next = syms.select(col("cnt"),
-          aggregate(col("sym"), array().cast("array<string>"),
-            (acc, x) => when(size(acc) > 0 &&
-                element_at(acc, -1) === lw && x === rw,
-              concat(slice(acc, lit(1), size(acc) - 1), array(mw)))
-              .otherwise(concat(acc, array(x)))).as("sym"))
-        // r19 (guide §2.4/§5): per-round checkpoint — the every-3rd
-        // cadence made each round's pair+symbol counts replay up to 3
-        // stacked re-segmentation folds (see bpeMergesFromWords)
-        syms = next.localCheckpoint()
-        step += 1
+        Some(applyMerge(syms, l, r, l + r.stripPrefix("##")))
       }
     }
     merges.toSeq.toDF("step", "left", "right",

@@ -198,6 +198,17 @@ class DedupSpec extends SparkSpec {
     assert(uncapped.count(r => r.getLong(0) >= 100L && r.getLong(1) >= 100L) == 200 * 199 / 2)
   }
 
+  test("connected components: exhausting the round cap before the fixpoint throws") {
+    import spark.implicits._
+    // a 6-node path: round 1 moves labels but cannot settle them
+    val nodes = (0L until 6L).toDF("doc_id")
+    val edges = (0L until 5L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(nodes, edges, maxRounds = 1)
+    }
+    assert(e.getMessage == "connectedComponents did not converge in 1 rounds")
+  }
+
   test("connected components: 64-doc chain converges with bounded plan lineage") {
     import spark.implicits._
     // worst-case diameter for the round budget: one long chain — needs

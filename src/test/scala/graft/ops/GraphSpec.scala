@@ -81,6 +81,68 @@ class GraphSpec extends SparkSpec {
       5L -> 0, 6L -> 0, 7L -> 0, 8L -> 0))
   }
 
+  test("kCore: exhausting the round cap before the fixpoint throws") {
+    // the cascade above needs two peeling rounds plus one to see no change
+    val li = Seq(
+      (101L, 1L), (101L, 2L), (102L, 1L), (102L, 3L), (103L, 1L), (103L, 4L),
+      (104L, 2L), (104L, 3L), (105L, 2L), (105L, 4L), (106L, 3L), (106L, 4L),
+      (107L, 5L), (107L, 6L), (108L, 5L), (108L, 7L), (109L, 5L), (109L, 8L))
+      .toDF("l_orderkey", "l_partkey")
+    val dir = java.nio.file.Files.createTempDirectory("graft_g5x").toString
+    li.write.parquet(s"$dir/lineitem.parquet")
+    val e = intercept[IllegalStateException] {
+      Graph.kCoreMembership(spark, dir, maxRounds = 1)
+    }
+    assert(e.getMessage == "3-core peeling did not converge in 1 rounds")
+  }
+
+  test("g6 label propagation: hand-replayed rounds; weight desc, then label asc") {
+    // edge weight = shared orders: 1-2 and 4-5 weigh 2, 2-3 and 3-4 weigh 1
+    val dir = java.nio.file.Files.createTempDirectory("graft_g6").toString
+    Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), (3L, 2L), (3L, 3L),
+      (4L, 3L), (4L, 4L), (5L, 4L), (5L, 5L), (6L, 4L), (6L, 5L))
+      .toDF("l_orderkey", "l_partkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    def labels(rounds: Int): Map[Long, Long] =
+      Graph.labelPropagation(spark, dir, rounds).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // round 1: 3 sees labels 2 and 4 at weight 1 each → the tie goes to
+    // the smaller label 2; 4 sees 3 (w 1) and 5 (w 2) → the heavier 5
+    // wins over the smaller label
+    val r1 = Map(1L -> 2L, 2L -> 1L, 3L -> 2L, 4L -> 5L, 5L -> 4L)
+    // round 2 (synchronous: every node reads round 1's labels): 2 sees
+    // label 2 twice (w 2 + 1); 3 sees 1 and 5 at weight 1 → 1
+    val r2 = Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 4L, 5L -> 5L)
+    assert(labels(1) == r1)
+    assert(labels(2) == r2)
+    // the two states alternate: round 3 repeats round 1, round 4 round 2
+    assert(labels(3) == r1)
+    assert(labels(4) == r2)
+  }
+
+  test("g4 weightedHopCosts: a lighter longer path beats a heavy edge once the rounds reach it") {
+    // seed 1; heavy 1→2 (10) vs the 3-edge path 1→3→4→2 (cost 3); 2→5 (1)
+    val edges = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 4L, 1L), (4L, 2L, 1L),
+      (2L, 5L, 1L)).toDF("src", "dst", "w")
+    val seeds = Seq(Tuple1(1L)).toDF("node")
+    def costs(rounds: Int): Map[Long, Long] =
+      Graph.weightedHopCosts(edges, seeds, rounds).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(costs(1) == Map(1L -> 0L, 2L -> 10L, 3L -> 1L))
+    assert(costs(2) == Map(1L -> 0L, 2L -> 10L, 3L -> 1L, 4L -> 2L, 5L -> 11L))
+    // round 3 reaches 2 over the light path; 5 follows one round later
+    assert(costs(3) == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L, 5L -> 11L))
+    assert(costs(4) == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L, 5L -> 4L))
+  }
+
+  test("g3, g6 and g7 release every cache they build") {
+    spark.catalog.clearCache()
+    Graph.partBfs(spark, sf0001).collect()
+    Graph.labelPropagation(spark, sf0001).collect()
+    Graph.featurePropagation(spark, sf0001).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("bfsDistances: planted path graph gets exact hop counts; disconnected nodes unreached") {
     // path 1-2-3-4 (undirected), island 8-9; seed = {1}
     val undirected = Seq((1L, 2L), (2L, 3L), (3L, 4L), (8L, 9L))
