@@ -62,11 +62,11 @@ object Tables {
   def scratchDir(prefix: String, d: String): String = s"/tmp/${prefix}_${scratchTag(d)}"
 
   /** Cheap content fingerprint of a dataset dir: murmur over the sorted
-    * (name, size, mtime) listing. JVM-lifetime memos (IVF centroids,
-    * staged index dirs, BPE merge tables) key on it so a dataset
-    * REGENERATED IN PLACE — the round-7 events.parquet schema change was
-    * exactly this — invalidates the memo instead of silently serving a
-    * stale model fit or an index built over the old rows. Pure directory
+    * (name, size, mtime) listing. [[graft.engine.Staged]] keys every
+    * JVM-lifetime memo on it so a dataset REGENERATED IN PLACE — the
+    * round-7 events.parquet schema change was exactly this — invalidates
+    * the memo instead of silently serving a stale model fit or an index
+    * built over the old rows. Pure directory
     * metadata: no file contents are read, so the walk is O(file count)
     * stat calls (~tens per sf dir) and safe to run per query call.
     */
@@ -83,19 +83,6 @@ object Tables {
       .map(f => s"${root.relativize(f.getAbsoluteFile.toPath)}:${f.length}:${f.lastModified}")
       .sorted.mkString("|")
     f"${scala.util.hashing.MurmurHash3.stringHash(sig) & 0xffffffffL}%08x"
-  }
-
-  /** The memo-validity discipline for staged on-disk artifacts: a cached
-    * dir entry is reusable only while the dir still exists (external /tmp
-    * cleanup can delete it out from under a JVM-lifetime memo). Callers
-    * pass the memo and a builder; the key should already include
-    * `datasetFingerprint` so regeneration invalidates by key.
-    */
-  def stagedDir(memo: java.util.concurrent.ConcurrentHashMap[String, String],
-      key: String)(build: () => String): String = {
-    val cached = memo.get(key)
-    if (cached != null && !new java.io.File(cached).exists()) memo.remove(key, cached)
-    memo.computeIfAbsent(key, _ => build())
   }
 }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.engine.Staged
 
 /** ALS-WR training + evaluation (SURVEY.md §2 O7–O14).
   *
@@ -150,10 +151,8 @@ object AlsPipeline {
       alsRmse: Double, baseRmse: Double,
       nPredictions: Long, maxAbsDiff: Double)
 
-  private val fitted = scala.collection.concurrent.TrieMap.empty[String, Artifacts]
-
   def artifacts(s: SparkSession, d: String): Artifacts =
-    fitted.getOrElseUpdate(d, {
+    Staged.value(s, "als_fit", d) {
       val dir = Tables.scratchDir("graft_als", d)
       val ratings = syntheticRatings(s, d).cache()
       // reference hyperparameters, nothing reduced; blocks sized to data
@@ -187,7 +186,7 @@ object AlsPipeline {
       Artifacts(dir, cfg.rank, cfg.maxIter, cfg.regParam, nt, np,
         alsRmse, baseRmse, parity.getLong(0),
         math.rint(maxDiff * 1e5) / 1e5)
-    })
+    }
 
   /** als_sweep — HYPERPARAMETER MODEL SELECTION, the first thing a real
     * user does with the reference's hard-coded hyperparameters
@@ -204,12 +203,9 @@ object AlsPipeline {
     * un-oracleable); the spec pins argmin consistency, the shared-split
     * contract, and memo identity.
     */
-  private val sweepMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, Double, Double, Long, Long)]]
-
   private[als] def sweepGrid(s: SparkSession,
       d: String): Seq[(Int, Double, Double, Long, Long)] =
-    sweepMemo.computeIfAbsent(s"$d#${Tables.datasetFingerprint(d)}", _ => {
+    Staged.value(s, "als_sweep", d) {
       val ratings = syntheticRatings(s, d).cache()
       val (train, probe) = graft.ingest.Ratings.trainProbeSplit(ratings)
       train.cache(); probe.cache()
@@ -230,7 +226,7 @@ object AlsPipeline {
         .values.foreach(_.unpersist(blocking = false))
       ratings.unpersist(); train.unpersist(); probe.unpersist()
       grid
-    })
+    }
 
   /** The declared als_sweep query: the grid as a table, RMSE rounded to
     * a stable 6 dp, the argmin row flagged `chosen`.
@@ -372,9 +368,6 @@ object AlsPipeline {
       hitAls: Double, hitPop: Double,
       uRows: Long, mRows: Long, factorsOk: Boolean)
 
-  private val implicitFitted =
-    scala.collection.concurrent.TrieMap.empty[String, ImplicitArtifacts]
-
   /** One implicit fit + ranking evaluation per dataset. Holdout is
     * p6's leakage-proof md5-bucket split (pure function of the key —
     * rerun-stable, unlike seeded randomSplit). Headline metric:
@@ -490,7 +483,7 @@ object AlsPipeline {
   }
 
   def implicitArtifacts(s: SparkSession, d: String): ImplicitArtifacts =
-    implicitFitted.getOrElseUpdate(d, computeImplicit(s, d))
+    Staged.value(s, "als_implicit", d)(computeImplicit(s, d))
 
   /** als_implicit — the declared 1-row report: split sizes, the
     * strength-weighted mean percentile rank (lower = better, 0.5 =
@@ -581,18 +574,11 @@ object AlsPipeline {
     * predicted score, and the popularity score. The model is a
     * generalizing explicit fit (rank 8, λ 0.1 — the implicit eval's
     * lesson: rank 20 at λ 0.065 memorizes the small-SF fixture) on the
-    * train split of the PREFERENCE fixture; memoized per dataset via
-    * localCheckpoint so reruns re-read, never refit.
+    * train split of the PREFERENCE fixture; staged per dataset as a
+    * parquet dir so reruns re-read, never refit.
     */
-  private val evalScoredMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private[als] def evalScored(s: SparkSession, d: String): DataFrame = {
-    // memoize a STAGED PARQUET PATH, not a live DataFrame: a cached
-    // localCheckpoint is bound to the SparkContext that made it, so a
-    // session restart in the same JVM would hand back a dead plan; a
-    // parquet dir re-reads under any session (Tables.stagedDir rule).
-    val dir = Tables.stagedDir(evalScoredMemo,
-      s"alsscored#$d#${Tables.datasetFingerprint(d)}") { () =>
+    val dir = Staged.dir(s, "als_scored", d) {
       val out = Tables.scratchDir("graft_als_scored", d)
       evalScoredBuild(s, d).write.mode("overwrite").parquet(out)
       out
@@ -678,12 +664,8 @@ object AlsPipeline {
     * the winner, shipped ≥ incumbent, kept_default honesty, and
     * memo-identical reruns.
     */
-  private val sweepRefitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[als] def sweepRefitRow(s: SparkSession, d: String): DataFrame = {
-    val dir = Tables.stagedDir(sweepRefitMemo,
-      s"alsrefit#$d#${Tables.datasetFingerprint(d)}") { () =>
+    val dir = Staged.dir(s, "als_refit", d) {
       val out = Tables.scratchDir("graft_als_refit", d)
       sweepRefitBuild(s, d).write.mode("overwrite").parquet(out)
       out

@@ -27,27 +27,24 @@ import org.apache.spark.sql.DataFrame
   */
 object Iterate {
 
-  private val JobDescription = "spark.job.description"
-
   def apply(name: String, init: DataFrame, maxRounds: Int, every: Int = 1,
       until: (DataFrame, Int) => Boolean = (_, _) => false,
       mustConverge: Boolean = false)(
       step: (DataFrame, Int) => Option[DataFrame]): DataFrame = {
-    val sc = init.sparkSession.sparkContext
     var state = init
     var round = 0
     var stopped = false
     while (!stopped && round < maxRounds) {
       round += 1
-      val prior = sc.getLocalProperty(JobDescription)
-      sc.setJobDescription(s"$name round $round")
-      try step(state, round) match {
-        case None => stopped = true
-        case Some(next) if round % every == 0 =>
-          state = next.localCheckpoint()
-          stopped = until(state, round)
-        case Some(next) => state = next
-      } finally sc.setLocalProperty(JobDescription, prior)
+      Sessions.withJobDescription(init.sparkSession, s"$name round $round") {
+        step(state, round) match {
+          case None => stopped = true
+          case Some(next) if round % every == 0 =>
+            state = next.localCheckpoint()
+            stopped = until(state, round)
+          case Some(next) => state = next
+        }
+      }
     }
     if (mustConverge && !stopped)
       throw new IllegalStateException(s"$name did not converge in $maxRounds rounds")

@@ -62,6 +62,17 @@ object Sessions {
     }
   }
 
+  /** Run `body` with this thread's Spark jobs described as `description`,
+    * then put the prior description back, even when `body` throws. The
+    * job group, which tracers attribute jobs by, is left alone.
+    */
+  def withJobDescription[T](s: SparkSession, description: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try body finally sc.setLocalProperty("spark.job.description", prior)
+  }
+
   /** Keys whose value differs between two `conf.getAll` snapshots. */
   def changedKeys(before: Map[String, String], after: Map[String, String]): Seq[String] =
     (before.keySet ++ after.keySet).toSeq.sorted.filter(k => before.get(k) != after.get(k))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.engine.Iterate
+import graft.engine.{Iterate, Staged}
 
 /** Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
   * embedding-cosine near-dup.
@@ -328,20 +328,20 @@ object Dedup {
   /** One CC closure per dataset, shared by its three consumers (d6 the
     * clusters themselves, d10 the size histogram, d11 the quality
     * keeper): the iterative min-label fit is the expensive part and its
-    * output is a localCheckpoint'd flat leaf, so reuse is free and
-    * re-running it per consumer was pure waste — the AlsPipeline
-    * memoized-fit discipline. `computeIfAbsent` holds the bin lock for
-    * the computation, so concurrent suites fit exactly once.
+    * output is staged as a (doc_id, cluster_id) parquet dir, so reuse is
+    * one scan and re-running it per consumer was pure waste.
     */
-  private val ccMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
-  def dedupClusters(s: SparkSession, d: String, maxRounds: Int = 20): DataFrame =
-    ccMemo.computeIfAbsent(d, _ => {
+  def dedupClusters(s: SparkSession, d: String, maxRounds: Int = 20): DataFrame = {
+    val dir = Staged.dir(s, "dedup_cc", d, maxRounds) {
+      val out = Tables.scratchDir(s"graft_dedup_cc_$maxRounds", d)
       val p = ngramJaccardPairs(s, d).select(col("doc_a"), col("doc_b"))
       val nodes = documents(s, d).select(col("doc_id"))
       connectedComponents(nodes, p.toDF("a", "b"), maxRounds)
-    }).orderBy("doc_id")
+        .write.mode("overwrite").parquet(out)
+      out
+    }
+    s.read.parquet(dir).orderBy("doc_id")
+  }
 
   /** d10 — dedup survivorship report: the cluster-SIZE histogram of d6's
     * connected components (how many singletons, pairs, 3-clusters, ...

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
+import graft.engine.Staged
 
 /** Mutation-shaped operators a warehouse user expects from an engine:
   * MERGE-style upsert (update-matched + insert-unmatched in one pass) and
@@ -1002,7 +1003,10 @@ object Mutations {
   /** Parsed checkpoint content, memoized per (path, mtime, length) — a
     * checkpoint is immutable once published, but spec fixtures rebuild
     * stores in place, so the file identity (not just the path) keys the
-    * cache. One small parquet read per store per JVM.
+    * cache. One small parquet read per store per JVM. Not a
+    * [[graft.engine.Staged]] entry: the key is one file's identity, not
+    * a dataset's content, and the parse sits on the lake verbs' per-call
+    * path where a dataset fingerprint walk would be pure overhead.
     */
   private val ckptMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(String, Option[TtStat])]]
@@ -1969,7 +1973,7 @@ object Mutations {
   }
 
   /** JVM-lifetime memo of FINISHED scenario stores, one dir per
-    * (prefix, dataset fingerprint): declared lake queries stage their
+    * (prefix, dataset): declared lake queries stage their
     * multi-commit store construction here, so Bench's staged pass
     * (QueryDef.staged) carries the build cost and the timed line reads
     * verb/snapshot cost — the v-family staging discipline applied to
@@ -1981,13 +1985,9 @@ object Mutations {
     * builders (ttStore & co.) on their own dirs, so spec mutations
     * never collide with memoized query state.
     */
-  private val scenarioMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def ttScenario(s: SparkSession, d: String, prefix: String)(
       build: String => Unit): String =
-    Tables.stagedDir(scenarioMemo,
-        s"$prefix:${Tables.datasetFingerprint(d)}") { () =>
+    Staged.dir(s, prefix, d) {
       val dir = Tables.scratchDir(prefix, d)
       ttFs(s, dir).delete(new org.apache.hadoop.fs.Path(dir), true)
       build(dir)
@@ -2005,16 +2005,9 @@ object Mutations {
     */
   private[graft] def ttDerivedScenario(s: SparkSession, d: String,
       prefix: String, template: () => String)(
-      suffix: String => Unit): String = {
-    // Resolve the template BEFORE entering the memoized build:
-    // ttScenario's stagedDir runs its builder inside a computeIfAbsent
-    // on scenarioMemo, and template() resolves through the SAME map —
-    // ConcurrentHashMap forbids recursive updates (IllegalStateException
-    // or live-lock when the two keys share a bin). The template memo is
-    // idempotent, so an eager resolve costs one map hit on the cached
-    // path and nothing on the build path (the builder needed it anyway).
-    val src = template()
+      suffix: String => Unit): String =
     ttScenario(s, d, prefix) { dir =>
+      val src = template()
       val fs = ttFs(s, dir)
       require(org.apache.hadoop.fs.FileUtil.copy(fs,
         new org.apache.hadoop.fs.Path(src), fs,
@@ -2023,7 +2016,6 @@ object Mutations {
         s"template clone $src -> $dir failed")
       suffix(dir)
     }
-  }
 
   /** Commit already-published adds/removes at `target`, rebasing to the
     * new head on a lost claim — the OCC append loop factored for verbs
@@ -3016,10 +3008,8 @@ object Mutations {
     // files are what the clone's log references absolutely) and the
     // clone with its independent COW mutation applied
     val srcDir = Tables.scratchDir("graft_up23q_src", d)
-    // resolved OUTSIDE the memoized build — same-map recursive
-    // computeIfAbsent hazard as ttDerivedScenario's template
-    val baseDir = ttBaseScenario(s, d)
     val clone = ttScenario(s, d, "graft_up23q_clone") { cloneDir =>
+      val baseDir = ttBaseScenario(s, d)
       val fs = ttFs(s, srcDir)
       fs.delete(new org.apache.hadoop.fs.Path(srcDir), true)
       require(org.apache.hadoop.fs.FileUtil.copy(fs,

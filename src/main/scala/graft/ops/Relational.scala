@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{QueryDef, Tables}
+import graft.engine.Staged
 
 /** Relational operator surface (SURVEY.md §2 parity set, O1–O6/O14–O16 plus
   * the full declarative surface of §7 M3: scans, projection/filter, joins of
@@ -730,9 +731,6 @@ object Relational {
     * fully oracled by replaying the plain join in DuckDB — the
     * split-and-reread must not change a single row.
     */
-  private val skewFactMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** The skewed fact staged as a 16-FILE table (memoized per dataset
     * fingerprint). Two structural conditions gate AQE\'s splitter, both
     * discovered by probing mapStats: (a) the skewed reduce partition is
@@ -745,8 +743,7 @@ object Relational {
     * Sort(ShuffleQueryStage) pattern no longer matches either side.
     */
   private def skewFactDir(s: SparkSession, d: String): String =
-    graft.Tables.stagedDir(skewFactMemo,
-      s"skewfact#$d#${graft.Tables.datasetFingerprint(d)}") { () =>
+    Staged.dir(s, "j17_skew_fact", d) {
       val dir = graft.Tables.scratchDir("graft_j17_fact", d)
       events(s, d).select(
         when(pmod(col("user_id"), lit(3)) =!= 0, lit(0L))

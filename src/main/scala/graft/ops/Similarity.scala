@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.engine.Iterate
+import graft.engine.{Iterate, Staged}
 
 /** Similarity search over embedding columns (ARRAY<FLOAT>).
   *
@@ -250,25 +250,15 @@ object Similarity {
     if (structs.length == 1) structs.head else greatest(structs: _*)
   }
 
-  // Memo invalidation contract (all memos below): keys include
-  // Tables.datasetFingerprint, so a dataset regenerated IN PLACE at the
-  // same path gets fresh fits/indexes instead of stale ones; staged DIRS
-  // additionally go through Tables.stagedDir, which rebuilds if external
-  // scratch cleanup deleted the directory the memo still points at.
-  private val ivfCentsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Seq[Float])]]
-  private val ivfStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Coarse-quantizer centroids memoized per (dataset content, nlist):
     * shared by v3/v11 (annIvf) and v10 (ivfPqTopK) so the IVF family
     * fits KMeans once per corpus geometry.
     */
   private[ops] def memoCents(e: DataFrame, d: String, nl: Int,
       n: Long, seed: Long = 42L): Array[(Int, Seq[Float])] =
-    ivfCentsMemo.computeIfAbsent(
-      s"${graft.Tables.scratchTag(d)}#${graft.Tables.datasetFingerprint(d)}#$nl#$seed",
-      _ => fitQuantizer(e, "embedding", nl, seed = seed, corpusCount = n))
+    Staged.value(e.sparkSession, "ivf_cents", d, nl, seed) {
+      fitQuantizer(e, "embedding", nl, seed = seed, corpusCount = n)
+    }
 
   /** Bucketed IVF index staging, memoized per (dataset content, nlist):
     * one partition dir per cell — probes read only theirs. nl and the
@@ -279,9 +269,8 @@ object Similarity {
     */
   private[ops] def stagedIvfIndex(s: SparkSession, e: DataFrame, d: String,
       nl: Int, cents: Array[(Int, Seq[Float])]): String = {
-    val fp = graft.Tables.datasetFingerprint(d)
-    graft.Tables.stagedDir(ivfStageMemo,
-      s"${graft.Tables.scratchTag(d)}#$fp#$nl") { () =>
+    Staged.dir(s, "ivf_index", d, nl) {
+      val fp = graft.Tables.datasetFingerprint(d)
       val best = assignCell(col("embedding"), cents)
       val assigned = e.select(col("vec_id"), col("embedding"),
         (lit(0) - best.getField("negcell")).as("cell"))
@@ -406,11 +395,10 @@ object Similarity {
     // reuses existing geometry (memoCents seed differs from v3's so the
     // two index families never share a fit keyed on different corpora)
     val fp = graft.Tables.datasetFingerprint(d)
-    val cents = ivfCentsMemo.computeIfAbsent(
-      s"v20#${graft.Tables.scratchTag(d)}#$fp#$nl",
-      _ => fitQuantizer(base, "embedding", nl, corpusCount = nBase))
-    val baseDir = graft.Tables.stagedDir(ivfStageMemo,
-      s"v20base#${graft.Tables.scratchTag(d)}#$fp#$nl") { () =>
+    val cents = Staged.value(s, "ivf_cents_v20", d, nl) {
+      fitQuantizer(base, "embedding", nl, corpusCount = nBase)
+    }
+    val baseDir = Staged.dir(s, "ivf_v20base", d, nl) {
       val dir = graft.Tables.scratchDir(s"graft_ivf_v20base_${nl}_$fp", d)
       base.select(col("vec_id"), col("embedding"),
         (lit(0) - assignCell(col("embedding"), cents).getField("negcell"))
@@ -434,8 +422,7 @@ object Similarity {
     // the later read would fail schema inference — skip the delta
     // entirely; readers treat deltaDir == "" as "no delta segment".
     val deltaDir = if (nBatch == 0) "" else
-      graft.Tables.stagedDir(ivfStageMemo,
-        s"v20delta#${graft.Tables.scratchTag(d)}#$fp#$nl#$tag") { () =>
+      Staged.dir(s, "ivf_v20delta", d, nl, tag) {
         val dir = graft.Tables.scratchDir(s"graft_ivf_v20delta_${nl}_${fp}_$tag", d)
         batch.select(col("vec_id"), col("embedding"),
           (lit(0) - assignCell(col("embedding"), cents).getField("negcell"))
@@ -682,14 +669,13 @@ object Similarity {
       .toDF("q_id", "rank", "n_id", "cos")
     if (cents.isEmpty) return FilteredAnn(empty, empty, empty)
     val best = assignCell(col("embedding"), cents)
-    val fp = graft.Tables.datasetFingerprint(d)
     // a DIFFERENT staged dir than v3's: the filtered index row carries
     // the metadata column, and sharing v3's path would serve one
     // schema to the other memo entry
-    val bucketDir = graft.Tables.stagedDir(ivfStageMemo,
-      s"ivff#${graft.Tables.scratchTag(d)}#$fp#$nl") { () =>
+    val bucketDir = Staged.dir(s, "ivf_filtered", d, nl) {
       val meta = documents(s, d).select(col("doc_id").as("vec_id"), col("lang"))
-      val dir = graft.Tables.scratchDir(s"graft_ivff_${nl}_$fp", d)
+      val dir = graft.Tables.scratchDir(
+        s"graft_ivff_${nl}_${graft.Tables.datasetFingerprint(d)}", d)
       e.select(col("vec_id"), col("embedding"),
           (lit(0) - best.getField("negcell")).as("cell"))
         .join(meta, Seq("vec_id"), "left")
@@ -955,41 +941,37 @@ object Similarity {
     * (dataset, geometry): v9, v10 and the code dump share ONE fit.
     * None ⇔ the sample is empty.
     */
-  private val pqFitMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Array[Array[Array[Double]]]]]
   private def pqFit(e: DataFrame, d: String, n: Long, sub: Int, m: Int,
       codebook: Int, seed: Long): Option[Array[Array[Array[Double]]]] =
-    pqFitMemo.computeIfAbsent(
-      s"${graft.Tables.scratchTag(d)}|${graft.Tables.datasetFingerprint(d)}" +
-        s"|$sub|$m|$codebook|$seed", _ => {
-        val hashMod = math.max(1L, n / 50000)
-        val hashed = e
-          .filter(pmod(xxhash64(col("embedding")), lit(hashMod)) === 0)
-          .limit(50000)
-          .select(pqNormalize(col("embedding")).as("nv"))
-        var rows = hashed.collect()
-        // degenerate corpora can hash entirely into a nonzero residue
-        // class — fall back to the prefix rather than fitting on nothing
-        if (rows.isEmpty && n > 0)
-          rows = e.limit(50000)
-            .select(pqNormalize(col("embedding")).as("nv")).collect()
-        if (rows.isEmpty) None
-        else {
-          val sample = rows.map(_.getSeq[Double](0).toArray)
-          // deterministic fit input: order by content, not arrival
-          java.util.Arrays.sort(sample, (a: Array[Double], b: Array[Double]) => {
-            var i = 0
-            while (i < a.length && a(i) == b(i)) i += 1
-            if (i == a.length) 0 else java.lang.Double.compare(a(i), b(i))
-          })
-          Some((0 until m).map { j =>
-            val pts = sample.map(_.slice(j * sub, (j + 1) * sub))
-            if (pts.length == 1) Array(pts(0))
-            else lloyd(pts, math.min(codebook, pts.length), iters = 8,
-              seed = seed + j)
-          }.toArray)
-        }
-      })
+    Staged.value(e.sparkSession, "pq_fit", d, sub, m, codebook, seed) {
+      val hashMod = math.max(1L, n / 50000)
+      val hashed = e
+        .filter(pmod(xxhash64(col("embedding")), lit(hashMod)) === 0)
+        .limit(50000)
+        .select(pqNormalize(col("embedding")).as("nv"))
+      var rows = hashed.collect()
+      // degenerate corpora can hash entirely into a nonzero residue
+      // class — fall back to the prefix rather than fitting on nothing
+      if (rows.isEmpty && n > 0)
+        rows = e.limit(50000)
+          .select(pqNormalize(col("embedding")).as("nv")).collect()
+      if (rows.isEmpty) None
+      else {
+        val sample = rows.map(_.getSeq[Double](0).toArray)
+        // deterministic fit input: order by content, not arrival
+        java.util.Arrays.sort(sample, (a: Array[Double], b: Array[Double]) => {
+          var i = 0
+          while (i < a.length && a(i) == b(i)) i += 1
+          if (i == a.length) 0 else java.lang.Double.compare(a(i), b(i))
+        })
+        Some((0 until m).map { j =>
+          val pts = sample.map(_.slice(j * sub, (j + 1) * sub))
+          if (pts.length == 1) Array(pts(0))
+          else lloyd(pts, math.min(codebook, pts.length), iters = 8,
+            seed = seed + j)
+        }.toArray)
+      }
+    }
 
   // encode: per subvector, argmax of 2⟨x̂,c⟩ − ‖c‖² (≡ argmin ‖x̂−c‖²).
   // `nv` MUST be a materialized (cached/attribute) normalized column,
@@ -1020,14 +1002,11 @@ object Similarity {
     * v10's index build, and the code dump pay it ONCE; later consumers
     * pay only a 5-byte-per-vector scan.
     */
-  private val pqCodesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def pqCodesStage(s: SparkSession, e: DataFrame, d: String,
       cbs: Array[Array[Array[Double]]], m: Int, sub: Int, codebook: Int,
       seed: Long): String = {
-    val fp = graft.Tables.datasetFingerprint(d)
-    graft.Tables.stagedDir(pqCodesMemo,
-      s"${graft.Tables.scratchTag(d)}#$fp#$m#$codebook#$seed") { () =>
+    Staged.dir(s, "pq_codes", d, m, codebook, seed) {
+      val fp = graft.Tables.datasetFingerprint(d)
       val dir = graft.Tables.scratchDir(
         s"graft_pqcodes_${m}_${codebook}_${seed}_$fp", d)
       e.select(col("vec_id"), pqNormalize(col("embedding")).as("nv"))
@@ -1161,11 +1140,9 @@ object Similarity {
     // v3's bucketDir, and BUILT FROM the staged code table (join by
     // vec_id + the cell argmax) so the expensive PQ encode is shared
     // with v9 rather than re-run per index build.
-    val fpIdx = graft.Tables.datasetFingerprint(d)
-    val indexDir = graft.Tables.stagedDir(ivfStageMemo,
-      s"ivfpq#${graft.Tables.scratchTag(d)}#$fpIdx#$nl#$m#$codebook#$seed") { () =>
-      val dir = graft.Tables.scratchDir(
-        s"graft_ivfpq_${nl}_${m}_${codebook}_${seed}_$fpIdx", d)
+    val indexDir = Staged.dir(s, "ivfpq_index", d, nl, m, codebook, seed) {
+      val dir = graft.Tables.scratchDir(s"graft_ivfpq_${nl}_${m}_${codebook}_${seed}_" +
+        graft.Tables.datasetFingerprint(d), d)
       val codes = s.read
         .parquet(pqCodesStage(s, e, d, codebooks, m, sub, codebook, seed))
       e.select(col("vec_id"),
@@ -1380,9 +1357,6 @@ object Similarity {
     * planted-cluster fixture with recall-not-worse than v21, and
     * rerun determinism.
     */
-  private val hnswStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Stage (memoized per dataset fingerprint + build params) the v22
     * layer hierarchy as ONE hive-partitioned parquet dir: `lvl=0` holds
     * the undirected base kNN graph, `lvl=ℓ` the degree-capped layer-ℓ
@@ -1395,10 +1369,9 @@ object Similarity {
     */
   private[ops] def stagedHnswLayers(s: SparkSession, e: DataFrame, d: String,
       maxL: Int, layerK: Int): String = {
-    val fp = graft.Tables.datasetFingerprint(d)
-    graft.Tables.stagedDir(hnswStageMemo,
-      s"hnsw#${graft.Tables.scratchTag(d)}#$fp#$layerK") { () =>
-      val dir = graft.Tables.scratchDir(s"graft_hnsw_${layerK}_$fp", d)
+    Staged.dir(s, "hnsw_layers", d, layerK) {
+      val dir = graft.Tables.scratchDir(
+        s"graft_hnsw_${layerK}_${graft.Tables.datasetFingerprint(d)}", d)
       val leveled = e.withColumn("lvl", hnswLevel(maxL)).cache()
       val lvlCounts = leveled.groupBy("lvl").count().collect()
         .map(r => (r.getInt(0), r.getLong(1))).toMap

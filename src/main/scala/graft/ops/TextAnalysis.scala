@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.engine.Iterate
+import graft.engine.{Iterate, Staged}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
@@ -2324,16 +2324,12 @@ object TextAnalysis {
     * run over the same dataset reuses it (the PQ-codebook memoization
     * discipline).
     */
-  private val bpeMergeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]
   private def learnedMerges(s: SparkSession, d: String,
       k: Int): Seq[(String, String)] =
-    // fingerprint in the key: a dataset regenerated in place must not be
-    // encoded with the previous generation's merge table
-    bpeMergeMemo.computeIfAbsent(
-      s"$d#${graft.Tables.datasetFingerprint(d)}#$k", _ =>
+    Staged.value(s, "bpe_merges", d, k) {
       bpeMerges(s, d, k).orderBy("step").collect().toSeq
-        .map(r => (r.getString(1), r.getString(2))))
+        .map(r => (r.getString(1), r.getString(2)))
+    }
 
   /** t38 — WORDPIECE merge learning (Schuster & Nakajima 2012; the
     * BERT tokenizer's trainer): like BPE (t22) the loop greedily merges
@@ -2419,23 +2415,20 @@ object TextAnalysis {
     * is observationally equal to BERT's and identical on both engines)
     * plus the k merge outputs in their own position class.
     */
-  private val wpVocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]
   private def learnedWordpieceVocab(s: SparkSession, d: String,
       k: Int): Seq[String] =
-    wpVocabMemo.computeIfAbsent(
-      s"$d#${graft.Tables.datasetFingerprint(d)}#$k", _ => {
-        val merges = wordpieceMerges(s, d, k).orderBy("step").collect()
-          .map(r => (r.getString(1), r.getString(2)))
-        val alphabet = documents(s, d)
-          .select(wordTokens(col("text")).as("w"))
-          .filter(length(col("w")) > 0)
-          .select(explode(filter(split(col("w"), ""),
-            x => length(x) > 0)).as("c"))
-          .distinct().collect().map(_.getString(0)).toSeq
-        val mergedPieces = merges.map { case (l, r) => l + r.stripPrefix("##") }
-        (alphabet.flatMap(c => Seq(c, "##" + c)) ++ mergedPieces).distinct
-      })
+    Staged.value(s, "wordpiece_vocab", d, k) {
+      val merges = wordpieceMerges(s, d, k).orderBy("step").collect()
+        .map(r => (r.getString(1), r.getString(2)))
+      val alphabet = documents(s, d)
+        .select(wordTokens(col("text")).as("w"))
+        .filter(length(col("w")) > 0)
+        .select(explode(filter(split(col("w"), ""),
+          x => length(x) > 0)).as("c"))
+        .distinct().collect().map(_.getString(0)).toSeq
+      val mergedPieces = merges.map { case (l, r) => l + r.stripPrefix("##") }
+      (alphabet.flatMap(c => Seq(c, "##" + c)) ++ mergedPieces).distinct
+    }
 
   /** t39 — WORDPIECE ENCODE by GREEDY LONGEST MATCH (MaxMatch — BERT's
     * actual inference algorithm, and a genuinely different procedure
@@ -2594,55 +2587,52 @@ object TextAnalysis {
     * vocab-sized fold + a bounded (≤ seed-sized) collect; the corpus is
     * touched once for the word inventory.
     */
-  private val unigramMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long, Double)]]
   private[graft] def unigramVocab(s: SparkSession, d: String,
       maxLen: Int = 4, seedCap: Int = 400, vocabTarget: Int = 44)
       : Seq[(String, Long, Double)] =
-    unigramMemo.computeIfAbsent(
-      s"$d#${graft.Tables.datasetFingerprint(d)}#$maxLen#$seedCap#$vocabTarget", _ => {
-        val words = wordInventory(s, d)
-        // seed substring frequencies (distributed; nested transform —
-        // one row per (word, start, len) before the piece rollup)
-        val subs = words.select(col("cnt"), explode(flatten(
-          transform(sequence(lit(1), length(col("w"))), i =>
-            transform(
-              sequence(lit(1), least(lit(maxLen), length(col("w")) - i + 1)),
-              j => col("w").substr(i, j))))).as("piece"))
-          .groupBy("piece").agg(sum("cnt").as("freq"))
-        val chars = subs.filter(length(col("piece")) === 1)
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-          .sortBy(_._1) // alphabet-bounded
-        val multi = subs.filter(length(col("piece")) > 1)
-          .orderBy(desc("freq"), asc("piece")).limit(seedCap)
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val seed = chars ++ multi
-        val totalSeed = seed.map(_._2).sum
-        val lp0 = seed.map { case (p, f) =>
-          p -> r6(math.log(f.toDouble / totalSeed.toDouble)) }
-        // E1 + M1 over the full seed
-        val c1 = unigramCounts(s, d, lp0, maxLen)
-        val tc1 = c1.values.sum
-        val v1 = seed.size
-        val lp1 = seed.map { case (p, _) =>
-          p -> r6(math.log(
-            (c1.getOrElse(p, 0L) + 1).toDouble / (tc1 + v1).toDouble)) }
-        val lp1Map = lp1.toMap
-        // prune by likelihood mass c·logp (ASC: most negative = most
-        // mass = kept first), ties by piece; chars always retained
-        val keptMulti = multi.map(_._1)
-          .sortBy(p => (c1.getOrElse(p, 0L).toDouble * lp1Map(p), p))
-          .take(math.max(0, vocabTarget - chars.length))
-        val vocab2 = (chars.map(_._1) ++ keptMulti).map(p => p -> lp1Map(p))
-        // E2 + M2 on the pruned vocabulary
-        val c2 = unigramCounts(s, d, vocab2, maxLen)
-        val tc2 = c2.values.sum
-        val v2 = vocab2.size
-        vocab2.map { case (p, _) =>
-          (p, c2.getOrElse(p, 0L), r6(math.log(
-            (c2.getOrElse(p, 0L) + 1).toDouble / (tc2 + v2).toDouble)))
-        }
-      })
+    Staged.value(s, "unigram_vocab", d, maxLen, seedCap, vocabTarget) {
+      val words = wordInventory(s, d)
+      // seed substring frequencies (distributed; nested transform —
+      // one row per (word, start, len) before the piece rollup)
+      val subs = words.select(col("cnt"), explode(flatten(
+        transform(sequence(lit(1), length(col("w"))), i =>
+          transform(
+            sequence(lit(1), least(lit(maxLen), length(col("w")) - i + 1)),
+            j => col("w").substr(i, j))))).as("piece"))
+        .groupBy("piece").agg(sum("cnt").as("freq"))
+      val chars = subs.filter(length(col("piece")) === 1)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+        .sortBy(_._1) // alphabet-bounded
+      val multi = subs.filter(length(col("piece")) > 1)
+        .orderBy(desc("freq"), asc("piece")).limit(seedCap)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val seed = chars ++ multi
+      val totalSeed = seed.map(_._2).sum
+      val lp0 = seed.map { case (p, f) =>
+        p -> r6(math.log(f.toDouble / totalSeed.toDouble)) }
+      // E1 + M1 over the full seed
+      val c1 = unigramCounts(s, d, lp0, maxLen)
+      val tc1 = c1.values.sum
+      val v1 = seed.size
+      val lp1 = seed.map { case (p, _) =>
+        p -> r6(math.log(
+          (c1.getOrElse(p, 0L) + 1).toDouble / (tc1 + v1).toDouble)) }
+      val lp1Map = lp1.toMap
+      // prune by likelihood mass c·logp (ASC: most negative = most
+      // mass = kept first), ties by piece; chars always retained
+      val keptMulti = multi.map(_._1)
+        .sortBy(p => (c1.getOrElse(p, 0L).toDouble * lp1Map(p), p))
+        .take(math.max(0, vocabTarget - chars.length))
+      val vocab2 = (chars.map(_._1) ++ keptMulti).map(p => p -> lp1Map(p))
+      // E2 + M2 on the pruned vocabulary
+      val c2 = unigramCounts(s, d, vocab2, maxLen)
+      val tc2 = c2.values.sum
+      val v2 = vocab2.size
+      vocab2.map { case (p, _) =>
+        (p, c2.getOrElse(p, 0L), r6(math.log(
+          (c2.getOrElse(p, 0L) + 1).toDouble / (tc2 + v2).toDouble)))
+      }
+    }
 
   /** The declared t40 rollup: the final unigram vocabulary ranked by
     * (count DESC, piece ASC).

@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, TimestampNTZType, TimestampType}
 
+import graft.engine.Staged
+
 /** Materialized-view EXACT-MATCH substitution — the engine's third
   * optimizer-tier extension (beside the kernel-fusion rule and the as-of
   * operator tier): a registered daily rollup answers the canonical
@@ -119,7 +121,6 @@ object MatViews {
   /** canonical events.parquet path -> registered view entry */
   private[plans] val registry =
     new java.util.concurrent.ConcurrentHashMap[String, MvEntry]
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   def canonicalSrc(d: String): String =
     new java.io.File(s"$d/events.parquet").getAbsolutePath
@@ -182,8 +183,7 @@ object MatViews {
     */
   def stageDailyRollup(s: SparkSession, d: String): String = {
     val fp = graft.Tables.datasetFingerprint(canonicalSrc(d))
-    val key = s"$d#$fp"
-    val mv = graft.Tables.stagedDir(staged, key) { () =>
+    val mv = Staged.dir(s, "mv_daily", canonicalSrc(d)) {
       val dir = graft.Tables.scratchDir("graft_mv_daily", d)
       withoutRewrite {
         naiveDailyRollup(s, d).write.mode("overwrite").parquet(dir)
@@ -214,7 +214,6 @@ object MatViews {
   /** events path -> registered coarser (monthly) view */
   private[plans] val coarseRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, MvEntry]
-  private val coarseStaged = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Stage (memoized) the monthly rollup for dataset `d` and register it
     * as a SECOND rewrite candidate beside the daily view. Returns the
@@ -222,8 +221,7 @@ object MatViews {
     */
   def stageMonthlyRollup(s: SparkSession, d: String): String = {
     val fp = graft.Tables.datasetFingerprint(canonicalSrc(d))
-    val key = s"month#$d#$fp"
-    val mv = graft.Tables.stagedDir(coarseStaged, key) { () =>
+    val mv = Staged.dir(s, "mv_monthly", canonicalSrc(d)) {
       val dir = graft.Tables.scratchDir("graft_mv_monthly", d)
       withoutRewrite {
         naiveMonthlyRollup(s, d).write.mode("overwrite").parquet(dir)
@@ -241,7 +239,6 @@ object MatViews {
   /** events path -> registered day-PARTITIONED daily view */
   private[plans] val partRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, MvEntry]
-  private val partStaged = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Stage (memoized) the daily rollup AGAIN, hive-partitioned by day,
     * and register it as a third candidate. Logically redundant with the
@@ -254,8 +251,7 @@ object MatViews {
     */
   def stagePartitionedDailyRollup(s: SparkSession, d: String): String = {
     val fp = graft.Tables.datasetFingerprint(canonicalSrc(d))
-    val key = s"part#$d#$fp"
-    val mv = graft.Tables.stagedDir(partStaged, key) { () =>
+    val mv = Staged.dir(s, "mv_daily_part", canonicalSrc(d)) {
       val dir = graft.Tables.scratchDir("graft_mv_daily_part", d)
       withoutRewrite {
         naiveDailyRollup(s, d).write.mode("overwrite")
@@ -289,7 +285,6 @@ object MatViews {
   /** events path -> registered distinct-keys view */
   private[plans] val distinctRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, MvEntry]
-  private val distinctStaged = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Entry for the distinct-keys view. Day/et keys as usual; the
     * centsNorm SLOT carries the normalized DISTINCT key expression
@@ -315,8 +310,7 @@ object MatViews {
   /** Stage (memoized) the distinct-keys view and register it. */
   def stageDistinctUsers(s: SparkSession, d: String): String = {
     val fp = graft.Tables.datasetFingerprint(canonicalSrc(d))
-    val key = s"distinct#$d#$fp"
-    val mv = graft.Tables.stagedDir(distinctStaged, key) { () =>
+    val mv = Staged.dir(s, "mv_distinct", canonicalSrc(d)) {
       val dir = graft.Tables.scratchDir("graft_mv_distinct", d)
       withoutRewrite {
         naiveDistinctUsers(s, d).write.mode("overwrite").parquet(dir)
@@ -583,7 +577,6 @@ object MatViews {
   /** fact canonical path -> registered aggregate-join view */
   private[plans] val starRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, StarEntry]
-  private val starStaged = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   private[plans] def canonicalPath(d: String, table: String): String =
     new java.io.File(s"$d/$table.parquet").getAbsolutePath
@@ -662,8 +655,7 @@ object MatViews {
 
   def stageStarRollup(s: SparkSession, d: String): String = {
     val fp = graft.Tables.datasetFingerprint(d)
-    val key = s"star#$d#$fp"
-    val mv = graft.Tables.stagedDir(starStaged, key) { () =>
+    val mv = Staged.dir(s, "mv_star", d) {
       val dir = graft.Tables.scratchDir("graft_mv_star", d)
       withoutRewrite {
         naiveStarRollup(s, d).write.mode("overwrite").parquet(dir)

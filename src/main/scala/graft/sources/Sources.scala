@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
+import graft.engine.Staged
 
 /** Source/sink surface beyond csv+parquet scans: JSON lines in/out and
   * partitioned parquet with partition pruning.
@@ -117,8 +118,6 @@ object Sources {
       text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       "conversion", "text/plain", version)
 
-  private val wetMemo = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Stage the WET fixture: `wetFiles` gzip shards, each a concatenation
     * of PER-RECORD gzip members (Common Crawl's exact framing — the
     * member boundary is what lets record-level tooling seek, and the
@@ -135,7 +134,7 @@ object Sources {
     * input — and only the reader below is the production path.
     */
   private[graft] def wetStaged(s: SparkSession, d: String): String =
-    Tables.stagedDir(wetMemo, s"$d#${Tables.datasetFingerprint(d)}") { () =>
+    Staged.dir(s, "wet", d) {
       val dir = Tables.scratchDir("graft_wet", d)
       val root = new java.io.File(dir)
       if (root.exists()) {
@@ -292,7 +291,7 @@ object Sources {
     * tail per shard). Fixture scaffolding only, like wetStaged.
     */
   private[graft] def warcResponseStaged(s: SparkSession, d: String): String =
-    Tables.stagedDir(wetMemo, s"warc#$d#${Tables.datasetFingerprint(d)}") { () =>
+    Staged.dir(s, "warc", d) {
       val dir = Tables.scratchDir("graft_warc", d)
       val root = new java.io.File(dir)
       if (root.exists()) Option(root.listFiles()).toSeq.flatten.foreach(_.delete())
@@ -1276,15 +1275,12 @@ object Sources {
     }
   }
 
-  private val zorderMemo = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def zorderStoreDir(s: SparkSession, d: String,
       clustered: Boolean): String = {
-    // staging memoized per dataset fingerprint like the bucketed/IVF
-    // stores (r11 verdict item 7: the committed line rewrote the whole
-    // z-ordered store on every call) — a rerun pays only the box query
-    Tables.stagedDir(zorderMemo,
-      s"z$clustered#$d#${Tables.datasetFingerprint(d)}") { () =>
+    // staged once like the bucketed/IVF stores (r11 verdict item 7: the
+    // committed line rewrote the whole z-ordered store on every call) —
+    // a rerun pays only the box query
+    Staged.dir(s, "zorder_store", d, clustered) {
       val dir = Tables.scratchDir(if (clustered) "graft_src22_z" else "graft_src22_lin", d)
       val ev = events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"), to_date(col("ts")).as("day"))
@@ -1399,11 +1395,8 @@ object Sources {
     * raw events (a wrong string skip breaks the hash); the spec pins
     * the executed scan's numFiles to the manifest's survivor count.
     */
-  private val typedStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def typeClusteredStoreDir(s: SparkSession, d: String): String =
-    Tables.stagedDir(typedStoreMemo,
-      s"typed#$d#${Tables.datasetFingerprint(d)}") { () =>
+    Staged.dir(s, "typed_store", d) {
       val dir = Tables.scratchDir("graft_src27_typed", d)
       events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"), to_date(col("ts")).as("day"))
@@ -1538,10 +1531,8 @@ object Sources {
     * events; per-generation file pruning is spec-pinned from executed
     * scan metrics.
     */
-  private val evoMemo = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def evolvedStoreDir(s: SparkSession, d: String): String =
-    Tables.stagedDir(evoMemo, s"evo#$d#${Tables.datasetFingerprint(d)}") { () =>
+    Staged.dir(s, "evolved_store", d) {
       val dir = Tables.scratchDir("graft_evo_store", d)
       val ev = Tables.events(s, d).select(col("event_id"), col("ts"),
         col("user_id"), col("value"), col("event_type"),

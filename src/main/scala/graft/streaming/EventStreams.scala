@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
+import graft.engine.Staged
 
 /** Structured Streaming over the events table.
   *
@@ -27,20 +28,8 @@ object EventStreams {
     * and shared by every streaming query — the replay input is identical,
     * so re-materializing it per query was pure waste.
     */
-  /** Atomic once-per-key memoization. `TrieMap.getOrElseUpdate` evaluates
-    * the thunk OUTSIDE the map's synchronization, so two concurrent
-    * callers could both rmrf-and-restage the same directory (corrupting
-    * whichever streaming query lost the race); `computeIfAbsent` holds the
-    * bin lock for the duration of the computation, so exactly one caller
-    * stages and the rest block until it is done.
-    */
-  private def memo[V](m: java.util.concurrent.ConcurrentHashMap[String, V])(
-      k: String)(f: => V): V =
-    m.computeIfAbsent(k, _ => f)
-
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]
   private def stageDir(s: SparkSession, d: String): String =
-    memo(staged)(d) {
+    Staged.dir(s, "stream_events", d) {
       val dir = Tables.scratchDir("graft_stream", d)
       Tables.events(s, d).write.mode("overwrite").parquet(dir)
       dir
@@ -400,10 +389,8 @@ object EventStreams {
     * numRowsDroppedByWatermark metric (partial-row granularity) and
     * the exact dropped set.
     */
-  private val lateSliced = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def lateArrivalDir(s: SparkSession, d: String): String =
-    memo(lateSliced)(d) {
+    Staged.dir(s, "st26_slices", d) {
       val dir = Tables.scratchDir("graft_st26_src", d)
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -477,9 +464,8 @@ object EventStreams {
     * maxFilesPerTrigger yields a genuine multi-batch replay with state
     * carried across micro-batches.
     */
-  private val stagedDocs = new java.util.concurrent.ConcurrentHashMap[String, String]
   private def docsDir(s: SparkSession, d: String): String =
-    memo(stagedDocs)(d) {
+    Staged.dir(s, "stream_docs", d) {
       val dir = Tables.scratchDir("graft_stream_docs", d)
       Tables.documents(s, d).select("doc_id", "text")
         .repartition(8)
@@ -949,10 +935,8 @@ object EventStreams {
 
   private[graft] val backfillFiles = 8
 
-  private val backfillStaged = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private def backfillSrc(s: SparkSession, d: String): String =
-    memo(backfillStaged)(d) {
+    Staged.dir(s, "backfill", d) {
       val dir = Tables.scratchDir("graft_backfill", d)
       Tables.events(s, d).repartition(backfillFiles)
         .write.mode("overwrite").parquet(dir)
@@ -967,10 +951,8 @@ object EventStreams {
     * partitions untouched; the hash staging above would make every batch
     * touch every day and prove nothing about write locality.
     */
-  private val rangeStaged = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   private[graft] def rangeSrc(s: SparkSession, d: String): String =
-    memo(rangeStaged)(d) {
+    Staged.dir(s, "backfill_range", d) {
       phased("rangeSrc.stage") {
         val dir = Tables.scratchDir("graft_backfill_range", d)
         Tables.events(s, d)
@@ -1046,10 +1028,8 @@ object EventStreams {
   /** One sink run per (dataset, session); the spec calls
     * [[fileSinkRunAgain]] to prove the second run is a no-op.
     */
-  private val fileSinkDone =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
   private[graft] def fileSinkRun(s: SparkSession, d: String): (String, String) =
-    memo(fileSinkDone)(d) {
+    Staged.value(s, "st11_sink", d) {
       val out = Tables.scratchDir("graft_st11_sink", d)
       val ckpt = Tables.scratchDir("graft_st11_ckpt", d)
       // a stale half-state (sink without its checkpoint, or vice versa)
@@ -1326,13 +1306,10 @@ object EventStreams {
     * first replay, snapshot after second) so the spec can pin the
     * second delivery as a byte-level no-op.
     */
-  private val ingestDone = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[Long], Map[String, Seq[(String, Long, Long)]],
-      Map[String, Seq[(String, Long, Long)]])]
   private[graft] def ingestLedgerRun(s: SparkSession, d: String)
       : (String, Seq[Long], Map[String, Seq[(String, Long, Long)]],
         Map[String, Seq[(String, Long, Long)]]) =
-    memo(ingestDone)(d) {
+    Staged.value(s, "st15_ledger", d) {
       import org.apache.spark.sql.streaming.Trigger
       val ledger = Tables.scratchDir("graft_st15_ledger", d)
       val fs = new org.apache.hadoop.fs.Path(ledger)
