@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
-import graft.engine.Staged
+import graft.engine.{Publish, Staged}
 
 /** Mutation-shaped operators a warehouse user expects from an engine:
   * MERGE-style upsert (update-matched + insert-unmatched in one pass) and
@@ -159,19 +159,19 @@ object Mutations {
       .orderBy("event_id")
   }
 
-  /** up6 — dynamic partition overwrite: rewrite ONLY the partitions the
-    * incoming batch touches, leave every other partition's files alone —
+  /** up6 — partition restatement: rewrite ONLY the partitions the
+    * incoming batch restates, leave every other partition's files alone —
     * the lakehouse reprocessing primitive (backfill one day, restate one
     * source) that plain `mode(overwrite)` gets catastrophically wrong by
     * truncating the whole table. Staged: events written partitioned by
-    * event_type; a corrected 'click' batch (values doubled) overwrites
-    * under `partitionOverwriteMode=dynamic`; the audit agg over the
-    * resulting table must show exactly one partition restated and the
-    * rest byte-identical — which is the oracle, recomputed from the raw
-    * table with a CASE. At 100 TB the write cost is proportional to the
-    * restated partition, not the table, and readers of other partitions
-    * never see a hole (per-partition commit is atomic at the file-listing
-    * level).
+    * event_type; a corrected 'click' batch (values doubled) replaces the
+    * `event_type=click` partition through [[graft.engine.Publish]]; the
+    * audit agg over the resulting table must show exactly one partition
+    * restated and the rest byte-identical — which is the oracle,
+    * recomputed from the raw table with a CASE. At 100 TB the write cost
+    * is proportional to the restated partition, not the table, and
+    * readers never see a hole: the old partition moves aside before the
+    * staged one renames in, and is deleted only after.
     */
   def dynamicPartitionOverwrite(s: SparkSession, d: String): DataFrame = {
     val dir = Tables.scratchDir("graft_up6_dpo", d)
@@ -180,8 +180,7 @@ object Mutations {
     ev.write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val restated = ev.filter(col("event_type") === "click")
       .withColumn("value", col("value") * 2.0)
-    restated.write.partitionBy("event_type").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(dir)
+    Publish.partitions(s, dir, "event_type", restated, Seq("click"))
     s.read.parquet(dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
@@ -193,9 +192,10 @@ object Mutations {
     * store and proves the physics — the GDPR/CCPA delete job every
     * lakehouse runs. Touched days come from the STORE itself (a
     * forgotten user's rows pin the partitions that must change); the
-    * remainder of exactly those days rewrites under dynamic partition
-    * overwrite (up6's primitive), so write cost ∝ affected partitions
-    * and untouched day dirs stay byte-identical (spec-pinned, with the
+    * remainder of exactly those days replaces them through
+    * [[graft.engine.Publish]] (up6's primitive), so write cost ∝ affected
+    * partitions, a touched day with no remainder row is removed, and
+    * untouched day dirs stay byte-identical (spec-pinned, with the
     * forgotten users provably absent from the post-store). Deriving
     * touched days from the store — not the request — makes the job
     * IDEMPOTENT for free: a re-run finds no forgotten rows, restates
@@ -223,32 +223,14 @@ object Mutations {
 
   private[graft] def forgetRestate(s: SparkSession, dir: String): Long = {
     val store = s.read.parquet(dir)
-    val touched = store.filter(forgetPred).select("day").distinct().cache()
-    val nTouched = touched.count() // calendar-bounded
-    if (nTouched > 0) {
-      val remainder = store.join(broadcast(touched), Seq("day"), "left_semi")
-        .filter(!forgetPred)
+    val touched = store.filter(forgetPred).select("day").distinct()
+      .collect().map(_.getDate(0)) // calendar-bounded
+    if (touched.nonEmpty) {
+      val remainder = store.filter(col("day").isin(touched.toSeq: _*) && !forgetPred)
         .select("event_id", "user_id", "event_type", "value", "day")
-      // A touched day whose EVERY row is forgotten leaves no remainder row,
-      // so dynamic overwrite would never rewrite that partition and the
-      // forgotten rows would physically survive. Collect those days
-      // (calendar-bounded) before the write and drop their partition dirs
-      // explicitly afterwards.
-      val emptied = touched
-        .join(remainder.select("day").distinct(), Seq("day"), "left_anti")
-        .collect().map(_.getDate(0).toString)
-      remainder.write.partitionBy("day").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(dir)
-      if (emptied.nonEmpty) {
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        emptied.foreach { day =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"day=$day"), true)
-        }
-      }
+      Publish.partitions(s, dir, "day", remainder, touched.map(_.toString).toSeq)
     }
-    touched.unpersist(blocking = false)
-    nTouched
+    touched.length
   }
 
   def forgetRestatement(s: SparkSession, d: String): DataFrame = {
@@ -304,8 +286,8 @@ object Mutations {
     * bucketed by (custkey, then orderkey) — the deleted-orders key set
     * flows as a dataflow edge, never through the driver — and the
     * cleansed tables are the same joins as anti; at 100 TB this pairs
-    * with up6's dynamic partition overwrite to rewrite only partitions
-    * containing matched rows.
+    * with up6's partition publish to rewrite only partitions containing
+    * matched rows.
     */
   def erasurePropagation(s: SparkSession, d: String): DataFrame = {
     val c = customer(s, d)
@@ -383,8 +365,8 @@ object Mutations {
     * odd days arrive as one file per `event_id % 8` slice (the shape st24/
     * p16-style micro-batch appends leave behind), even days are already
     * compact — then the compactor lists partition dirs, finds days whose
-    * file count exceeds the target, and rewrites ONLY those days under
-    * dynamic partition overwrite (up6's primitive), one task per day, one
+    * file count exceeds the target, and rewrites ONLY those days through
+    * [[graft.engine.Publish]] (up6's primitive), one task per day, one
     * file per day. Partition pruning makes the rewrite read ∝ fragmented
     * data, never the table; untouched days stay byte-identical and a
     * re-run is a no-op (both spec-pinned) — at 100 TB this is the nightly
@@ -421,26 +403,28 @@ object Mutations {
     dir
   }
 
-  /** One compaction pass: returns (day, files_before) for every partition
+  /** One compaction pass over a `day`-partitioned store (up11, and st12/
+    * st14's merge store): rewrite, as one file each, every day with more
+    * than `maxFiles` data files. Returns (day, files_before) for every day
     * it rewrote; empty when nothing exceeds the target (the no-op re-run).
+    * The listing decides, not a table scan, and the read is pruned to the
+    * rewritten days.
     */
   private[graft] def compactRun(s: SparkSession, dir: String,
-      targetFiles: Int = 1): Map[String, Int] = {
+      maxFiles: Int = 1): Map[String, Int] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val frag = fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith("day="))
       .map(p => p.getName.stripPrefix("day=") ->
         fs.listStatus(p).count(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-      .filter(_._2 > targetFiles).toMap // calendar-bounded
-    if (frag.nonEmpty) {
-      val days = frag.keys.map(java.sql.Date.valueOf).toSeq
-      // partition pruning keeps the read ∝ fragmented days only
+      .filter(_._2 > maxFiles).toMap // calendar-bounded
+    if (frag.nonEmpty) withConf(s)(noPartitionInference) {
+      val days = frag.keys.toSeq.sorted
       val rewrite = s.read.parquet(dir)
         .filter(col("day").isin(days: _*))
-        .repartition(col("day"))
-      rewrite.write.partitionBy("day").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(dir)
+        .repartition(col("day")) // one task per day → one file per day
+      Publish.partitions(s, dir, "day", rewrite, days)
     }
     frag
   }
@@ -495,11 +479,13 @@ object Mutations {
 
   /** One OCC writer over the day-partitioned store at `dir`. `stage()`
     * reads ONLY its touched day partitions from the current store and
-    * writes the transformed replacement to a private staging dir;
-    * `commit()` runs the conflict check against versions committed
-    * since `base`, re-staging on overlap, then atomically claims the
-    * next version file and publishes the staging via dynamic partition
-    * overwrite.
+    * writes the transformed replacement, partitioned by day, to a private
+    * staging dir (on `dir`'s filesystem); `commit()` runs the conflict
+    * check against versions committed since `base`, re-staging on
+    * overlap, then claims the next version through
+    * [[graft.engine.Publish.claim]] and renames the staged days in with
+    * [[graft.engine.Publish.swap]] — a touched day the transform emptied
+    * is removed. Only a lost claim retries; any other failure propagates.
     */
   private[graft] final class OccWriter(s: SparkSession, dir: String,
       staging: String, base: Int, touched: Seq[String],
@@ -510,13 +496,9 @@ object Mutations {
 
     def stage(): Unit = {
       stagings += 1
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
       val cur = s.read.parquet(dir)
         .filter(col("day").isin(touched: _*)) // partition-pruned read
-      // localCheckpoint: the staged rows must be MATERIALIZED before the
-      // publish overwrites the partitions they were computed from
-      transform(cur).localCheckpoint(true)
-        .write.mode("overwrite").parquet(staging)
+      transform(cur).write.partitionBy("day").mode("overwrite").parquet(staging)
     }
 
     def commit(): OccResult = {
@@ -535,13 +517,11 @@ object Mutations {
         } else {
           if (newer.nonEmpty) rebased = true
           val target = committed.map(_._1).max + 1
-          if (occTryClaim(fs, dir, target, touched)) {
-            withConf(s)(noPartitionInference) {
-              s.read.parquet(staging)
-                .write.partitionBy("day").mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic").parquet(dir)
-              s.catalog.refreshByPath(dir) // drop cached file listings
-            }
+          val won =
+            try { Publish.claim(s, s"$dir/_log", target, touched.mkString("\n")); true }
+            catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+          if (won) {
+            Publish.swap(s, dir, "day", staging, touched)
             return OccResult(target, attempts, stagings, rebased)
           }
           // lost the claim race: loop re-checks conflicts at the new head
@@ -566,23 +546,6 @@ object Mutations {
       }.sortBy(_._1)
   }
 
-  /** Atomic exclusive claim of version `v`: create-if-absent of the
-    * version file (the filesystem primitive every log-structured table
-    * format serializes on), then write the touched-partition list.
-    */
-  private def occTryClaim(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      v: Int, touched: Seq[String]): Boolean = {
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    fs.mkdirs(log)
-    val p = new org.apache.hadoop.fs.Path(log, s"v$v.txt")
-    try {
-      val out = fs.create(p, false) // overwrite=false: exclusive create
-      try out.write(touched.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-  }
-
   private[graft] def occStoreDir(s: SparkSession, d: String): String = {
     val dir = Tables.scratchDir("graft_up12_store", d)
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -594,7 +557,7 @@ object Mutations {
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
       .repartition(col("day"))
       .write.partitionBy("day").mode("overwrite").parquet(dir)
-    occTryClaim(fs, dir, 0, Seq.empty) // v0: the staged base snapshot
+    Publish.claim(s, s"$dir/_log", 0, "") // v0: the staged base snapshot
     dir
   }
 
@@ -697,23 +660,6 @@ object Mutations {
     out.toSeq.sorted
   }
 
-  /** Append log entry `v`: `a <path>` adds and `r <path>` removes.
-    * The publish is ATOMIC-WITH-CONTENT: the body is fully written to a
-    * private tmp file, then hard-linked into place — POSIX `link(2)`
-    * fails with EEXIST if the version is already claimed and makes the
-    * COMPLETE body visible in one syscall, so a concurrent reader (the
-    * idempotent-append txn probe, a snapshot resolution) can never
-    * observe a half-written commit. A bare exclusive create + write had
-    * exactly that window, and the two-writer race spec hit it: the
-    * loser's probe read the winner's just-created empty file and
-    * double-committed. (Production analogue: HDFS rename-no-replace /
-    * S3 conditional PUT — the same claim-with-content primitive.) A
-    * lost claim surfaces as hadoop's FileAlreadyExistsException — the
-    * retry signal ttIdempotentAppend keys on.
-    * Every `ttCheckpointInterval`-th commit also writes a CHECKPOINT
-    * manifest (up19), so snapshot resolution never replays more than
-    * one interval's worth of commit files.
-    */
   /** The deterministic commit clock: version v → 2024-06-01T00:00Z + v
     * hours. Injectable by design (pass `tsMs` to ttCommit) — production
     * writers stamp wall-clock time; the declared scenarios use this
@@ -776,12 +722,21 @@ object Mutations {
       .sorted
   }
 
+  /** Append log entry `v`: `a <path>` adds and `r <path>` removes,
+    * claimed through [[graft.engine.Publish.claim]]: the COMPLETE body
+    * appears in one step, so a concurrent reader (the idempotent-append
+    * txn probe, a snapshot resolution) never observes a half-written
+    * commit. A bare exclusive create + write had exactly that window, and
+    * the two-writer race spec hit it: the loser's probe read the winner's
+    * just-created empty file and double-committed. A lost claim surfaces
+    * as hadoop's FileAlreadyExistsException — the retry signal
+    * ttIdempotentAppend keys on. Every `ttCheckpointInterval`-th commit
+    * also writes a CHECKPOINT manifest (up19), so snapshot resolution
+    * never replays more than one interval's worth of commit files.
+    */
   private def ttCommit(s: SparkSession, dir: String, v: Int,
       adds: Seq[String], removes: Seq[String],
       meta: Seq[String] = Nil, tsMs: Long = -1L): Unit = {
-    val fs = ttFs(s, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    fs.mkdirs(log)
     // CHECK constraints (src42) are enforced HERE, in the one commit
     // path every write verb funnels through — Delta's invariant rule:
     // validation on every commit that adds data rows, not per frontend.
@@ -799,45 +754,7 @@ object Mutations {
       ttAddStats(s, dir, adds, canReAdd).map("# " + _) ++
       adds.sorted.map("a " + _) ++ removes.sorted.map("r " + _))
       .mkString("\n")
-    val scheme = Option(log.toUri.getScheme)
-      .getOrElse(fs.getUri.getScheme)
-    if (scheme == "file") {
-      // local FS: POSIX link(2) is claim-with-content — EEXIST if the
-      // version is taken, the COMPLETE body visible in one syscall. Any
-      // OTHER link failure (e.g. a filesystem without hard links) must
-      // not leak the tmp file, so cleanup rides a finally and only the
-      // EEXIST case maps to the OCC retry signal.
-      val logPath = log.toUri.getPath
-      val tmp = java.nio.file.Paths.get(logPath,
-        s".v$v.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-      try java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(logPath, s"v$v.txt"), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-            s"version $v already committed under $dir/_log")
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    } else {
-      // non-local FS: write the full body to a private tmp, then
-      // rename-no-replace (HDFS rename refuses an existing destination;
-      // the object-store analogue is a conditional PUT). The rename is
-      // atomic-with-content on HDFS; a lost claim surfaces as the same
-      // FileAlreadyExistsException the retry loops key on.
-      val tmp = new org.apache.hadoop.fs.Path(log,
-        s".v$v.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      val dst = new org.apache.hadoop.fs.Path(log, s"v$v.txt")
-      val won = try fs.rename(tmp, dst) catch {
-        case e: Throwable => fs.delete(tmp, false); throw e
-      }
-      if (!won) {
-        fs.delete(tmp, false)
-        throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-          s"version $v already committed under $dir/_log")
-      }
-    }
+    Publish.claim(s, s"$dir/_log", v, body)
     if (v > 0 && v % ttCheckpointInterval == 0) ttWriteCheckpoint(s, dir, v)
   }
 
@@ -886,8 +803,8 @@ object Mutations {
     *
     * OCC retry/rebase (up27): the probe-then-commit pair is made
     * atomic by ORDER, not by a lock — the txn probe covers every
-    * version committed at probe time, and the exclusive create of
-    * head+1 fails if ANY commit (including a concurrent duplicate of
+    * version committed at probe time, and the claim of head+1
+    * fails if ANY commit (including a concurrent duplicate of
     * this very txn) landed after the probe; a lost race therefore
     * re-resolves the head, RE-RUNS the probe against the log that
     * actually won, and retries — Delta's conflict-check-then-retry
@@ -1566,16 +1483,6 @@ object Mutations {
     ttCommit(s, dir, v,
       ttWriteBatch(s, dir, sub, rewritten.repartition(col("day"))),
       (bearing ++ dvF).sorted, meta = Seq("op=optimize"))
-  }
-
-  /** The up20 scenario: the 4-version COW store + v4 DV delete of the
-    * `event_id % 23 == 0` rows (scattered across every day — the COW
-    * worst case) + v5 compaction materializing the DVs.
-    */
-  private[graft] def ttDvStore(s: SparkSession, d: String): String = {
-    val dir = ttStore(s, d)
-    ttBuildDvSuffix(s, dir)
-    dir
   }
 
   /** The DV-delete + compaction suffix over an existing 4-version store. */
@@ -2495,15 +2402,6 @@ object Mutations {
     val t = ttLiveFiles(s, dir, to).toSet
     ((t -- f).toSeq.sorted, (f -- t).toSeq.sorted)
   }
-
-  /** Resolve a log path to an absolute one: paths are RELATIVE to the
-    * table dir except SHALLOW-CLONE (up23) externals, which are logged
-    * absolute (they live in the SOURCE table's tree) — the Delta
-    * shallow-clone rule: the clone's log references the source's
-    * immutable files until the clone's own commits supersede them.
-    */
-  private def ttAbs(dir: String, f: String): String =
-    if (f.startsWith("/")) f else s"$dir/$f"
 
   /** Snapshot-style read of an explicit file list (day recovered via
     * basePath, inference off — ttAsOf's discipline, factored for reads

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
-import graft.engine.Staged
+import graft.engine.{Publish, Staged}
 
 /** Structured Streaming over the events table.
   *
@@ -1074,16 +1074,15 @@ object EventStreams {
     * (hour, event_type) rows whose aggregate CHANGED, and `foreachBatch`
     * merges them via up6's primitive — read ONLY the day partitions the
     * batch touches (partition-pruned scan), anti-join out the replaced
-    * keys, union the batch, and write back under
-    * `partitionOverwriteMode=dynamic` so Spark's commit protocol swaps
-    * exactly those partitions. Per-batch read AND write cost is ∝
+    * keys, union the batch, and replace exactly those partitions through
+    * [[graft.engine.Publish]]. Per-batch read AND write cost is ∝
     * partitions containing changed keys, not store size — the property
     * st7's complete-snapshot overwrite lacks — and day partitions outside
     * the batch keep byte-identical files (pinned in EventStreamsSpec:
-    * same names, lengths, mtimes across the batch). Publication is the
-    * file-committer's per-partition swap, so no reader ever observes a
-    * missing store (the previous delete-then-rename had a crash window
-    * with NO published table). Input is the time-range staging
+    * same names, lengths, mtimes across the batch). The merge is staged
+    * under the store before any day moves, and each old day moves aside
+    * before its new one renames in, so a reader or a failed batch never
+    * finds a day missing. Input is the time-range staging
     * ([[rangeSrc]]) so micro-batches arrive like a real backlog drain and
     * the locality claim is exercised, not vacuous. The watermark is sized
     * far above the replay's disorder so no window state is evicted
@@ -1157,14 +1156,8 @@ object EventStreams {
                     Seq("hour", "event_type"), "left_anti")
                   .unionByName(b)
               } else b
-            // materialize before the write: breaks lineage from the target
-            // path (Spark refuses to overwrite a path it is reading) at the
-            // cost of caching only the AFFECTED partitions' rows
-            val mat = phased("st12.batch.merge+ckpt")(merged.localCheckpoint(true))
-            phased("st12.batch.overwrite") {
-              mat.write.partitionBy("day").mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic").parquet(target)
-            }
+            phased("st12.batch.publish")(
+              Publish.partitions(sp, target, "day", merged, days.toSeq))
           }
           b.unpersist()
           batchNo += 1
@@ -1172,7 +1165,8 @@ object EventStreams {
           // files the merges have accumulated back to one per partition —
           // the in-stream half of the st14 composition
           if (compactEvery > 0 && batchNo % compactEvery == 0)
-            phased("st12.batch.compact")(compactStore(sp, target, maxFiles = 1))
+            phased("st12.batch.compact")(
+              graft.ops.Mutations.compactRun(sp, target, maxFiles = 1))
           onBatch(days, phased("st12.batch.snapshot")(
             partitionSnapshot(fs, target)))
         }
@@ -1188,9 +1182,9 @@ object EventStreams {
     * src10 compacts its way out of — this operator composes the two
     * INSIDE the stream. The replay runs ≥8 micro-batches (one file per
     * trigger) and every 3rd batch folds crowded day partitions back to
-    * one file via the same dynamic-partition-overwrite primitive the
-    * merge uses, so the per-partition file count stays BOUNDED for the
-    * stream's whole life (spec-pinned across every batch snapshot), not
+    * one file with up11's compactor (published, like the merge, through
+    * [[graft.engine.Publish]]), so the per-partition file count stays
+    * BOUNDED for the stream's whole life (spec-pinned across every batch snapshot), not
     * just at the end; a final pass leaves each partition at one file.
     * Partitions already compact are never touched (the decision is a
     * metadata listing, no data read — src10's discipline). Compaction
@@ -1204,40 +1198,15 @@ object EventStreams {
     val src = phased("st14.rangeSrc")(rangeSrc(s, d))
     phased("st14.stream")(runUpdateMerge(s, d, src, target,
       filesPerTrigger = 1, compactEvery = 3))
-    phased("st14.finalCompact")(compactStore(s, target, maxFiles = 1))
+    phased("st14.finalCompact")(graft.ops.Mutations.compactRun(s, target, maxFiles = 1))
     s.read.parquet(target)
       .select("hour", "event_type", "n", "sum_value")
       .orderBy("hour", "event_type")
   }
 
-  /** Rewrite (as one file each) every day partition with more than
-    * `maxFiles` data files; leave the rest untouched. Returns the names
-    * of the partitions compacted. Cost ∝ the data under the compacted
-    * partitions — the listing decides, not a table scan.
-    */
-  private[graft] def compactStore(s: SparkSession, target: String,
-      maxFiles: Int): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val crowded = partitionSnapshot(fs, target)
-      .filter(_._2.length > maxFiles).keys.toSeq.sorted
-    if (crowded.nonEmpty) {
-      val days = crowded.map(_.stripPrefix("day="))
-      withConf(s)(noPartitionInference) {
-        s.read.parquet(target)
-          .filter(col("day").isin(days: _*)) // partition-pruned read
-          .repartition(col("day")) // one task per day → one file per day
-          .localCheckpoint(true) // break lineage from the overwritten path
-          .write.partitionBy("day").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").parquet(target)
-      }
-    }
-    crowded
-  }
-
   /** (partition dir name → sorted (file, length, mtime)) for every day
-    * partition under `target`. Dynamic partition overwrite writes fresh
-    * UUID-named files into every partition it restates, so identical
+    * partition under `target`. A publish writes fresh UUID-named files
+    * into every partition it restates, so identical
     * names+lengths+mtimes across a batch prove the partition's files were
     * not touched at all — stronger than a content hash, which could not
     * distinguish "left alone" from "rewritten identically".
@@ -1437,7 +1406,7 @@ object EventStreams {
     * resulting store is time-travelable per micro-batch, CDF-tailable
     * (st28), and checkpoint-bounded (up19). At 100 TB this is the
     * streaming-ingest front door a lakehouse table needs: micro-batch
-    * commits serialized by the log's exclusive create, retries
+    * commits serialized by the log's version claim, retries
     * de-duplicated by txn marker, no lock service.
     */
   def streamingTtSink(s: SparkSession, d: String): DataFrame = {

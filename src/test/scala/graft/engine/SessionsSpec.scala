@@ -91,7 +91,7 @@ class SessionsSpec extends SparkSpec {
       finallyClauses(src).filter(c => confWrite.findFirstIn(c).isDefined)
         .map(c => s"$p: conf restored in a finally (use Sessions.withConf): ${c.linesIterator.next()}") ++
         modeOnSession.findFirstIn(src)
-          .map(_ => s"$p: partitionOverwriteMode set on the session (use the writer option)")
+          .map(_ => s"$p: partitionOverwriteMode set on the session (use graft.engine.Publish)")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

@@ -550,7 +550,7 @@ class EventStreamsSpec extends SparkSpec {
     val before = EventStreams.partitionSnapshot(
       org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
       target)
-    EventStreams.compactStore(spark, target, maxFiles = 1)
+    graft.ops.Mutations.compactRun(spark, target, maxFiles = 1)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
     val after = EventStreams.partitionSnapshot(fs, target)
