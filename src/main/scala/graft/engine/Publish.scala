@@ -89,8 +89,8 @@ object Publish {
     val logPath = new Path(log)
     val fs = logPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(logPath)
-    val name = s"v$v.txt"
-    val tmpName = s".v$v.${UUID.randomUUID.toString.take(8)}.tmp"
+    val name = graft.sources.TtLog.commitName(v)
+    val tmpName = s".$name.${UUID.randomUUID.toString.take(8)}.tmp"
     def lost = new FileAlreadyExistsException(s"version $v already committed under $log")
     if (Option(logPath.toUri.getScheme).getOrElse(fs.getUri.getScheme) == "file") {
       val local = java.nio.file.Paths.get(logPath.toUri.getPath)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
 import graft.engine.{Publish, Staged}
+import graft.sources.TtLog
 
 /** Mutation-shaped operators a warehouse user expects from an engine:
   * MERGE-style upsert (update-matched + insert-unmatched in one pass) and
@@ -490,8 +491,6 @@ object Mutations {
   private[graft] final class OccWriter(s: SparkSession, dir: String,
       staging: String, base: Int, touched: Seq[String],
       transform: DataFrame => DataFrame) {
-    private val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     var stagings = 0
 
     def stage(): Unit = {
@@ -507,7 +506,7 @@ object Mutations {
       var rebased = false
       while (true) {
         attempts += 1
-        val committed = occVersions(fs, dir)
+        val committed = occVersions(s, dir)
         val newer = committed.filter(_._1 > myBase)
         if (newer.exists(_._2.intersect(touched.toSet).nonEmpty)) {
           // an overlapping commit landed since our snapshot: our staged
@@ -518,7 +517,7 @@ object Mutations {
           if (newer.nonEmpty) rebased = true
           val target = committed.map(_._1).max + 1
           val won =
-            try { Publish.claim(s, s"$dir/_log", target, touched.mkString("\n")); true }
+            try { Publish.claim(s, TtLog.dir(dir), target, touched.mkString("\n")); true }
             catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
           if (won) {
             Publish.swap(s, dir, "day", staging, touched)
@@ -531,19 +530,10 @@ object Mutations {
     }
   }
 
-  /** Committed (version, touched-partitions) entries under `dir/_log`. */
-  private def occVersions(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[(Int, Set[String])] = {
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    if (!fs.exists(log)) Seq.empty
-    else fs.listStatus(log).toSeq.filter(_.getPath.getName.startsWith("v"))
-      .map { st =>
-        val v = st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toInt
-        val in = fs.open(st.getPath)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        v -> body.split("\n").filter(_.nonEmpty).toSet
-      }.sortBy(_._1)
+  /** Committed (version, touched-partitions) entries in `dir`'s log. */
+  private def occVersions(s: SparkSession, dir: String): Seq[(Int, Set[String])] = {
+    val log = TtLog.list(s, dir)
+    log.commits.keys.toSeq.map(v => v -> log.lines(v).toSet)
   }
 
   private[graft] def occStoreDir(s: SparkSession, d: String): String = {
@@ -557,7 +547,7 @@ object Mutations {
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
       .repartition(col("day"))
       .write.partitionBy("day").mode("overwrite").parquet(dir)
-    Publish.claim(s, s"$dir/_log", 0, "") // v0: the staged base snapshot
+    Publish.claim(s, TtLog.dir(dir), 0, "") // v0: the staged base snapshot
     dir
   }
 
@@ -678,7 +668,7 @@ object Mutations {
     * stores carry no stat lines.
     */
   private def ttAddStats(s: SparkSession, dir: String,
-      adds: Seq[String], canReAdd: Boolean): Seq[String] = {
+      adds: Seq[String], canReAdd: Boolean): Seq[(String, TtStat)] = {
     val data = adds.filterNot(ttIsDv)
     if (data.isEmpty) return Nil
     // a RE-add (up22's restore) re-publishes files the log already
@@ -691,17 +681,9 @@ object Mutations {
     // lifetime, exactly the unbounded-resolution shape the checkpoint
     // tier exists to kill. Restore itself stays O(commits) and rare.
     val known: Map[String, TtStat] = if (!canReAdd) Map.empty else {
-      val fs = ttFs(s, dir)
-      val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-      if (!fs.exists(log)) Map.empty
-      else fs.listStatus(log).toSeq
-        .filter(_.getPath.getName.matches("v\\d+\\.txt"))
-        .flatMap { st =>
-          val in = fs.open(st.getPath)
-          val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          body.split("\n").filter(_.startsWith("# stat=")).flatMap(ttParseStat)
-        }.toMap
+      val log = TtLog.list(s, dir)
+      log.commits.keys.toSeq.flatMap(log.entries)
+        .collect { case TtLog.Stat(f, st) => f -> st }.toMap
     }
     val (have, need) = data.partition(known.contains)
     val scanned: Seq[(String, TtStat)] =
@@ -717,9 +699,7 @@ object Mutations {
           .map(r => (r.getString(0), TtStat(r.getLong(1), r.getLong(2), r.getLong(3))))
           .toSeq
       }
-    (have.map(f => f -> known(f)) ++ scanned)
-      .map { case (f, st) => s"stat=$f|${st.numRows}|${st.lo}|${st.hi}" }
-      .sorted
+    have.map(f => f -> known(f)) ++ scanned
   }
 
   /** Append log entry `v`: `a <path>` adds and `r <path>` removes,
@@ -745,28 +725,13 @@ object Mutations {
     // re-resolves and re-validates against the constraint set of the
     // version it actually targets.
     ttEnforceConstraints(s, dir, v, adds, meta)
-    // `# key=value` metadata lines (st31's txn markers, the commit
-    // timestamp, per-file stats) ride the commit file; every action
-    // parser keys on the `a `/`r ` prefixes and ignores them
+    // metadata (the commit timestamp, st31's txn markers, per-file
+    // stats) rides the commit body, in TtLog's grammar
     val ts = if (tsMs >= 0) tsMs else ttClockMs(v)
     val canReAdd = meta.exists(_.startsWith("op=restore"))
-    val body = ((s"ts=$ts" +: meta).map("# " + _) ++
-      ttAddStats(s, dir, adds, canReAdd).map("# " + _) ++
-      adds.sorted.map("a " + _) ++ removes.sorted.map("r " + _))
-      .mkString("\n")
-    Publish.claim(s, s"$dir/_log", v, body)
+    Publish.claim(s, TtLog.dir(dir), v, TtLog.commitBody(s"ts=$ts" +: meta,
+      ttAddStats(s, dir, adds, canReAdd), adds, removes))
     if (v > 0 && v % ttCheckpointInterval == 0) ttWriteCheckpoint(s, dir, v)
-  }
-
-  /** Newest committed version, or -1 for an uninitialized store. */
-  private[graft] def ttHeadVersion(s: SparkSession, dir: String): Int = {
-    val fs = ttFs(s, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    if (!fs.exists(log)) -1
-    else fs.listStatus(log).map(_.getPath.getName)
-      .filter(_.matches("v\\d+\\.txt"))
-      .map(_.stripPrefix("v").stripSuffix(".txt").toInt)
-      .foldLeft(-1)(math.max)
   }
 
   /** st31 — has a commit carrying `txn` already landed? The
@@ -785,12 +750,9 @@ object Mutations {
   /** [[ttTxnCommitted]] plus the number of log/checkpoint files opened. */
   private[graft] def ttTxnCommittedCounted(s: SparkSession, dir: String,
       txn: String): (Boolean, Int) = {
-    val head = ttHeadVersion(s, dir)
-    if (head < 0) (false, 0)
-    else {
-      val res = ttResolve(s, dir, head)
-      (res.txns.contains(txn), res.opened)
-    }
+    val log = TtLog.list(s, dir)
+    if (log.head < 0) (false, 0)
+    else (log.snapshot(log.head).txns.contains(txn), log.opened)
   }
 
   /** st31 — IDEMPOTENT streaming append: commit `df` as the next
@@ -821,12 +783,12 @@ object Mutations {
     // at a new version — no re-execution (the rebase half of OCC). The
     // txn hash keeps two racing writers' batch names disjoint.
     val adds = ttWriteBatch(s, dir,
-      s"b${ttHeadVersion(s, dir) + 1}x${(txn.hashCode & 0x7fffffff).toHexString}",
+      s"b${TtLog.head(s, dir) + 1}x${(txn.hashCode & 0x7fffffff).toHexString}",
       df.repartition(col("day")))
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val v = ttHeadVersion(s, dir) + 1
+      val v = TtLog.head(s, dir) + 1
       // probe AFTER resolving the head: any commit that lands between
       // this probe and the create occupies v and fails the create
       if (ttTxnCommitted(s, dir, txn)) return false
@@ -869,44 +831,15 @@ object Mutations {
     */
   private[graft] def ttWriteCheckpoint(s: SparkSession, dir: String, v: Int): Unit = {
     val fs = ttFs(s, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_log/ckpt-v$v.parquet")
+    val p = TtLog.checkpointPath(dir, v)
     if (fs.exists(p)) return // idempotent re-write: content is determined by v
-    val res = ttResolve(s, dir, v)
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("file", StringType, false),
-      StructField("numRows", LongType, true), StructField("lo", LongType, true),
-      StructField("hi", LongType, true)))
-    val rows: java.util.List[org.apache.spark.sql.Row] = {
-      val l = new java.util.ArrayList[org.apache.spark.sql.Row](
-        res.live.size + res.schemaOps.size)
-      res.live.foreach { f =>
-        res.stats.get(f) match {
-          case Some(st) => l.add(org.apache.spark.sql.Row(f, st.numRows, st.lo, st.hi))
-          case None     => l.add(org.apache.spark.sql.Row(f, null, null, null))
-        }
-      }
-      // schema-mapping ops fold into the checkpoint so a post-rename
-      // snapshot resolution stays bounded (never a full-log replay just
-      // to learn the logical schema)
-      res.schemaOps.zipWithIndex.foreach { case (op, i) =>
-        l.add(org.apache.spark.sql.Row(s"#schema:$i:$op", null, null, null))
-      }
-      // txn markers fold in too (Delta indexes txnAppId/txnVersion into
-      // checkpoint.parquet for the same reason): the exactly-once probe
-      // resolves from latest-checkpoint + suffix instead of opening
-      // every commit file — O(1 + interval), not O(commits)
-      res.txns.toSeq.sorted.foreach { t =>
-        l.add(org.apache.spark.sql.Row(s"#txn:$t", null, null, null))
-      }
-      // active CHECK constraints (src42) ride along — enforcement reads
-      // them from resolution, never a log replay
-      res.constraints.toSeq.sortBy(_._1).foreach { case (n, e) =>
-        l.add(org.apache.spark.sql.Row(s"#constraint:$n|$e", null, null, null))
-      }
-      l
-    }
-    val staging = s"$dir/_log/.ckpt-v$v.${java.util.UUID.randomUUID.toString.take(8)}.tmp"
-    s.createDataFrame(rows, schema).coalesce(1)
+    // the schema ops, txn markers and CHECK constraints fold in beside the
+    // live files, so a resolution past a rename, the exactly-once probe and
+    // constraint enforcement all stay bounded (Delta indexes txnAppId into
+    // checkpoint.parquet for the same reason)
+    val snap = TtLog.list(s, dir).snapshot(v)
+    val staging = TtLog.checkpointStaging(dir, v)
+    s.createDataFrame(TtLog.checkpointRows(snap), TtLog.checkpointSchema).coalesce(1)
       .write.mode("overwrite").parquet(staging)
     val part = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
       .map(_.getPath).find(_.getName.endsWith(".parquet"))
@@ -917,67 +850,24 @@ object Mutations {
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
 
-  /** Parsed checkpoint content, memoized per (path, mtime, length) — a
-    * checkpoint is immutable once published, but spec fixtures rebuild
-    * stores in place, so the file identity (not just the path) keys the
-    * cache. One small parquet read per store per JVM. Not a
-    * [[graft.engine.Staged]] entry: the key is one file's identity, not
-    * a dataset's content, and the parse sits on the lake verbs' per-call
-    * path where a dataset fingerprint walk would be pure overhead.
-    */
-  private val ckptMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Option[TtStat])]]
-
-  private def ttReadCheckpoint(s: SparkSession, dir: String,
-      cv: Int): Seq[(String, Option[TtStat])] = {
-    val fs = ttFs(s, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_log/ckpt-v$cv.parquet")
-    val st = fs.getFileStatus(p)
-    val key = s"${p.toUri.getPath}:${st.getModificationTime}:${st.getLen}"
-    ckptMemo.computeIfAbsent(key, _ =>
-      s.read.parquet(p.toString).select("file", "numRows", "lo", "hi")
-        .collect().map { r =>
-          val stat = if (r.isNullAt(1)) None
-            else Some(TtStat(r.getLong(1), r.getLong(2), r.getLong(3)))
-          (r.getString(0), stat)
-        }.toSeq)
-  }
-
-  /** The live file set at version `asOf`: seed from the newest checkpoint
-    * ≤ asOf, then replay only the commit entries in (ckpt, asOf] — the
-    * up19 read path (≤ 1 + interval file opens; without a checkpoint,
-    * the full replay the pre-up19 store did).
-    *
-    * Scale note: the set is returned DRIVER-RESIDENT (a Seq[String]),
-    * which is the same cardinality every FileIndex ultimately hands the
-    * scan planner — fine to millions of entries. The step beyond, for
-    * Delta-scale tables whose manifests outgrow driver memory, is to
-    * keep `ckpt-v<N>.parquet` AS A RELATION end to end: join-prune it
-    * against partition/stat predicates in-plan and feed the surviving
-    * file list straight to a custom FileScan, never collecting the full
-    * set (the checkpoint FORMAT here already supports that read — one
-    * columnar file of (file, numRows, lo, hi) rows).
-    */
+  /** The live file set at version `asOf`, through [[ttResolve]]. */
   private[graft] def ttLiveFiles(s: SparkSession, dir: String, asOf: Int): Seq[String] =
-    ttLiveEntriesCounted(s, dir, asOf)._1
+    ttResolve(s, dir, asOf).live
 
-  /** [[ttLiveFiles]] plus the number of log/checkpoint files it opened —
-    * the spec pins resolution cost to ≤ 1 checkpoint + interval commits.
-    */
+  /** [[ttLiveFiles]] plus the number of log/checkpoint files it opened. */
   private[graft] def ttLiveFilesCounted(s: SparkSession, dir: String,
       asOf: Int): (Seq[String], Int) = {
-    val (live, _, opened) = ttLiveEntriesCounted(s, dir, asOf)
-    (live, opened)
+    val r = ttResolve(s, dir, asOf)
+    (r.live, r.opened)
   }
 
-  /** Full resolution: the live set, the per-file commit-time stats
-    * (checkpoint-seeded, suffix-refined), the ORDERED schema-mapping
-    * ops (up26's rename/drop column mapping — Delta's columnMapping:
-    * logical renames/drops are commit metadata, physical files never
-    * change), and the open count. Stats are metadata riders — a file
-    * present without stats (pre-stats store generations) simply
-    * resolves to no entry, and consumers fall back to
-    * scanning/recounting.
+  /** Full resolution: the live set (sorted), the per-file commit-time
+    * stats, the ORDERED schema-mapping ops (up26's rename/drop column
+    * mapping — Delta's columnMapping: logical renames/drops are commit
+    * metadata, physical files never change), the txn markers, the active
+    * CHECK constraints, and the number of log files opened. A file
+    * present without stats (pre-stats store generations) simply resolves
+    * to no entry, and consumers fall back to scanning/recounting.
     */
   private[graft] final case class TtResolution(live: Seq[String],
       stats: Map[String, TtStat], schemaOps: Seq[String], opened: Int,
@@ -989,98 +879,20 @@ object Mutations {
     (r.live, r.stats, r.opened)
   }
 
+  /** The table at version `asOf` as the log states it: one listing, the
+    * newest checkpoint ≤ asOf, then [[graft.sources.TtLog]]'s fold over the
+    * commits after it — ≤ 1 + interval file opens (up19); without a
+    * checkpoint, every commit. The set is driver-resident, the cardinality
+    * every FileIndex hands the planner anyway; [[ttCheckpointRelation]]
+    * serves the same set as a relation for callers that prune it in-plan.
+    */
   private[graft] def ttResolve(s: SparkSession, dir: String,
       asOf: Int): TtResolution = {
-    var opened = 0
-    val fs = ttFs(s, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    val names = fs.listStatus(log).toSeq.map(_.getPath)
-    def readLines(p: org.apache.hadoop.fs.Path): Seq[String] = {
-      opened += 1
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      body.split("\n").filter(_.nonEmpty).toSeq
-    }
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val stats = scala.collection.mutable.Map.empty[String, TtStat]
-    val schemaOps = scala.collection.mutable.ArrayBuffer.empty[String]
-    val txns = scala.collection.mutable.Set.empty[String]
-    val constraints = scala.collection.mutable.Map.empty[String, String]
-    val ckpt = names.map(_.getName).filter(_.matches("ckpt-v\\d+\\.parquet"))
-      .map(_.stripPrefix("ckpt-v").stripSuffix(".parquet").toInt)
-      .filter(_ <= asOf).sorted.lastOption
-    ckpt.foreach { cv =>
-      opened += 1
-      // metadata rows ride the checkpoint beside the live files:
-      // `#schema:<idx>:<op>` (idx preserves application order) and
-      // `#txn:<txn>` (every streaming-txn marker committed ≤ cv, so the
-      // exactly-once probe never replays the full log) — never live files
-      val (metaRows, fileRows) = ttReadCheckpoint(s, dir, cv)
-        .partition(_._1.startsWith("#"))
-      fileRows.foreach { case (f, st) =>
-        live += f
-        st.foreach(stats(f) = _)
-      }
-      metaRows.map(_._1).foreach {
-        case r if r.startsWith("#txn:") => txns += r.stripPrefix("#txn:")
-        case r if r.startsWith("#schema:") => // ordered fold below
-        case r if r.startsWith("#constraint:") =>
-          val body = r.stripPrefix("#constraint:")
-          val i = body.indexOf('|')
-          constraints(body.take(i)) = body.drop(i + 1)
-        case other => sys.error(s"unknown checkpoint metadata row: $other")
-      }
-      metaRows.map(_._1).filter(_.startsWith("#schema:"))
-        .map(_.stripPrefix("#schema:"))
-        .map { r => val i = r.indexOf(':'); (r.take(i).toInt, r.drop(i + 1)) }
-        .sortBy(_._1).foreach(schemaOps += _._2)
-    }
-    val entries = names
-      .filter(_.getName.matches("v\\d+\\.txt"))
-      .map(p => p.getName.stripPrefix("v").stripSuffix(".txt").toInt -> p)
-      .filter { case (v, _) => v > ckpt.getOrElse(-1) && v <= asOf }
-      .sortBy(_._1)
-    entries.foreach { case (_, p) =>
-      readLines(p).foreach { line =>
-        if (line.startsWith("a ")) live += line.drop(2)
-        else if (line.startsWith("r ")) live -= line.drop(2)
-        else if (line.startsWith("# stat=")) ttParseStat(line)
-          .foreach { case (f, st) => stats(f) = st }
-        else if (line.startsWith("# rename=") || line.startsWith("# dropcol=")
-            || line.startsWith("# addcolumn="))
-          schemaOps += line.stripPrefix("# ")
-        else if (line.startsWith("# schemareset="))
-          // a restore rolling back schema state: clear the accumulated
-          // ops — the commit re-declares the target's ops right after
-          // this line, in order
-          schemaOps.clear()
-        else if (line.startsWith("# constraintreset="))
-          // a restore rolling back constraint state: clear the active
-          // set — the commit re-declares the target's constraints right
-          // after this line (the schemareset discipline, applied to the
-          // other half of table metadata Delta's RESTORE rolls back)
-          constraints.clear()
-        else if (line.startsWith("# txn=")) txns += line.stripPrefix("# txn=")
-        else if (line.startsWith("# constraint=")) {
-          val body = line.stripPrefix("# constraint=")
-          val i = body.indexOf('|')
-          constraints(body.take(i)) = body.drop(i + 1)
-        } else if (line.startsWith("# dropconstraint="))
-          constraints -= line.stripPrefix("# dropconstraint=")
-      }
-    }
-    TtResolution(live.toSeq.sorted, stats.toMap, schemaOps.toSeq, opened,
-      txns.toSet, constraints.toMap)
+    val log = TtLog.list(s, dir)
+    val snap = log.snapshot(asOf)
+    TtResolution(snap.live.sorted, snap.stats, snap.schemaOps, log.opened,
+      snap.txns, snap.constraints)
   }
-
-  private def ttParseStat(line: String): Option[(String, TtStat)] =
-    line.stripPrefix("# stat=").split('|') match {
-      case Array(f, n, lo, hi) =>
-        try Some((f, TtStat(n.toLong, lo.toLong, hi.toLong)))
-        catch { case _: NumberFormatException => None }
-      case _ => None
-    }
 
   /** Snapshot read: exactly the live files, partition column recovered
     * via basePath (day stays a STRING — inference disabled like up12's
@@ -1123,7 +935,7 @@ object Mutations {
   private[graft] def ttCreateTable(s: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val fs = ttFs(s, dir)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_log")),
+    require(!fs.exists(new org.apache.hadoop.fs.Path(TtLog.dir(dir))),
       s"location $dir already holds a tt store")
     // CREATE over a NON-EMPTY directory is refused (Delta's rule): the
     // existing files would sit unreferenced by any version — invisible
@@ -1146,20 +958,12 @@ object Mutations {
     * files). One O(1) metadata read of v0.
     */
   private[graft] def ttCreateSchema(s: SparkSession,
-      dir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = ttFs(s, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_log/v0.txt")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    body.split("\n").collectFirst {
-      case l if l.startsWith("# createschema=") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("# createschema="))
+      dir: String): Option[org.apache.spark.sql.types.StructType] =
+    TtLog.entries(s, dir, 0).toSeq.flatten.collectFirst {
+      case TtLog.Meta("createschema", json) =>
+        org.apache.spark.sql.types.DataType.fromJson(json)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
-  }
 
   // ---- up26: COLUMN MAPPING (rename/drop as metadata) ----
 
@@ -1504,7 +1308,7 @@ object Mutations {
     // run's pre/post pair — so later runs' extra commits never surface
     val dir = ttDerivedScenario(s, d, "graft_up21_store",
       () => ttBaseScenario(s, d))(_ => ())
-    val v = ttHeadVersion(s, dir) + 1
+    val v = TtLog.head(s, dir) + 1
     ttDvUpdate(s, dir, v, s"u$v", col("event_type") === "purchase",
       Seq("cents" -> (col("cents") + lit(77L))))
     (3 to 4).map { vv =>
@@ -1605,224 +1409,100 @@ object Mutations {
     }
   }
 
-  /** r16 verdict #7 (Missing #3) — snapshot resolution served from the
-    * checkpoint AS A RELATION: the newest `ckpt-v<N>.parquet` ≤ asOf is
-    * scanned as a Spark relation (one row per live file with its
-    * commit-time stats — the shape a 1000-executor cluster reads, and
-    * at millions of files the ONLY shape that survives: Delta resolves
-    * exactly this way), the ≤ interval suffix commits overlay as a
-    * churn-sized add/remove set, and an optional skip-key BAND prunes
-    * IN-PLAN — on the checkpoint's own (lo, hi) columns, inside the
-    * scan — so the driver only ever collects the SURVIVING file list,
-    * never the full live set. [[ttLiveFiles]] (the driver replay)
-    * remains the bounded fallback for pre-checkpoint stores and for
-    * facilities that genuinely need every entry (vacuum's accounting,
-    * restore's set difference).
-    *
-    * Returns None when no checkpoint covers asOf; otherwise the
-    * surviving (file, stat) rows plus the metadata-file open count
-    * (spec-pinned: 1 checkpoint + the suffix commits, never O(log)).
+  /** The live set at `asOf` as a RELATION (r16 verdict #7): the newest
+    * checkpoint ≤ asOf scanned in-plan, minus every file the suffix
+    * commits touched, plus the suffix's net adds with their commit-time
+    * stats — the suffix comes from [[graft.sources.TtLog]]'s one fold.
+    * Callers prune the relation in-plan and collect only what survives,
+    * never the full live set (the shape a 1000-executor cluster reads;
+    * Delta resolves exactly this way). None — go through [[ttResolve]] —
+    * when no checkpoint covers asOf, when the snapshot is schema-mapped,
+    * and, unless `servesDv`, when it holds DV sidecars or clone-inherited
+    * external files. One aggregate over the manifest answers both
+    * checkpoint-level guards. Also returns the log files opened: the
+    * checkpoint and the suffix commits, never O(log).
+    */
+  private def ttCheckpointRelation(s: SparkSession, dir: String, asOf: Int,
+      servesDv: Boolean): Option[(DataFrame, Int)] = {
+    val log = TtLog.list(s, dir)
+    val cv = log.checkpointAt(asOf).getOrElse(return None)
+    val sfx = log.suffix(cv, asOf)
+    def dvOrExternal(f: String) = ttIsDv(f) || f.startsWith("/")
+    // a stat-less data add dies LOUDLY (r17 advice #1): a silently-dropped
+    // add would be silently-missing rows
+    if (!servesDv) sfx.unstatted.find(!dvOrExternal(_)).foreach(f =>
+      sys.error(s"live file $f carries no commit-time stats"))
+    if (sfx.schemaMapped || (!servesDv && sfx.added.exists(dvOrExternal))) return None
+    val ckpt = log.checkpointFrame(cv)
+    val g = ckpt.agg(max(when(TtLog.schemaRow, 1).otherwise(0)),
+      max(when(col("file").startsWith("_dv/") || col("file").startsWith("/"), 1)
+        .otherwise(0))).head
+    def flag(i: Int) = !g.isNullAt(i) && g.getInt(i) == 1
+    if (flag(0) || (!servesDv && flag(1))) return None
+    var rel = ckpt.filter(!TtLog.metaRow)
+    if (sfx.touched.nonEmpty) rel = rel.filter(!col("file").isInCollection(sfx.touched))
+    if (sfx.adds.nonEmpty) rel = rel.unionByName(
+      s.createDataFrame(TtLog.fileRows(sfx.adds), TtLog.checkpointSchema))
+    Some((rel, log.opened))
+  }
+
+  /** The live data files at `asOf` with their stats, through
+    * [[ttCheckpointRelation]]; an optional skip-key BAND prunes in-plan on
+    * the (lo, hi) columns, so the driver collects only the survivors. None
+    * where the relation is None; callers then resolve through
+    * [[ttResolve]]. Returns the log files opened alongside.
     */
   private[graft] def ttCheckpointSurvivors(s: SparkSession, dir: String,
       asOf: Int, band: Option[(Long, Long)])
-      : Option[(Seq[(String, TtStat)], Int)] = {
-    val fs = ttFs(s, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    val names = fs.listStatus(log).toSeq.map(_.getPath)
-    val ckpt = names.map(_.getName).filter(_.matches("ckpt-v\\d+\\.parquet"))
-      .map(_.stripPrefix("ckpt-v").stripSuffix(".parquet").toInt)
-      .filter(_ <= asOf).sorted.lastOption
-    val cv = ckpt.getOrElse(return None)
-    var opened = 1 // the checkpoint itself
-    // suffix overlay: ≤ interval commit files, replayed in order into a
-    // net (adds-with-stats, removes) pair — churn-sized, driver text.
-    // Anything the raw-file relation cannot serve (DV sidecars, schema
-    // mapping ops, clone-inherited externals) flips the guard and the
-    // caller falls back to the full resolution path, which owns those.
-    var guard = false
-    val plus = scala.collection.mutable.LinkedHashMap.empty[String, TtStat]
-    val minus = scala.collection.mutable.Set.empty[String]
-    names.filter(_.getName.matches("v\\d+\\.txt"))
-      .map(p => p.getName.stripPrefix("v").stripSuffix(".txt").toInt -> p)
-      .filter { case (v, _) => v > cv && v <= asOf }
-      .sortBy(_._1)
-      .foreach { case (_, p) =>
-        opened += 1
-        val in = fs.open(p)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val lines = body.split("\n").filter(_.nonEmpty)
-        val stats = lines.filter(_.startsWith("# stat="))
-          .flatMap(ttParseStat).toMap
-        lines.foreach { line =>
-          if (line.startsWith("a ")) {
-            val f = line.drop(2)
-            if (ttIsDv(f) || f.startsWith("/")) guard = true
-            else {
-              // a stat-less data add dies LOUDLY (r17 advice #1): the
-              // checkpoint rows and the driver fallback both do, and a
-              // silently-dropped add would be silently-missing rows
-              plus(f) = stats.getOrElse(f,
-                sys.error(s"live file $f carries no commit-time stats"))
-              minus -= f
-            }
-          } else if (line.startsWith("r ")) {
-            val f = line.drop(2)
-            if (plus.remove(f).isEmpty) minus += f
-          } else if (line.startsWith("# rename=") ||
-              line.startsWith("# dropcol=") ||
-              line.startsWith("# addcolumn=") ||
-              line.startsWith("# schemareset=")) guard = true
-        }
-      }
-    if (guard) return None
-    // checkpoint-level guards, read IN-PLAN (one tiny aggregate over the
-    // manifest): DV rows, folded schema ops, external references
-    val ckptPath = s"$dir/_log/ckpt-v$cv.parquet"
-    val g = s.read.parquet(ckptPath).agg(
-      max(when(col("file").startsWith("_dv/") ||
-        col("file").startsWith("#schema:") ||
-        col("file").startsWith("/"), 1).otherwise(0))).head
-    if (!g.isNullAt(0) && g.getInt(0) == 1) return None
-    // THE RELATION: distributed scan of the checkpoint manifest, the
-    // suffix overlay composed in-plan (anti-filter + small union), the
-    // band prune applied BEFORE anything is collected. At 100-TB file
-    // counts this is where a partition/stat predicate keeps the driver
-    // out of the loop entirely.
-    var rel = s.read.parquet(ckptPath)
-      .select("file", "numRows", "lo", "hi")
-      .filter(!col("file").startsWith("#"))
-    if (minus.nonEmpty)
-      rel = rel.filter(!col("file").isInCollection(minus))
-    if (plus.nonEmpty) {
-      import s.implicits._
-      rel = rel.unionByName(plus.toSeq
-        .map { case (f, st) => (f, st.numRows, st.lo, st.hi) }
-        .toDF("file", "numRows", "lo", "hi"))
-    }
-    band.foreach { case (bandLo, bandHi) =>
+      : Option[(Seq[(String, TtStat)], Int)] =
+    ttCheckpointRelation(s, dir, asOf, servesDv = false).map { case (rel, opened) =>
       // a stat-less row (null lo/hi) cannot be pruned — it survives the
-      // band and dies loudly at the strictness check below, exactly the
-      // driver path's contract
-      rel = rel.filter(col("lo").isNull ||
-        (col("hi") >= bandLo && col("lo") <= bandHi))
+      // band and dies loudly below, exactly the driver path's contract
+      val pruned = band.fold(rel) { case (lo, hi) =>
+        rel.filter(col("lo").isNull || (col("hi") >= lo && col("lo") <= hi))
+      }
+      val survivors = pruned.collect().map { r =>
+        require(!r.isNullAt(1),
+          s"live file ${r.getString(0)} carries no commit-time stats")
+        (r.getString(0), TtStat(r.getLong(1), r.getLong(2), r.getLong(3)))
+      }.toSeq.sortBy(_._1)
+      (survivors, opened)
     }
-    val survivors = rel.collect().map { r =>
-      require(!r.isNullAt(1),
-        s"live file ${r.getString(0)} carries no commit-time stats")
-      (r.getString(0), TtStat(r.getLong(1), r.getLong(2), r.getLong(3)))
-    }.toSeq
-      // a file removed and re-added inside ONE suffix window (a restore
-      // straddling the checkpoint) appears in both the manifest and the
-      // overlay — same stats (restore re-declares them), one entry wins
-      .distinctBy(_._1).sortBy(_._1)
-    Some((survivors, opened))
-  }
 
-  /** r17 verdict #1 — WRITE-PATH candidate resolution through the
-    * checkpoint RELATION: the mutation verbs (DV update/delete/merge,
-    * the COW rewrites, optimize candidate selection) used to partition
-    * the FULL live set via [[ttLiveFiles]]' driver text replay before
-    * touching anything — at 100-TB file counts that materializes
-    * millions of entries on the driver to rewrite one day. This
-    * resolver serves them the way reads are served
-    * ([[ttCheckpointSurvivors]]): the newest checkpoint manifest is
-    * scanned AS A RELATION, the ≤ interval suffix commits overlay as a
-    * churn-sized add/remove set, and the verb's file scope — a day set
-    * (partition-scoped UPDATE/OPTIMIZE) or an explicit candidate list
-    * (DV compaction's dv-referenced files) — is pushed IN-PLAN, so the
-    * driver only ever collects the candidate files the verb will
-    * actually rewrite, never the table's file list. Unlike the read
-    * path this resolver needs NAMES only (no stats) and serves
-    * DV-bearing and clone-inherited-external live sets with full
-    * fidelity (the verbs own those semantics); only schema-mapped
-    * stores and pre-checkpoint stores fall back to the bounded driver
-    * replay, which vacuum/restore keep outright (they genuinely need
-    * the total enumeration).
+  /** WRITE-PATH candidate resolution (r17 verdict #1): the live DV
+    * sidecars and the live data files in the verb's scope — a day set
+    * (partition-scoped UPDATE/OPTIMIZE) or an explicit candidate list (DV
+    * compaction's dv-referenced files) — through [[ttCheckpointRelation]]
+    * with the scope pushed in-plan and one collect, so the driver sees
+    * candidate names only, never the table's file list. DV-bearing and
+    * clone-inherited live sets are served; a schema-mapped or
+    * pre-checkpoint snapshot falls back to [[ttResolve]].
     */
   private[graft] final case class TtWriteCandidates(dv: Seq[String],
       data: Seq[String], opened: Int, viaRelation: Boolean)
 
   private[graft] def ttWriteCandidates(s: SparkSession, dir: String,
       asOf: Int, dayScope: Option[Set[String]] = None,
-      dataFileFilter: Option[Seq[String]] = None): TtWriteCandidates = {
-    def inScope(f: String): Boolean =
-      dayScope.forall(_.exists(day =>
-        f.startsWith(s"day=$day/") || f.contains(s"/day=$day/"))) &&
-        dataFileFilter.forall(_.contains(f))
-    def fallback(): TtWriteCandidates = {
-      val (dvF, dataF) = ttLiveFiles(s, dir, asOf).partition(ttIsDv)
-      TtWriteCandidates(dvF, dataF.filter(inScope), 0, viaRelation = false)
+      dataFileFilter: Option[Seq[String]] = None): TtWriteCandidates =
+    ttCheckpointRelation(s, dir, asOf, servesDv = true) match {
+      case Some((rel, opened)) =>
+        val isDv = col("file").startsWith("_dv/")
+        val inDays = dayScope.fold(lit(true))(ds => ds.toSeq.sorted.map(day =>
+            col("file").startsWith(s"day=$day/") || col("file").contains(s"/day=$day/"))
+          .reduceOption(_ || _).getOrElse(lit(false)))
+        val inFiles = dataFileFilter.fold(lit(true))(ff =>
+          if (ff.isEmpty) lit(false) else col("file").isInCollection(ff))
+        val (dvF, dataF) = rel.filter(isDv || (inDays && inFiles)).select("file")
+          .collect().map(_.getString(0)).toSeq.sorted.partition(ttIsDv)
+        TtWriteCandidates(dvF, dataF, opened, viaRelation = true)
+      case None =>
+        val r = ttResolve(s, dir, asOf)
+        val (dvF, dataF) = r.live.partition(ttIsDv)
+        TtWriteCandidates(dvF, dataF.filter(f =>
+          dayScope.forall(_.exists(day =>
+            f.startsWith(s"day=$day/") || f.contains(s"/day=$day/"))) &&
+            dataFileFilter.forall(_.contains(f))), r.opened, viaRelation = false)
     }
-    val fs = ttFs(s, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    val names = fs.listStatus(log).toSeq.map(_.getPath)
-    val ckpt = names.map(_.getName).filter(_.matches("ckpt-v\\d+\\.parquet"))
-      .map(_.stripPrefix("ckpt-v").stripSuffix(".parquet").toInt)
-      .filter(_ <= asOf).sorted.lastOption
-    val cv = ckpt.getOrElse(return fallback())
-    var opened = 1 // the checkpoint itself
-    // suffix overlay — identical replay to ttCheckpointSurvivors, but
-    // DV adds are first-class (kept in their own bucket, never a guard):
-    // the write verbs are exactly the consumers that need them
-    var guard = false
-    val plus = scala.collection.mutable.LinkedHashSet.empty[String]
-    val minus = scala.collection.mutable.Set.empty[String]
-    names.filter(_.getName.matches("v\\d+\\.txt"))
-      .map(p => p.getName.stripPrefix("v").stripSuffix(".txt").toInt -> p)
-      .filter { case (v, _) => v > cv && v <= asOf }
-      .sortBy(_._1)
-      .foreach { case (_, p) =>
-        opened += 1
-        val in = fs.open(p)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        body.split("\n").filter(_.nonEmpty).foreach { line =>
-          if (line.startsWith("a ")) { plus += line.drop(2); minus -= line.drop(2) }
-          else if (line.startsWith("r ")) {
-            val f = line.drop(2)
-            if (!plus.remove(f)) minus += f
-          } else if (line.startsWith("# rename=") ||
-              line.startsWith("# dropcol=") ||
-              line.startsWith("# addcolumn=") ||
-              line.startsWith("# schemareset="))
-            // a schema-mapped store: the verbs layer their own handling
-            // over the FULL resolution (which owns op ordering) — the
-            // relation shortcut must not half-serve it
-            guard = true
-        }
-      }
-    if (guard) return fallback()
-    // checkpoint-level schema guard, read IN-PLAN (one tiny aggregate)
-    val ckptPath = s"$dir/_log/ckpt-v$cv.parquet"
-    val g = s.read.parquet(ckptPath)
-      .agg(max(when(col("file").startsWith("#schema:"), 1).otherwise(0))).head
-    if (!g.isNullAt(0) && g.getInt(0) == 1) return fallback()
-    // THE RELATION: checkpoint manifest scan, suffix overlay composed
-    // in-plan, the verb's scope pushed BEFORE anything is collected —
-    // the driver sees candidate names only
-    import s.implicits._
-    var rel = s.read.parquet(ckptPath).select("file")
-      .filter(!col("file").startsWith("#"))
-    if (minus.nonEmpty) rel = rel.filter(!col("file").isInCollection(minus))
-    if (plus.nonEmpty) rel = rel.unionByName(plus.toSeq.toDF("file"))
-    val dvRel = rel.filter(col("file").startsWith("_dv/"))
-    var dataRel = rel.filter(!col("file").startsWith("_dv/"))
-    dayScope.foreach { ds =>
-      dataRel = dataRel.filter(ds.toSeq.sorted.map(day =>
-          col("file").startsWith(s"day=$day/") ||
-            col("file").contains(s"/day=$day/"))
-        .reduceOption(_ || _).getOrElse(lit(false)))
-    }
-    dataFileFilter.foreach { ff =>
-      dataRel = dataRel.filter(
-        if (ff.isEmpty) lit(false) else col("file").isInCollection(ff))
-    }
-    TtWriteCandidates(
-      dvRel.collect().map(_.getString(0)).toSeq.distinct.sorted,
-      dataRel.collect().map(_.getString(0)).toSeq.distinct.sorted,
-      opened, viaRelation = true)
-  }
 
   /** src32 — DATA SKIPPING on tt snapshot reads: the snapshot relation
     * carries per-live-file key min/max and the FileIndex intersects
@@ -1942,7 +1622,7 @@ object Mutations {
       try { ttCommit(s, dir, v, adds, removes, meta); return v }
       catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          v = ttHeadVersion(s, dir) + 1
+          v = TtLog.head(s, dir) + 1
       }
     }
     sys.error(s"commit lost $attempts straight races under $dir")
@@ -1966,7 +1646,7 @@ object Mutations {
       try { verb(v); return v }
       catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          v = ttHeadVersion(s, dir) + 1
+          v = TtLog.head(s, dir) + 1
       }
     }
     sys.error(s"verb lost $attempts straight commit races under $dir")
@@ -2173,7 +1853,7 @@ object Mutations {
     */
   private[graft] def ttSqlInsert(s: SparkSession, dir: String,
       data: DataFrame): Unit = {
-    val v = ttHeadVersion(s, dir) + 1
+    val v = TtLog.head(s, dir) + 1
     // CHECK constraints (src42) are enforced in the shared commit path
     // (ttEnforceConstraints) — every write verb validates, not just
     // this one, and a rebased OCC retry re-validates at its real target
@@ -2297,7 +1977,7 @@ object Mutations {
     */
   private[graft] def ttConvert(s: SparkSession, dir: String): Int = {
     val fs = ttFs(s, dir)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_log")),
+    require(!fs.exists(new org.apache.hadoop.fs.Path(TtLog.dir(dir))),
       s"$dir is already a tt table")
     val base = new org.apache.hadoop.fs.Path(dir).toUri.getPath
     val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
@@ -2547,7 +2227,7 @@ object Mutations {
     var attempts = 0
     while (attempts < 20) {
       attempts += 1
-      val sv = ttHeadVersion(s, silverDir) + 1
+      val sv = TtLog.head(s, silverDir) + 1
       if (ttTxnCommitted(s, silverDir, txn)) return false
       // DV rows are silver-head-derived — recomputed on every attempt
       val dvAdds =
@@ -2812,8 +2492,7 @@ object Mutations {
     // a nonexistent target must die HERE, not resolve: replaying the log
     // "as of" a version beyond the head silently yields the head's own
     // state, and the restore would then report a misleading no-op
-    require(ttFs(s, dir).exists(
-        new org.apache.hadoop.fs.Path(s"$dir/_log/v$target.txt")),
+    require(TtLog.committed(s, dir, target),
       s"cannot restore to v$target: no such committed version under $dir")
     val headRes = ttResolve(s, dir, v - 1)
     val tgtRes = ttResolve(s, dir, target)
@@ -2941,7 +2620,8 @@ object Mutations {
     * snapshots table): the commit log read back as an audit surface —
     * every commit carries an `op=` label (write/append/update/delete/
     * merge/optimize/restore/clone/streaming-append) and a `ts=` commit
-    * timestamp, and the history is O(commits) metadata. The declared
+    * timestamp, read as `Meta` entries of every commit through one
+    * [[graft.sources.TtLog]] listing — O(commits) metadata. The declared
     * query JOINS the history with each version's ROW COUNT — served
     * from commit-time stats, never a recount (see [[ttStatsRowCount]])
     * — so the oracle (which recomputes every state from raw events)
@@ -2949,22 +2629,13 @@ object Mutations {
     * the data they describe, not just label strings.
     */
   private[graft] def ttHistory(s: SparkSession, dir: String): Seq[TtCommitInfo] = {
-    val fs = ttFs(s, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    fs.listStatus(log).toSeq
-      .filter(_.getPath.getName.matches("v\\d+\\.txt"))
-      .map { st =>
-        val v = st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toInt
-        val in = fs.open(st.getPath)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val lines = body.split("\n")
-        def meta(k: String): Option[String] = lines
-          .collectFirst { case l if l.startsWith(s"# $k=") =>
-            l.stripPrefix(s"# $k=") }
-        TtCommitInfo(v, meta("op").getOrElse("write"),
-          meta("ts").map(_.toLong).getOrElse(ttClockMs(v)))
-      }.sortBy(_.version)
+    val log = TtLog.list(s, dir)
+    log.commits.keys.toSeq.map { v =>
+      val entries = log.entries(v)
+      def meta(k: String) = entries.collectFirst { case TtLog.Meta(`k`, x) => x }
+      TtCommitInfo(v, meta("op").getOrElse("write"),
+        meta("ts").map(_.toLong).getOrElse(ttClockMs(v)))
+    }
   }
 
   /** Newest version whose commit timestamp is ≤ `tsMs` — the TIMESTAMP
@@ -3138,7 +2809,7 @@ object Mutations {
   def occAppendRollup(s: SparkSession, d: String): DataFrame = {
     val dir = ttDerivedScenario(s, d, "graft_up27_store",
       () => ttBaseScenario(s, d))(_ => ())
-    val h = ttHeadVersion(s, dir)
+    val h = TtLog.head(s, dir)
     val base = events(s, d).select(col("event_id"), col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"),
       date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -3172,7 +2843,7 @@ object Mutations {
     */
   private[graft] def ttVacuum(s: SparkSession, dir: String,
       keep: Int): (Int, Int, Int) = {
-    val maxV = ttHeadVersion(s, dir)
+    val maxV = TtLog.head(s, dir)
     ttVacuumVersions(s, dir, (maxV - keep + 1) to maxV)
   }
 
@@ -3215,7 +2886,7 @@ object Mutations {
         // _log/ holds commit metadata + parquet CHECKPOINTS — never
         // vacuum candidates (deleting a checkpoint would send every
         // resolution back to full replay)
-        if (p.endsWith(".parquet") && !rel.startsWith("_log/")) out += rel
+        if (p.endsWith(".parquet") && !rel.startsWith(TtLog.dirName + "/")) out += rel
       }
       out.toSeq
     }

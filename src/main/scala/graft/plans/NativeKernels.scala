@@ -177,7 +177,7 @@ object TtTableChanges {
     // arity-2: open-ended upper bound, defaulting to the head version
     // at analysis time (Delta's omitted-end rule)
     val to = if (args.length == 3) versionOf(args(2), "toVersion")
-      else graft.ops.Mutations.ttHeadVersion(spark, dir)
+      else graft.sources.TtLog.head(spark, dir)
     require(from < to,
       s"table_changes: fromVersion $from must be < toVersion $to")
     graft.ops.Mutations.ttChanges(spark, dir, from, to)

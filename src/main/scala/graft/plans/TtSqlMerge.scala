@@ -112,7 +112,7 @@ case class TtSqlMergeCommand(dir: String, source: LogicalPlan)
     // against the head that actually won (the closure derives from
     // v - 1 internally), never publishes a stale rewrite
     graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1)(v =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
       graft.ops.Mutations.ttMergeInto(spark, dir, src, v, s"m$v"))
     Seq.empty
   }
@@ -126,7 +126,7 @@ case class TtSqlDeleteCommand(dir: String, condition: Expression)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1)(v =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
       graft.ops.Mutations.ttDvDelete(spark, dir, v, s"dv$v",
         TtSqlCommands.byName(condition),
         dayScope = TtSqlCommands.dayScope(condition)))
@@ -139,7 +139,7 @@ case class TtSqlUpdateCommand(dir: String, sets: Seq[(String, Expression)],
     condition: Expression) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1)(v =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
       graft.ops.Mutations.ttDvUpdate(spark, dir, v, s"u$v",
         TtSqlCommands.byName(condition),
         sets.map { case (c, e) => c -> TtSqlCommands.byName(e) },

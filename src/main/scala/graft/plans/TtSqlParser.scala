@@ -244,7 +244,7 @@ case class TtSqlRestoreCommand(table: String, target: Int)
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val committed = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1)(v =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
       graft.ops.Mutations.ttRestore(spark, dir, v, target))
     Seq(Row(s"tt.$table", target.toLong, committed.toLong))
   }
@@ -271,7 +271,7 @@ case class TtSqlOptimizeCommand(table: String, zorderBy: Seq[String],
     val days = whereDay.map(Set(_))
     var did = false
     val v = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1) { tv =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1) { tv =>
       did =
         if (zorderBy.nonEmpty)
           graft.ops.Mutations.ttOptimizeClustered(spark, dir, tv, s"z$tv",
@@ -320,7 +320,7 @@ case class TtSqlAddConstraintCommand(table: String, cname: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val v = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1)(tv =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1)(tv =>
       graft.ops.Mutations.ttAddConstraint(spark, dir, tv, cname, cexpr))
     Seq(Row(s"tt.$table", cname, v.toLong))
   }
@@ -336,7 +336,7 @@ case class TtSqlDropConstraintCommand(table: String, cname: String)
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val v = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtCatalog.headVersion(spark, dir) + 1)(tv =>
+      graft.sources.TtLog.requireHead(spark, dir) + 1)(tv =>
       graft.ops.Mutations.ttDropConstraint(spark, dir, tv, cname))
     Seq(Row(s"tt.$table", cname, v.toLong))
   }
@@ -364,7 +364,7 @@ case class TtSqlCloneCommand(newTable: String, srcTable: String,
         .TableAlreadyExistsException(Seq("tt", newTable))
     val srcDir = TtSqlParser.dirOf(srcTable)
     val asOf = version.getOrElse(
-      graft.sources.TtCatalog.headVersion(spark, srcDir))
+      graft.sources.TtLog.requireHead(spark, srcDir))
     graft.ops.Mutations.ttShallowClone(spark, srcDir, location, asOf)
     graft.sources.TtCatalog.register(newTable, location)
     Seq(Row(s"tt.$newTable", s"tt.$srcTable", asOf.toLong, location))
@@ -444,7 +444,7 @@ case class TtSqlApplyChangesCommand(target: String, source: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val srcDir = TtSqlParser.dirOf(source)
     val tgtDir = TtSqlParser.dirOf(target)
-    val head = graft.sources.TtCatalog.headVersion(spark, srcDir)
+    val head = graft.sources.TtLog.requireHead(spark, srcDir)
     val from = fromVersion.getOrElse(0)
     require(from >= 0 && from <= head,
       s"APPLY CHANGES: FROM VERSION $from is outside tt.$source's " +
@@ -494,7 +494,7 @@ case class TtSqlDescribeDetailCommand(table: String)
   override def run(spark: SparkSession): Seq[Row] = {
     import graft.ops.Mutations
     val dir = TtSqlParser.dirOf(table)
-    val head = graft.sources.TtCatalog.headVersion(spark, dir)
+    val head = graft.sources.TtLog.requireHead(spark, dir)
     val res = Mutations.ttResolve(spark, dir, head)
     val (dvF, dataF) = res.live.partition(Mutations.ttIsDv)
     val fs = new org.apache.hadoop.fs.Path(dir)

@@ -44,14 +44,6 @@ object TtCatalog {
     */
   def install(s: SparkSession): Unit =
     s.conf.set("spark.sql.catalog.tt", classOf[TtCatalog].getName)
-
-  private[graft] def headVersion(s: SparkSession, dir: String): Int = {
-    val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-    val fs = log.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(log).map(_.getPath.getName)
-      .filter(_.matches("v\\d+\\.txt"))
-      .map(_.stripPrefix("v").stripSuffix(".txt").toInt).max
-  }
 }
 
 /** One tt snapshot as a DSv2 table. The snapshot DataFrame is the
@@ -62,7 +54,7 @@ final class TtTable(tableName: String, dir: String, version: Option[Int])
 
   private def snapshot(s: SparkSession): DataFrame =
     graft.ops.Mutations.ttAsOf(s, dir,
-      version.getOrElse(TtCatalog.headVersion(s, dir)))
+      version.getOrElse(TtLog.requireHead(s, dir)))
 
   // schema is resolved once at table load (analysis time), per-snapshot:
   // a pre-evolution version genuinely lacks up17's added column
@@ -193,7 +185,7 @@ final class TtCatalog extends TableCatalog {
       // unregister-only DROP below; the store's own log is the schema
       val fs = new org.apache.hadoop.fs.Path(loc)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      require(fs.exists(new org.apache.hadoop.fs.Path(s"$loc/_log")),
+      require(fs.exists(new org.apache.hadoop.fs.Path(TtLog.dir(loc))),
         s"schema-less CREATE TABLE requires an existing tt store at $loc")
       TtCatalog.register(ident.name, loc)
       return loadTable(ident)
@@ -224,7 +216,7 @@ final class TtCatalog extends TableCatalog {
     // head instead of surfacing an uncaught FileAlreadyExistsException.
     def retried(verb: Int => Unit): Unit =
       graft.ops.Mutations.ttRetryVerb(s, dir,
-        TtCatalog.headVersion(s, dir) + 1)(verb)
+        TtLog.requireHead(s, dir) + 1)(verb)
     changes.foreach {
       case r: TableChange.RenameColumn =>
         require(r.fieldNames.length == 1,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.engine.Sessions.{noPartitionInference, withConf}
 import graft.engine.{Publish, Staged}
+import graft.sources.TtLog
 
 /** Structured Streaming over the events table.
   *
@@ -1447,7 +1448,7 @@ object EventStreams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    Mutations.ttAsOf(s, dir, Mutations.ttHeadVersion(s, dir))
+    Mutations.ttAsOf(s, dir, TtLog.head(s, dir))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")
@@ -1494,7 +1495,7 @@ object EventStreams {
           expr("cast(round(value * 100) as bigint)").as("cents"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
         Mutations.ttIdempotentAppend(sp, dir, rows, s"st32#$batchId")
-        val head = Mutations.ttHeadVersion(sp, dir)
+        val head = TtLog.head(sp, dir)
         val dataF = Mutations.ttLiveFiles(sp, dir, head)
           .filterNot(Mutations.ttIsDv).filter(_.startsWith("day="))
         val maxPerDay = dataF.groupBy(f => f.take(f.indexOf('/')))
@@ -1507,7 +1508,7 @@ object EventStreams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    Mutations.ttAsOf(s, dir, Mutations.ttHeadVersion(s, dir))
+    Mutations.ttAsOf(s, dir, TtLog.head(s, dir))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")
@@ -1542,15 +1543,15 @@ object EventStreams {
     val pending = scala.collection.mutable.SortedSet.empty[Int]
     val q = s.readStream
       .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "v*.txt")
-      .text(s"$bronze/_log")
+      .option("pathGlobFilter", TtLog.commitGlob)
+      .text(TtLog.dir(bronze))
       .select(input_file_name().as("f"))
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, _: Long) =>
         val sp = b.sparkSession
         pending ++= b.select("f").distinct().collect()
-          .map(_.getString(0).split("/v").last.stripSuffix(".txt").toInt)
+          .map(r => TtLog.versionOf(r.getString(0)))
         while (pending.contains(nextV)) {
           pending -= nextV
           val txn = s"st33#$nextV"
@@ -1567,7 +1568,7 @@ object EventStreams {
       .start()
     try q.awaitTermination() finally q.stop()
     require(nextV == 4, s"replication stopped at v$nextV of 4")
-    Mutations.ttAsOf(s, silver, Mutations.ttHeadVersion(s, silver))
+    Mutations.ttAsOf(s, silver, TtLog.head(s, silver))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")
@@ -1605,13 +1606,7 @@ object EventStreams {
     // (the declared st28 scenario) this is a no-op and the tail starts
     // at v0 exactly as before.
     locally {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val log = new org.apache.hadoop.fs.Path(s"$dir/_log")
-      val ckptV = fs.listStatus(log).toSeq.map(_.getPath.getName)
-        .filter(_.matches("ckpt-v\\d+\\.parquet"))
-        .map(_.stripPrefix("ckpt-v").stripSuffix(".parquet").toInt)
-        .sorted.lastOption.getOrElse(-1)
+      val ckptV = TtLog.list(s, dir).checkpoints.lastOption.getOrElse(-1)
       if (ckptV >= 0 && fromCheckpoint) {
         // ttAsOf, not a raw live-set read: the checkpointed set may carry
         // deletion vectors, which the snapshot read applies
@@ -1630,16 +1625,14 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1")
       // commit files only: checkpoint manifests (ckpt-v*.parquet) are
       // resolution shortcuts, not deltas — folding one would double-count
-      .option("pathGlobFilter", "v*.txt")
-      .text(s"$dir/_log")
+      .option("pathGlobFilter", TtLog.commitGlob)
+      .text(TtLog.dir(dir))
       .select(col("value"), input_file_name().as("f"))
     val q = stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val rows = batch.collect() // one commit: O(files-touched) lines
         if (rows.nonEmpty) {
-          val versions = rows.map(r => new org.apache.hadoop.fs.Path(
-            r.getString(1)).getName.stripPrefix("v").stripSuffix(".txt").toInt)
-            .distinct
+          val versions = rows.map(r => TtLog.versionOf(r.getString(1))).distinct
           require(versions.length == 1,
             s"one micro-batch must carry one commit, got ${versions.toSeq}")
           // commits at or below the bootstrap checkpoint are already
@@ -1650,9 +1643,9 @@ object EventStreams {
           while (pending.contains(lastV + 1)) {
           val v = lastV + 1
           lastV = v
-          val lines = pending.remove(v).get
-          val adds = lines.collect { case l if l.startsWith("a ") => l.drop(2) }
-          val removes = lines.collect { case l if l.startsWith("r ") => l.drop(2) }
+          val entries = pending.remove(v).get.flatMap(TtLog.parse)
+          val adds = entries.collect { case TtLog.Add(f) => f }
+          val removes = entries.collect { case TtLog.Remove(f) => f }
           val delta: Seq[(String, Long, Long)] =
             if (adds.isEmpty && removes.isEmpty)
               // metadata-only commit (up26 rename/drop): no row change —
@@ -1742,8 +1735,8 @@ object EventStreams {
     val pending = scala.collection.mutable.Set.empty[Int]
     val stream = s.readStream
       .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "v*.txt")
-      .text(s"$dir/_log")
+      .option("pathGlobFilter", TtLog.commitGlob)
+      .text(TtLog.dir(dir))
       .select(input_file_name().as("f"))
     val q = stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1751,8 +1744,7 @@ object EventStreams {
         if (files.nonEmpty) {
           require(files.length == 1,
             s"one micro-batch must carry one commit, got ${files.toSeq}")
-          val v = new org.apache.hadoop.fs.Path(files.head).getName
-            .stripPrefix("v").stripSuffix(".txt").toInt
+          val v = TtLog.versionOf(files.head)
           val sp = batch.sparkSession
           if (v > lastV) pending += v
           while (pending.contains(lastV + 1)) {

@@ -584,7 +584,7 @@ class MutationsSpec extends SparkSpec {
     // pins the store SHAPE the sink leaves behind
     graft.streaming.EventStreams.streamingTtSink(spark, sf0001).collect()
     val dir = graft.Tables.scratchDir("graft_st31_store", sf0001)
-    assert(Mutations.ttHeadVersion(spark, dir) == 2, "3 batches != 3 commits")
+    assert(graft.sources.TtLog.head(spark, dir) == 2, "3 batches != 3 commits")
     (0 to 2).foreach { b =>
       assert(Mutations.ttTxnCommitted(spark, dir, s"st31#$b"))
     }
@@ -960,7 +960,7 @@ class MutationsSpec extends SparkSpec {
     assert(Mutations.ttIdempotentAppend(spark, dir,
       Seq((k, "moved", 999L, dayX))
         .toDF("event_id", "event_type", "cents", "day"), "race-derive"))
-    assert(Mutations.ttHeadVersion(spark, dir) == 4)
+    assert(graft.sources.TtLog.head(spark, dir) == 4)
     // the merge STARTS from the stale head (target 4, derived at v3):
     // its claim of v4 must fail, and the retry must re-derive at v4 —
     // where K now exists — so K is an UPDATE. A re-commit WITHOUT
@@ -1082,14 +1082,14 @@ class MutationsSpec extends SparkSpec {
       .map(Await.result(_, 120.seconds))
     assert(sameTxn.count(identity) == 1,
       s"duplicate txn committed ${sameTxn.count(identity)} times")
-    val headAfterDup = Mutations.ttHeadVersion(spark, dir)
+    val headAfterDup = graft.sources.TtLog.head(spark, dir)
     assert(headAfterDup == 4, s"head $headAfterDup after one logical append")
     // DISTINCT txns racing: both land, log stays linear (no gaps)
     val distinct = Seq("race-a", "race-b").map(t =>
       Future(Mutations.ttIdempotentAppend(spark, dir, batch, t)))
       .map(Await.result(_, 120.seconds))
     assert(distinct.forall(identity), "a distinct-txn writer was lost")
-    assert(Mutations.ttHeadVersion(spark, dir) == 6)
+    assert(graft.sources.TtLog.head(spark, dir) == 6)
     assert((0 to 6).forall(v =>
       Mutations.ttLiveFiles(spark, dir, v).nonEmpty), "log has a gap")
     // the duplicated batch's rows appear exactly TWICE more than once:
@@ -1101,14 +1101,14 @@ class MutationsSpec extends SparkSpec {
 
   test("drop-column guard: the physical partition column is refused, even through a rename chain") {
     val dir = Mutations.ttStore(spark, sf0001)
-    val head = Mutations.ttHeadVersion(spark, dir)
+    val head = graft.sources.TtLog.head(spark, dir)
     // the r15 judge's probe: dropping `day` used to commit durably and
     // wedge every subsequent INSERT — now refused loudly, nothing lands
     val err = intercept[IllegalArgumentException] {
       Mutations.ttDropColumn(spark, dir, head + 1, "day")
     }
     assert(err.getMessage.contains("partition"), err.getMessage)
-    assert(Mutations.ttHeadVersion(spark, dir) == head,
+    assert(graft.sources.TtLog.head(spark, dir) == head,
       "refused drop still committed")
     // renaming the layout key is a legal metadata op — but dropping its
     // NEW logical name must still be refused (it unwinds to `day`)
@@ -1319,7 +1319,7 @@ class MutationsSpec extends SparkSpec {
     val silver = graft.Tables.scratchDir("graft_st33_silver", sf0001)
     val bronze = Mutations.ttBaseScenario(spark, sf0001)
     // exactly one commit per bronze version, all cdc-apply, all txn'd
-    assert(Mutations.ttHeadVersion(spark, silver) == 3)
+    assert(graft.sources.TtLog.head(spark, silver) == 3)
     assert(Mutations.ttHistory(spark, silver).map(_.op).toSet ==
       Set("cdc-apply"))
     (0 to 3).foreach(v =>

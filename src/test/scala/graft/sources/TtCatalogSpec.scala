@@ -115,7 +115,7 @@ class TtCatalogSpec extends SparkSpec {
         date_format(ts, 'yyyy-MM-dd') AS day
       FROM graft_src35_spec_events WHERE event_id % 19 = 0""")
     // exactly one new commit, labelled op=insert
-    assert(Mutations.ttHeadVersion(spark, dir) == 4)
+    assert(TtLog.head(spark, dir) == 4)
     assert(Mutations.ttHistory(spark, dir).last.op == "insert")
     // row-equal to the library verb on a twin store
     val twin = graft.Tables.scratchDir("graft_src35_spec_twin", sf0001)
@@ -141,7 +141,7 @@ class TtCatalogSpec extends SparkSpec {
         SELECT * FROM tt.src35_spec_store VERSION AS OF 0""").collect()
     }
     assert(err.getMessage != null)
-    assert(Mutations.ttHeadVersion(spark, dir) == 4,
+    assert(TtLog.head(spark, dir) == 4,
       "refused overwrite still committed something")
   }
 
@@ -154,7 +154,7 @@ class TtCatalogSpec extends SparkSpec {
     val filesV4 = Mutations.ttLiveFiles(spark, dir, 4)
     spark.sql("ALTER TABLE tt.src36_spec_store RENAME COLUMN cents TO amount")
     spark.sql("ALTER TABLE tt.src36_spec_store DROP COLUMN ingest_gen")
-    assert(Mutations.ttHeadVersion(spark, dir) == 6)
+    assert(TtLog.head(spark, dir) == 6)
     assert(Mutations.ttLiveFiles(spark, dir, 6) == filesV4,
       "ALTER touched data files")
     assert(Mutations.ttHistory(spark, dir).takeRight(2).map(_.op) ==
@@ -181,7 +181,7 @@ class TtCatalogSpec extends SparkSpec {
         ALTER COLUMN amount TYPE STRING""")
     }
     assert(err.getMessage != null)
-    assert(Mutations.ttHeadVersion(spark, dir) == 6,
+    assert(TtLog.head(spark, dir) == 6,
       "refused ALTER still committed")
   }
 
@@ -190,7 +190,7 @@ class TtCatalogSpec extends SparkSpec {
     val dir = Mutations.ttStore(spark, sf0001)
     TtCatalog.install(spark)
     TtCatalog.register("r16_probe_store", dir)
-    val head = Mutations.ttHeadVersion(spark, dir)
+    val head = TtLog.head(spark, dir)
     // 1. the exact wedge probe from the r15 verdict: must be refused at
     // the verb, nothing committed, and the message must say WHY
     val err = intercept[Throwable] {
@@ -198,11 +198,11 @@ class TtCatalogSpec extends SparkSpec {
     }
     assert(err.getMessage != null && err.getMessage.contains("partition"),
       s"wrong refusal: ${err.getMessage}")
-    assert(Mutations.ttHeadVersion(spark, dir) == head,
+    assert(TtLog.head(spark, dir) == head,
       "refused DROP still committed")
     // 2. a legal-but-regretted schema commit...
     spark.sql("ALTER TABLE tt.r16_probe_store DROP COLUMN cents")
-    assert(Mutations.ttHeadVersion(spark, dir) == head + 1)
+    assert(TtLog.head(spark, dir) == head + 1)
     assert(!spark.table("tt.r16_probe_store").columns.contains("cents"))
     // ...is undone from the SAME front door: SQL RESTORE
     val out = spark.sql(
@@ -224,14 +224,14 @@ class TtCatalogSpec extends SparkSpec {
     // restoring to a version that never existed is refused loudly —
     // resolution past the head would otherwise yield the head's own
     // state and a misleading no-op error
-    val headNow = Mutations.ttHeadVersion(spark, dir)
+    val headNow = TtLog.head(spark, dir)
     val badV = intercept[Throwable] {
       spark.sql("RESTORE TABLE tt.r16_probe_store TO VERSION AS OF 999")
         .collect()
     }
     assert(badV.getMessage.contains("no such committed version"),
       badV.getMessage)
-    assert(Mutations.ttHeadVersion(spark, dir) == headNow)
+    assert(TtLog.head(spark, dir) == headNow)
   }
 
   test("SQL CREATE TABLE / CTAS: create-insert-read round-trip, empty read between, external DROP keeps data, schema-less CREATE re-attaches") {
@@ -246,7 +246,7 @@ class TtCatalogSpec extends SparkSpec {
     spark.sql(s"""CREATE TABLE tt.r16_ddl_store
       (event_id BIGINT, event_type STRING, cents BIGINT, day STRING)
       USING parquet LOCATION '$loc'""")
-    assert(Mutations.ttHeadVersion(spark, loc) == 0)
+    assert(TtLog.head(spark, loc) == 0)
     assert(Mutations.ttHistory(spark, loc).head.op == "create")
     val empty = spark.table("tt.r16_ddl_store")
     assert(empty.columns.toSeq ==
@@ -286,7 +286,7 @@ class TtCatalogSpec extends SparkSpec {
         USING parquet LOCATION '$loc'""")
     }
     spark.sql(s"CREATE TABLE tt.r16_ddl_store USING parquet LOCATION '$loc'")
-    assert(Mutations.ttHeadVersion(spark, loc) == 1)
+    assert(TtLog.head(spark, loc) == 1)
     assert(spark.table("tt.r16_ddl_store").count() == n1,
       "re-attached table lost rows")
     // a schema-less CREATE over a NON-store is refused loudly
@@ -393,7 +393,7 @@ class TtCatalogSpec extends SparkSpec {
         ADD CONSTRAINT impossible CHECK (cents > 100000000)""")
     }
     assert(preAdd.getMessage.contains("violate"), preAdd.getMessage)
-    assert(Mutations.ttHeadVersion(spark, dir) == 3)
+    assert(TtLog.head(spark, dir) == 3)
     // a satisfiable ADD lands as one metadata commit
     spark.sql("""ALTER TABLE tt.r16_ck_store
       ADD CONSTRAINT nonneg CHECK (cents >= 0)""")
@@ -406,19 +406,19 @@ class TtCatalogSpec extends SparkSpec {
         FROM r16_ck_head WHERE event_id % 101 = 0""")
     }
     assert(err.getMessage.contains("nonneg"), err.getMessage)
-    assert(Mutations.ttHeadVersion(spark, dir) == 4,
+    assert(TtLog.head(spark, dir) == 4,
       "refused insert still committed")
     // a conforming INSERT passes the same constraint
     spark.sql("""INSERT INTO tt.r16_ck_store
       SELECT event_id + 9100000000, event_type, cents + 5, day
       FROM r16_ck_head WHERE event_id % 101 = 0""")
-    assert(Mutations.ttHeadVersion(spark, dir) == 5)
+    assert(TtLog.head(spark, dir) == 5)
     // DROP CONSTRAINT: the once-violating insert now lands
     spark.sql("ALTER TABLE tt.r16_ck_store DROP CONSTRAINT nonneg")
     spark.sql("""INSERT INTO tt.r16_ck_store
       SELECT event_id + 9300000000, event_type, -1 AS cents, day
       FROM r16_ck_head WHERE event_id % 101 = 0""")
-    assert(Mutations.ttHeadVersion(spark, dir) == 7)
+    assert(TtLog.head(spark, dir) == 7)
     // unknown DROP is refused (a silent no-op would fake un-enforcement)
     val unk = intercept[Throwable] {
       spark.sql("ALTER TABLE tt.r16_ck_store DROP CONSTRAINT nope")
@@ -490,7 +490,7 @@ class TtCatalogSpec extends SparkSpec {
       val e = intercept[Throwable](write)
       assert(e.getMessage != null && e.getMessage.contains("nonneg"),
         s"refusal must name the constraint: ${e.getMessage}")
-      assert(Mutations.ttHeadVersion(spark, dir) == head,
+      assert(TtLog.head(spark, dir) == head,
         "refused write still committed a version")
       assert(dataFileCount(dir) == files,
         "refused write leaked staged files into the tree")
@@ -538,7 +538,7 @@ class TtCatalogSpec extends SparkSpec {
     assert(Mutations.ttIdempotentAppend(spark, bronze, badRows, "b1")) // v1
     // conforming v0 apply lands on the constrained silver...
     assert(Mutations.ttApplyCdc(spark, bronze, dir, 0, "r17_cdc_v0"))
-    assert(Mutations.ttHeadVersion(spark, dir) == 5)
+    assert(TtLog.head(spark, dir) == 5)
     // ...the violating v1 apply is refused, txn unrecorded
     refusedLoudly(5) {
       Mutations.ttApplyCdc(spark, bronze, dir, 1, "r17_cdc_v1")
@@ -557,7 +557,7 @@ class TtCatalogSpec extends SparkSpec {
       WHEN NOT MATCHED THEN INSERT *""") // v7
     assert(Mutations.ttIdempotentAppend(spark, dir,
       badRow.withColumn("cents", lit(9L)), "r17_enf_txn_good")) // v8
-    assert(Mutations.ttHeadVersion(spark, dir) == 8)
+    assert(TtLog.head(spark, dir) == 8)
     assert(negatives() == 0L)
   }
 
@@ -581,7 +581,7 @@ class TtCatalogSpec extends SparkSpec {
       spark.range(1).select(lit(9710000009L).as("event_id"),
         lit("gen1").as("event_type"), lit(7L).as("cents"),
         lit("2024-01-05").as("day")), "r17_3vl_old_gen")) // v6
-    assert(Mutations.ttHeadVersion(spark, dir) == 6)
+    assert(TtLog.head(spark, dir) == 6)
     // a batch that CARRIES the column and violates is still refused
     val e = intercept[Throwable] {
       Mutations.ttIdempotentAppend(spark, dir,
@@ -591,7 +591,7 @@ class TtCatalogSpec extends SparkSpec {
         "r17_3vl_bad_gen")
     }
     assert(e.getMessage.contains("gen_pos"), e.getMessage)
-    assert(Mutations.ttHeadVersion(spark, dir) == 6)
+    assert(TtLog.head(spark, dir) == 6)
   }
 
   test("RESTORE rolls back constraint state: restore-to-before-ADD un-enforces, restore-forward re-activates; constraint-only diff is not a no-op") {
@@ -607,13 +607,13 @@ class TtCatalogSpec extends SparkSpec {
         SELECT event_id + 9600000000, event_type, -1 AS cents, day
         FROM r17_rst_head WHERE event_id % 211 = 0""")
     intercept[Throwable](violatingInsert())
-    assert(Mutations.ttHeadVersion(spark, dir) == 4)
+    assert(TtLog.head(spark, dir) == 4)
     // restore to BEFORE the ADD: v4 changed no files, so this diff is
     // constraint-only — the pre-r17 no-op check refused it, and the
     // constraint wrongly survived the rollback (the r16 judge probe)
     spark.sql("RESTORE TABLE tt.r17_rst TO VERSION AS OF 3") // v5
     violatingInsert() // lands: the constraint is GONE — v6
-    assert(Mutations.ttHeadVersion(spark, dir) == 6)
+    assert(TtLog.head(spark, dir) == 6)
     assert(spark.table("tt.r17_rst").filter(col("cents") < 0).count() > 0)
     // restore FORWARD to the constrained version: the violating batch
     // is rolled off AND enforcement re-activates
@@ -621,12 +621,12 @@ class TtCatalogSpec extends SparkSpec {
     assert(spark.table("tt.r17_rst").filter(col("cents") < 0).count() == 0,
       "restore-forward kept the violating batch live")
     intercept[Throwable](violatingInsert())
-    assert(Mutations.ttHeadVersion(spark, dir) == 7)
+    assert(TtLog.head(spark, dir) == 7)
     // conforming write still lands under the re-activated constraint
     spark.sql("""INSERT INTO tt.r17_rst
       SELECT event_id + 9600000000, event_type, cents + 2, day
       FROM r17_rst_head WHERE event_id % 211 = 0""") // v8
-    assert(Mutations.ttHeadVersion(spark, dir) == 8)
+    assert(TtLog.head(spark, dir) == 8)
   }
 
   test("SQL ADD COLUMN: metadata-only commit, pre-add snapshots don't surface it, DROP round-trips, collisions and NOT NULL refused") {
@@ -818,12 +818,12 @@ class TtCatalogSpec extends SparkSpec {
     assert(dataFileCount(cloneLoc) == 0, "shallow clone copied data bytes")
     assert(rows(spark.table("tt.r17_cl")) == rows(spark.table("tt.r17_cl_src")))
     // the fork evolves independently: an INSERT lands in the CLONE tree
-    val srcHead = Mutations.ttHeadVersion(spark, src)
+    val srcHead = TtLog.head(spark, src)
     spark.table("tt.r17_cl").limit(1).createOrReplaceTempView("r17_cl_one")
     spark.sql("""INSERT INTO tt.r17_cl
       SELECT event_id + 9900000000, event_type, cents + 1, day
       FROM r17_cl_one""")
-    assert(Mutations.ttHeadVersion(spark, src) == srcHead,
+    assert(TtLog.head(spark, src) == srcHead,
       "clone INSERT committed into the SOURCE log")
     assert(dataFileCount(cloneLoc) > 0)
     assert(spark.table("tt.r17_cl").count() ==
@@ -934,7 +934,7 @@ class TtCatalogSpec extends SparkSpec {
       assert(Mutations.ttApplyCdc(spark, bronze, silverLib, v, s"libloop#$v"))
     }
     def state(d: String) = rows(Mutations.ttAsOf(spark, d,
-      Mutations.ttHeadVersion(spark, d))
+      TtLog.head(spark, d))
       .orderBy("event_id", "day", "event_type", "cents"))
     assert(state(silverSql) == state(silverLib),
       "SQL APPLY CHANGES diverges from the library CDC loop")
