@@ -481,12 +481,12 @@ object Mutations {
   /** One OCC writer over the day-partitioned store at `dir`. `stage()`
     * reads ONLY its touched day partitions from the current store and
     * writes the transformed replacement, partitioned by day, to a private
-    * staging dir (on `dir`'s filesystem); `commit()` runs the conflict
-    * check against versions committed since `base`, re-staging on
-    * overlap, then claims the next version through
-    * [[graft.engine.Publish.claim]] and renames the staged days in with
-    * [[graft.engine.Publish.swap]] — a touched day the transform emptied
-    * is removed. Only a lost claim retries; any other failure propagates.
+    * staging dir (on `dir`'s filesystem). `commit()` is one [[ttOcc]]
+    * attempt per listing: the conflict check against the versions
+    * committed since its base, a re-stage on overlap, then the claim of
+    * `head + 1` through [[graft.engine.Publish.claim]] and the move-in of
+    * the staged days through [[graft.engine.Publish.swap]] — a touched
+    * day the transform emptied is removed.
     */
   private[graft] final class OccWriter(s: SparkSession, dir: String,
       staging: String, base: Int, touched: Seq[String],
@@ -504,37 +504,25 @@ object Mutations {
       var myBase = base
       var attempts = 0
       var rebased = false
-      while (true) {
+      ttOcc(TtLog.list(s, dir)) { log =>
         attempts += 1
-        val committed = occVersions(s, dir)
-        val newer = committed.filter(_._1 > myBase)
-        if (newer.exists(_._2.intersect(touched.toSet).nonEmpty)) {
+        val newer = occVersions(log, myBase)
+        if (newer.exists(_.intersect(touched.toSet).nonEmpty)) {
           // an overlapping commit landed since our snapshot: our staged
           // output was computed from stale data — re-execute on current
-          myBase = committed.map(_._1).max
+          myBase = log.head
           stage()
-        } else {
-          if (newer.nonEmpty) rebased = true
-          val target = committed.map(_._1).max + 1
-          val won =
-            try { Publish.claim(s, TtLog.dir(dir), target, touched.mkString("\n")); true }
-            catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-          if (won) {
-            Publish.swap(s, dir, "day", staging, touched)
-            return OccResult(target, attempts, stagings, rebased)
-          }
-          // lost the claim race: loop re-checks conflicts at the new head
-        }
+        } else if (newer.nonEmpty) rebased = true
+        Publish.claim(s, TtLog.dir(dir), log.head + 1, touched.mkString("\n"))
+        Publish.swap(s, dir, "day", staging, touched)
+        OccResult(log.head + 1, attempts, stagings, rebased)
       }
-      sys.error("unreachable")
     }
   }
 
-  /** Committed (version, touched-partitions) entries in `dir`'s log. */
-  private def occVersions(s: SparkSession, dir: String): Seq[(Int, Set[String])] = {
-    val log = TtLog.list(s, dir)
-    log.commits.keys.toSeq.map(v => v -> log.lines(v).toSet)
-  }
+  /** The touched partitions of each version committed after `base`. */
+  private def occVersions(log: TtLog.Listing, base: Int): Seq[Set[String]] =
+    log.commits.keys.filter(_ > base).toSeq.map(v => log.lines(v).toSet)
 
   private[graft] def occStoreDir(s: SparkSession, d: String): String = {
     val dir = Tables.scratchDir("graft_up12_store", d)
@@ -709,8 +697,8 @@ object Mutations {
     * commit. A bare exclusive create + write had exactly that window, and
     * the two-writer race spec hit it: the loser's probe read the winner's
     * just-created empty file and double-committed. A lost claim surfaces
-    * as hadoop's FileAlreadyExistsException — the retry signal
-    * ttIdempotentAppend keys on. Every `ttCheckpointInterval`-th commit
+    * as hadoop's FileAlreadyExistsException, which only [[ttOcc]] catches:
+    * a writer commits through it. Every `ttCheckpointInterval`-th commit
     * also writes a CHECKPOINT manifest (up19), so snapshot resolution
     * never replays more than one interval's worth of commit files.
     */
@@ -751,9 +739,12 @@ object Mutations {
   private[graft] def ttTxnCommittedCounted(s: SparkSession, dir: String,
       txn: String): (Boolean, Int) = {
     val log = TtLog.list(s, dir)
-    if (log.head < 0) (false, 0)
-    else (log.snapshot(log.head).txns.contains(txn), log.opened)
+    (ttTxnIn(log, txn), log.opened)
   }
+
+  /** Whether a commit in `log` up to its head carries `txn`. */
+  private def ttTxnIn(log: TtLog.Listing, txn: String): Boolean =
+    log.head >= 0 && log.snapshot(log.head).txns.contains(txn)
 
   /** st31 — IDEMPOTENT streaming append: commit `df` as the next
     * version tagged `txn`; a REPLAYED batch (same txn — the
@@ -763,44 +754,35 @@ object Mutations {
     * serializes writers, the txn marker de-duplicates retries. Returns
     * whether a commit actually happened.
     *
-    * OCC retry/rebase (up27): the probe-then-commit pair is made
-    * atomic by ORDER, not by a lock — the txn probe covers every
-    * version committed at probe time, and the claim of head+1
-    * fails if ANY commit (including a concurrent duplicate of
-    * this very txn) landed after the probe; a lost race therefore
-    * re-resolves the head, RE-RUNS the probe against the log that
+    * OCC (up27): the probe-then-commit pair is made atomic by ORDER,
+    * not by a lock — the probe and the head come from one listing, the
+    * probe covers every version up to that head, and the claim of
+    * head+1 fails if ANY commit (including a concurrent duplicate of
+    * this very txn) landed after the listing; a lost race therefore
+    * re-lists through [[ttOcc]], RE-RUNS the probe against the log that
     * actually won, and retries — Delta's conflict-check-then-retry
     * discipline. An append logically conflicts with nothing except its
     * own txn marker landing first, in which case the staged batch is
-    * abandoned unreferenced (vacuum reaps it). Bounded retries: an
-    * append that loses 20 straight races is contention worth crashing
-    * on, not spinning through.
+    * abandoned unreferenced (vacuum reaps it).
     */
   private[graft] def ttIdempotentAppend(s: SparkSession, dir: String,
       df: DataFrame, txn: String): Boolean = {
-    if (ttTxnCommitted(s, dir, txn)) return false
+    val first = TtLog.list(s, dir)
+    if (ttTxnIn(first, txn)) return false
     // stage ONCE: retries re-commit the same immutable published batch
     // at a new version — no re-execution (the rebase half of OCC). The
     // txn hash keeps two racing writers' batch names disjoint.
     val adds = ttWriteBatch(s, dir,
-      s"b${TtLog.head(s, dir) + 1}x${(txn.hashCode & 0x7fffffff).toHexString}",
+      s"b${first.head + 1}x${(txn.hashCode & 0x7fffffff).toHexString}",
       df.repartition(col("day")))
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      val v = TtLog.head(s, dir) + 1
-      // probe AFTER resolving the head: any commit that lands between
-      // this probe and the create occupies v and fails the create
-      if (ttTxnCommitted(s, dir, txn)) return false
-      try {
-        ttCommit(s, dir, v, adds, Nil,
+    ttOcc(first) { log =>
+      // the first listing was probed above
+      ((log eq first) || !ttTxnIn(log, txn)) && {
+        ttCommit(s, dir, log.head + 1, adds, Nil,
           meta = Seq("op=streaming-append", s"txn=$txn"))
-        return true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => () // lost the race — rebase
+        true
       }
     }
-    sys.error(s"append txn=$txn lost $attempts straight commit races")
   }
 
   /** up19 — checkpoint cadence: every Nth commit snapshots the live-file
@@ -887,8 +869,10 @@ object Mutations {
     * serves the same set as a relation for callers that prune it in-plan.
     */
   private[graft] def ttResolve(s: SparkSession, dir: String,
-      asOf: Int): TtResolution = {
-    val log = TtLog.list(s, dir)
+      asOf: Int): TtResolution = ttResolve(TtLog.list(s, dir), asOf)
+
+  /** [[ttResolve]] through `log`; `opened` counts every read through it. */
+  private[graft] def ttResolve(log: TtLog.Listing, asOf: Int): TtResolution = {
     val snap = log.snapshot(asOf)
     TtResolution(snap.live.sorted, snap.stats, snap.schemaOps, log.opened,
       snap.txns, snap.constraints)
@@ -904,8 +888,13 @@ object Mutations {
     * read rule. (Cost: one footer per live file, which the planner
     * reads anyway.)
     */
-  private[graft] def ttAsOf(s: SparkSession, dir: String, v: Int): DataFrame = {
-    val res = ttResolve(s, dir, v)
+  private[graft] def ttAsOf(s: SparkSession, dir: String, v: Int): DataFrame =
+    ttAsOf(s, dir, TtLog.list(s, dir), v)
+
+  /** [[ttAsOf]] resolved through the caller's listing of `dir`'s log. */
+  private[graft] def ttAsOf(s: SparkSession, dir: String, log: TtLog.Listing,
+      v: Int): DataFrame = {
+    val res = ttResolve(log, v)
     val (dvFiles, dataFiles) = res.live.partition(ttIsDv)
     if (dataFiles.isEmpty) {
       // a SQL-created table is legitimately empty between CREATE and its
@@ -1419,12 +1408,11 @@ object Mutations {
     * when no checkpoint covers asOf, when the snapshot is schema-mapped,
     * and, unless `servesDv`, when it holds DV sidecars or clone-inherited
     * external files. One aggregate over the manifest answers both
-    * checkpoint-level guards. Also returns the log files opened: the
-    * checkpoint and the suffix commits, never O(log).
+    * checkpoint-level guards. Also returns the log files opened through
+    * `log`: the checkpoint and the suffix commits, never O(log).
     */
-  private def ttCheckpointRelation(s: SparkSession, dir: String, asOf: Int,
+  private def ttCheckpointRelation(s: SparkSession, log: TtLog.Listing, asOf: Int,
       servesDv: Boolean): Option[(DataFrame, Int)] = {
-    val log = TtLog.list(s, dir)
     val cv = log.checkpointAt(asOf).getOrElse(return None)
     val sfx = log.suffix(cv, asOf)
     def dvOrExternal(f: String) = ttIsDv(f) || f.startsWith("/")
@@ -1455,7 +1443,7 @@ object Mutations {
   private[graft] def ttCheckpointSurvivors(s: SparkSession, dir: String,
       asOf: Int, band: Option[(Long, Long)])
       : Option[(Seq[(String, TtStat)], Int)] =
-    ttCheckpointRelation(s, dir, asOf, servesDv = false).map { case (rel, opened) =>
+    ttCheckpointRelation(s, TtLog.list(s, dir), asOf, servesDv = false).map { case (rel, opened) =>
       // a stat-less row (null lo/hi) cannot be pruned — it survives the
       // band and dies loudly below, exactly the driver path's contract
       val pruned = band.fold(rel) { case (lo, hi) =>
@@ -1476,15 +1464,17 @@ object Mutations {
     * with the scope pushed in-plan and one collect, so the driver sees
     * candidate names only, never the table's file list. DV-bearing and
     * clone-inherited live sets are served; a schema-mapped or
-    * pre-checkpoint snapshot falls back to [[ttResolve]].
+    * pre-checkpoint snapshot falls back to [[ttResolve]] over the same
+    * listing.
     */
   private[graft] final case class TtWriteCandidates(dv: Seq[String],
       data: Seq[String], opened: Int, viaRelation: Boolean)
 
   private[graft] def ttWriteCandidates(s: SparkSession, dir: String,
       asOf: Int, dayScope: Option[Set[String]] = None,
-      dataFileFilter: Option[Seq[String]] = None): TtWriteCandidates =
-    ttCheckpointRelation(s, dir, asOf, servesDv = true) match {
+      dataFileFilter: Option[Seq[String]] = None): TtWriteCandidates = {
+    val log = TtLog.list(s, dir)
+    ttCheckpointRelation(s, log, asOf, servesDv = true) match {
       case Some((rel, opened)) =>
         val isDv = col("file").startsWith("_dv/")
         val inDays = dayScope.fold(lit(true))(ds => ds.toSeq.sorted.map(day =>
@@ -1496,13 +1486,14 @@ object Mutations {
           .collect().map(_.getString(0)).toSeq.sorted.partition(ttIsDv)
         TtWriteCandidates(dvF, dataF, opened, viaRelation = true)
       case None =>
-        val r = ttResolve(s, dir, asOf)
+        val r = ttResolve(log, asOf)
         val (dvF, dataF) = r.live.partition(ttIsDv)
         TtWriteCandidates(dvF, dataF.filter(f =>
           dayScope.forall(_.exists(day =>
             f.startsWith(s"day=$day/") || f.contains(s"/day=$day/"))) &&
             dataFileFilter.forall(_.contains(f))), r.opened, viaRelation = false)
     }
+  }
 
   /** src32 — DATA SKIPPING on tt snapshot reads: the snapshot relation
     * carries per-live-file key min/max and the FileIndex intersects
@@ -1604,52 +1595,35 @@ object Mutations {
       suffix(dir)
     }
 
-  /** Commit already-published adds/removes at `target`, rebasing to the
-    * new head on a lost claim — the OCC append loop factored for verbs
-    * whose staged output is position-independent (an append conflicts
-    * with nothing; its files are immutable until the log references
-    * them). Returns the version that actually committed. Callers whose
-    * verbs READ the snapshot they were derived from (merge, update)
-    * must instead re-derive on conflict — up12's re-stage path.
+  /** Lost claims a tt commit survives before [[ttOcc]] gives up: a writer
+    * that loses this many straight races has contention worth failing on.
     */
-  private[graft] def ttCommitRetry(s: SparkSession, dir: String,
-      target: Int, adds: Seq[String], removes: Seq[String],
-      meta: Seq[String]): Int = {
-    var v = target
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      try { ttCommit(s, dir, v, adds, removes, meta); return v }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          v = TtLog.head(s, dir) + 1
-      }
-    }
-    sys.error(s"commit lost $attempts straight races under $dir")
-  }
+  private[graft] val ttOccAttempts = 20
 
-  /** OCC for SNAPSHOT-DERIVED verbs (merge/delete/update — up12's
-    * re-stage path, factored for the SQL tier): unlike an append, these
-    * verbs READ the snapshot they were derived from, so after a lost
-    * claim the staged output is stale — the loser must RE-DERIVE
-    * against the new head, not just re-commit. The verb closure takes
-    * the target version and derives from `target - 1` internally
-    * (every tt verb already does), so a retry re-runs the whole
-    * probe/rewrite. Bounded; returns the version that committed.
+  /** The one optimistic-concurrency loop of the tt lake's writers: what a
+    * writer does when another commit lands first. `attempt` commits at
+    * `log.head + 1` of the listing it is handed, either re-deriving from
+    * that listing (merge, update, delete: a verb that READ the snapshot
+    * must not publish a stale rewrite) or re-committing what it staged
+    * once (an append's files are immutable and position-independent until
+    * the log references them). The first attempt runs on the caller's own
+    * listing, so a writer that staged from it adds no listing; a lost
+    * claim — the only `FileAlreadyExistsException`, see
+    * [[graft.engine.Publish.claim]] — lists `_log` once and runs the
+    * attempt again. After [[ttOccAttempts]] lost claims it fails naming the
+    * dir; any other exception propagates.
     */
-  private[graft] def ttRetryVerb(s: SparkSession, dir: String,
-      firstTarget: Int)(verb: Int => Unit): Int = {
-    var v = firstTarget
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      try { verb(v); return v }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          v = TtLog.head(s, dir) + 1
+  private[graft] def ttOcc[T](first: TtLog.Listing)(attempt: TtLog.Listing => T): T = {
+    @annotation.tailrec
+    def go(log: TtLog.Listing, n: Int): T =
+      (try Right(attempt(log))
+      catch { case e: org.apache.hadoop.fs.FileAlreadyExistsException => Left(e) }) match {
+        case Right(t) => t
+        case Left(e) if n == ttOccAttempts => throw new IllegalStateException(
+          s"tt commit lost $n straight claim races under ${log.table}", e)
+        case Left(_) => go(log.relist, n + 1)
       }
-    }
-    sys.error(s"verb lost $attempts straight commit races under $dir")
+    go(first, 1)
   }
 
   /** up25 — OPTIMIZE (Delta's OPTIMIZE / Iceberg's rewrite_data_files):
@@ -1843,7 +1817,7 @@ object Mutations {
   }
 
   /** src35 — the SQL INSERT INTO verb: one plain append commit at
-    * head+1 (`op=insert`), OCC-retried like every append. The most
+    * head+1 (`op=insert`), committed through [[ttOcc]]. The most
     * common lakehouse write finally has its SQL spelling — routed here
     * by [[graft.sources.TtTable]]'s V1 write bridge (DSv2
     * `SupportsWrite` → `InsertableRelation`), the same fallback shape
@@ -1853,7 +1827,8 @@ object Mutations {
     */
   private[graft] def ttSqlInsert(s: SparkSession, dir: String,
       data: DataFrame): Unit = {
-    val v = TtLog.head(s, dir) + 1
+    val first = TtLog.list(s, dir)
+    val v = first.head + 1
     // CHECK constraints (src42) are enforced in the shared commit path
     // (ttEnforceConstraints) — every write verb validates, not just
     // this one, and a rebased OCC retry re-validates at its real target
@@ -1864,7 +1839,7 @@ object Mutations {
     val rows = ttToPhysical(s, dir, v - 1, data)
     require(rows.columns.contains("day"), "insert batch lost the day column")
     val adds = ttWriteBatch(s, dir, s"i$v", rows.repartition(col("day")))
-    ttCommitRetry(s, dir, v, adds, Nil, Seq("op=insert"))
+    ttOcc(first)(log => ttCommit(s, dir, log.head + 1, adds, Nil, Seq("op=insert")))
   }
 
   // ---- src42: CHECK constraints (Delta's ADD CONSTRAINT) ----
@@ -2201,63 +2176,59 @@ object Mutations {
     * silver head's matching rows, inserts as an appended batch, both
     * referenced by a single commit so a replica reader never observes
     * a half-applied version. Idempotent via the txn probe (a replayed
-    * version is absorbed — returns false); OCC-retried with
-    * RE-DERIVATION (the DV rows are derived from the silver head, so a
-    * lost claim recomputes them against the head that won). Cost ∝ the
-    * version's churn, never either table.
+    * version is absorbed — returns false); committed through [[ttOcc]]:
+    * the insert half is an append, staged once, while the DV rows are
+    * derived from the silver head, so a lost claim recomputes them
+    * against the head that won. Cost ∝ the version's churn, never
+    * either table.
     */
   private[graft] def ttApplyCdc(s: SparkSession, bronzeDir: String,
       silverDir: String, v: Int, txn: String): Boolean = {
-    if (ttTxnCommitted(s, silverDir, txn)) return false
+    val first = TtLog.list(s, silverDir)
+    if (ttTxnIn(first, txn)) return false
     val ch =
       if (v == 0)
         ttAsOf(s, bronzeDir, 0).withColumn("_change_type", lit("insert"))
       else ttChanges(s, bronzeDir, v - 1, v)
     // per-branch checkpoints kept (r19, measured): one shared checkpoint
     // of the full feed looked cheaper on paper (ch evaluated once, not
-    // twice) but A/B'd 30% SLOWER on st33 — the OCC loop re-reads these
-    // leaves per attempt, and two narrow post-filter leaves beat one
-    // wide full-feed leaf re-filtered per use.
+    // twice) but A/B'd 30% SLOWER on st33 — two narrow post-filter
+    // leaves beat one wide full-feed leaf re-filtered per use.
     val ins = ch.filter(col("_change_type") === "insert")
       .drop("_change_type").localCheckpoint(true)
     val delKeys = ch.filter(col("_change_type") === "delete")
       .select("event_id").localCheckpoint(true)
     val hasIns = ins.head(1).nonEmpty
     val hasDel = delKeys.head(1).nonEmpty
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      val sv = TtLog.head(s, silverDir) + 1
-      if (ttTxnCommitted(s, silverDir, txn)) return false
-      // DV rows are silver-head-derived — recomputed on every attempt
-      val dvAdds =
-        if (!hasDel) Nil
-        else {
-          // silver-head candidates through the checkpoint relation
-          // (r17 #1) — re-resolved per OCC attempt like the head probe
-          val cdcCand = ttWriteCandidates(s, silverDir, sv - 1)
-          val (dvF, dataF) = (cdcCand.dv, cdcCand.data)
-          val tagged = ttApplyDv(s, silverDir,
-            ttReadFiles(s, silverDir, dataF, mergeSchema = true)
-              .withColumn("_pf", ttRelFile(silverDir)), dvF)
-          val doomed = tagged.join(delKeys, Seq("event_id"))
-            .select(col("_pf").as("file"), col("event_id"))
-            .localCheckpoint(true)
-          ttWriteDv(s, silverDir, s"cdc$sv-dv", doomed)
-        }
-      val batchAdds =
-        if (!hasIns) Nil
-        else ttWriteBatch(s, silverDir, s"cdc$sv",
-          ins.repartition(col("day")))
-      try {
+    // an append does not depend on the silver head: staged once
+    val batchAdds =
+      if (!hasIns) Nil
+      else ttWriteBatch(s, silverDir, s"cdc${first.head + 1}",
+        ins.repartition(col("day")))
+    ttOcc(first) { log =>
+      val sv = log.head + 1
+      // the first listing was probed above
+      ((log eq first) || !ttTxnIn(log, txn)) && {
+        // DV rows are silver-head-derived — recomputed on every attempt
+        val dvAdds =
+          if (!hasDel) Nil
+          else {
+            // silver-head candidates through the checkpoint relation (r17 #1)
+            val cdcCand = ttWriteCandidates(s, silverDir, sv - 1)
+            val (dvF, dataF) = (cdcCand.dv, cdcCand.data)
+            val tagged = ttApplyDv(s, silverDir,
+              ttReadFiles(s, silverDir, dataF, mergeSchema = true)
+                .withColumn("_pf", ttRelFile(silverDir)), dvF)
+            val doomed = tagged.join(delKeys, Seq("event_id"))
+              .select(col("_pf").as("file"), col("event_id"))
+              .localCheckpoint(true)
+            ttWriteDv(s, silverDir, s"cdc$sv-dv", doomed)
+          }
         ttCommit(s, silverDir, sv, dvAdds ++ batchAdds, Nil,
           meta = Seq("op=cdc-apply", s"txn=$txn"))
-        return true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => () // rebase
+        true
       }
     }
-    sys.error(s"cdc apply txn=$txn lost $attempts straight commit races")
   }
 
   /** The declared up15 query: per adjacent version pair of the up13
@@ -2796,10 +2767,10 @@ object Mutations {
 
   /** up27 — OCC APPEND under a FORCED commit race: two writers stage
     * batches from the SAME head; writer B claims head+1 first, then
-    * writer A attempts the same version — its claim fails and it
-    * REBASES (re-resolves the head and re-commits its already-published
-    * files at the next version, no re-execution: an append's staged
-    * output is position-independent). Delta's conflict-check-then-retry
+    * writer A attempts the same version from the same stale listing —
+    * its claim fails and it REBASES ([[ttOcc]] re-lists and it re-commits
+    * its already-published files at the next version, no re-execution:
+    * an append's staged output is position-independent). Delta's conflict-check-then-retry
     * discipline, driven deterministically so the loser's path executes
     * every run. The declared read is pinned at v5 (the first race's
     * post-append head over the memoized store — later runs race again
@@ -2809,7 +2780,8 @@ object Mutations {
   def occAppendRollup(s: SparkSession, d: String): DataFrame = {
     val dir = ttDerivedScenario(s, d, "graft_up27_store",
       () => ttBaseScenario(s, d))(_ => ())
-    val h = TtLog.head(s, dir)
+    val stale = TtLog.list(s, dir)
+    val h = stale.head
     val base = events(s, d).select(col("event_id"), col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"),
       date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -2820,8 +2792,12 @@ object Mutations {
       slice(31, 4000000000L).repartition(col("day")))
     val addsB = ttWriteBatch(s, dir, s"ob${h + 1}",
       slice(37, 5000000000L).repartition(col("day")))
-    val vB = ttCommitRetry(s, dir, h + 1, addsB, Nil, Seq("op=append"))
-    val vA = ttCommitRetry(s, dir, h + 1, addsA, Nil, Seq("op=append"))
+    def append(adds: Seq[String]): Int = ttOcc(stale) { log =>
+      ttCommit(s, dir, log.head + 1, adds, Nil, Seq("op=append"))
+      log.head + 1
+    }
+    val vB = append(addsB)
+    val vA = append(addsA)
     require(vB == h + 1 && vA == h + 2,
       s"forced race resolved wrong: B=$vB A=$vA from head $h")
     ttAsOf(s, dir, 5).groupBy("event_type")

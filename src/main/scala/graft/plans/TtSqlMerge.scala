@@ -6,6 +6,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 
+import graft.ops.Mutations
+import graft.sources.TtLog
+
 /** src29 — SQL `MERGE INTO` over a tt-catalog table, intercepted at
   * resolution and routed to up18's transactional [[graft.ops.Mutations
   * .ttMergeInto]] — how a table format owns a row-level SQL verb: the
@@ -99,7 +102,9 @@ case class TtSqlMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** The substituted command: one ttMergeInto commit at head+1. Runs
+/** The substituted command: one ttMergeInto commit at head+1 through
+  * [[graft.ops.Mutations.ttOcc]], which re-runs the probe/rewrite against
+  * the head that won a lost claim, never publishing a stale rewrite. Runs
   * eagerly under `spark.sql` like every command.
   */
 case class TtSqlMergeCommand(dir: String, source: LogicalPlan)
@@ -108,42 +113,41 @@ case class TtSqlMergeCommand(dir: String, source: LogicalPlan)
   override def run(spark: SparkSession): Seq[Row] = {
     val src = org.apache.spark.sql.GraftColumns.ofRows(spark, source)
       .select("event_id", "event_type", "cents", "day")
-    // OCC with RE-DERIVATION: a lost claim re-runs the probe/rewrite
-    // against the head that actually won (the closure derives from
-    // v - 1 internally), never publishes a stale rewrite
-    graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
-      graft.ops.Mutations.ttMergeInto(spark, dir, src, v, s"m$v"))
+    Mutations.ttOcc(TtLog.listCommitted(spark, dir))(log =>
+      Mutations.ttMergeInto(spark, dir, src, log.head + 1, s"m${log.head + 1}"))
     Seq.empty
   }
 }
 
-/** SQL DELETE → one DV commit at head+1. The parsed predicate re-binds
+/** SQL DELETE → one DV commit at head+1, re-derived per attempt of
+  * [[graft.ops.Mutations.ttOcc]]. The parsed predicate re-binds
   * to the snapshot DataFrame by column NAME (exprIds belong to the SQL
   * relation instance and mean nothing to the snapshot read).
   */
 case class TtSqlDeleteCommand(dir: String, condition: Expression)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
-      graft.ops.Mutations.ttDvDelete(spark, dir, v, s"dv$v",
-        TtSqlCommands.byName(condition),
-        dayScope = TtSqlCommands.dayScope(condition)))
+    Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
+      val v = log.head + 1
+      Mutations.ttDvDelete(spark, dir, v, s"dv$v", TtSqlCommands.byName(condition),
+        dayScope = TtSqlCommands.dayScope(condition))
+    }
     Seq.empty
   }
 }
 
-/** SQL UPDATE → one up21 merge-on-read update commit at head+1. */
+/** SQL UPDATE → one up21 merge-on-read update commit at head+1,
+  * re-derived per attempt of [[graft.ops.Mutations.ttOcc]].
+  */
 case class TtSqlUpdateCommand(dir: String, sets: Seq[(String, Expression)],
     condition: Expression) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
-      graft.ops.Mutations.ttDvUpdate(spark, dir, v, s"u$v",
-        TtSqlCommands.byName(condition),
+    Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
+      val v = log.head + 1
+      Mutations.ttDvUpdate(spark, dir, v, s"u$v", TtSqlCommands.byName(condition),
         sets.map { case (c, e) => c -> TtSqlCommands.byName(e) },
-        dayScope = TtSqlCommands.dayScope(condition)))
+        dayScope = TtSqlCommands.dayScope(condition))
+    }
     Seq.empty
   }
 }

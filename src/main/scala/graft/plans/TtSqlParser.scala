@@ -8,6 +8,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
+import graft.ops.Mutations
+import graft.sources.TtLog
+
 /** src37 — SQL `RESTORE TABLE tt.<name> TO VERSION AS OF <v>` (Delta's
   * RESTORE spelling): the SQL front door for up22's log-structured
   * rollback, injected as a PARSER extension (`injectParser`) exactly the
@@ -230,9 +233,9 @@ object TtSqlParser {
   }
 }
 
-/** The executed statement: one OCC-retried `op=restore` commit at
-  * head+1. Returns (table, restored_to, committed_as) so the caller
-  * sees which version the rollback landed at.
+/** The executed statement: one `op=restore` commit at head+1 through
+  * [[graft.ops.Mutations.ttOcc]]. Returns (table, restored_to,
+  * committed_as) so the caller sees which version the rollback landed at.
   */
 case class TtSqlRestoreCommand(table: String, target: Int)
     extends LeafRunnableCommand {
@@ -243,20 +246,22 @@ case class TtSqlRestoreCommand(table: String, target: Int)
 
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
-    val committed = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1)(v =>
-      graft.ops.Mutations.ttRestore(spark, dir, v, target))
+    val committed = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
+      val v = log.head + 1
+      Mutations.ttRestore(spark, dir, v, target)
+      v
+    }
     Seq(Row(s"tt.$table", target.toLong, committed.toLong))
   }
 }
 
 /** src39/up31 — `OPTIMIZE tt.x [WHERE day = 'D'] [ZORDER BY (c1[,
-  * c2])]`: one OCC-retried `op=optimize` commit — bin-packing (up25)
-  * bare, clustered rewrite (up28) with the ZORDER clause (one column
-  * range-sorts, two Morton-interleave), PARTITION-SCOPED with WHERE
-  * (up31: candidates restricted to the named day before any file is
-  * read). `committed_as` is -1 when nothing needed packing (a true
-  * no-op, no commit).
+  * c2])]`: one `op=optimize` commit through [[graft.ops.Mutations.ttOcc]]
+  * — bin-packing (up25) bare, clustered rewrite (up28) with the ZORDER
+  * clause (one column range-sorts, two Morton-interleave),
+  * PARTITION-SCOPED with WHERE (up31: candidates restricted to the named
+  * day before any file is read). `committed_as` is -1 when nothing
+  * needed packing (a true no-op, no commit).
   */
 case class TtSqlOptimizeCommand(table: String, zorderBy: Seq[String],
     whereDay: Option[String] = None) extends LeafRunnableCommand {
@@ -269,15 +274,11 @@ case class TtSqlOptimizeCommand(table: String, zorderBy: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val days = whereDay.map(Set(_))
-    var did = false
-    val v = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1) { tv =>
-      did =
-        if (zorderBy.nonEmpty)
-          graft.ops.Mutations.ttOptimizeClustered(spark, dir, tv, s"z$tv",
-            zorderBy, onlyDays = days)
-        else graft.ops.Mutations.ttOptimize(spark, dir, tv, s"o$tv",
-          onlyDays = days)
+    val (did, v) = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
+      val tv = log.head + 1
+      (if (zorderBy.nonEmpty)
+        Mutations.ttOptimizeClustered(spark, dir, tv, s"z$tv", zorderBy, onlyDays = days)
+      else Mutations.ttOptimize(spark, dir, tv, s"o$tv", onlyDays = days), tv)
     }
     Seq(Row(s"tt.$table", zorderBy.nonEmpty, if (did) v.toLong else -1L))
   }
@@ -307,9 +308,9 @@ case class TtSqlVacuumCommand(table: String, hours: Int)
 }
 
 /** src42 — `ALTER TABLE tt.x ADD CONSTRAINT n CHECK (expr)`: one
-  * OCC-retried metadata commit, refused if existing data violates the
-  * expression (Delta's rule); SQL INSERTs are validated against active
-  * constraints from then on.
+  * metadata commit through [[graft.ops.Mutations.ttOcc]], refused if
+  * existing data violates the expression (Delta's rule); SQL INSERTs are
+  * validated against active constraints from then on.
   */
 case class TtSqlAddConstraintCommand(table: String, cname: String,
     cexpr: String) extends LeafRunnableCommand {
@@ -319,9 +320,11 @@ case class TtSqlAddConstraintCommand(table: String, cname: String,
     AttributeReference("committed_as", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
-    val v = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1)(tv =>
-      graft.ops.Mutations.ttAddConstraint(spark, dir, tv, cname, cexpr))
+    val v = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
+      val tv = log.head + 1
+      Mutations.ttAddConstraint(spark, dir, tv, cname, cexpr)
+      tv
+    }
     Seq(Row(s"tt.$table", cname, v.toLong))
   }
 }
@@ -335,9 +338,11 @@ case class TtSqlDropConstraintCommand(table: String, cname: String)
     AttributeReference("committed_as", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
-    val v = graft.ops.Mutations.ttRetryVerb(spark, dir,
-      graft.sources.TtLog.requireHead(spark, dir) + 1)(tv =>
-      graft.ops.Mutations.ttDropConstraint(spark, dir, tv, cname))
+    val v = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
+      val tv = log.head + 1
+      Mutations.ttDropConstraint(spark, dir, tv, cname)
+      tv
+    }
     Seq(Row(s"tt.$table", cname, v.toLong))
   }
 }
@@ -451,10 +456,8 @@ case class TtSqlApplyChangesCommand(target: String, source: String,
         s"history [0, $head]")
     def txn(v: Int) = s"applychanges#$source#$v"
     if (from > 0) {
-      val prevApplied =
-        try graft.ops.Mutations.ttTxnCommitted(spark, tgtDir, txn(from - 1))
-        catch { case _: Throwable => false } // fresh target: no log yet
-      require(prevApplied,
+      // a fresh target lists empty: no txn, so a gap
+      require(graft.ops.Mutations.ttTxnCommitted(spark, tgtDir, txn(from - 1)),
         s"APPLY CHANGES INTO tt.$target FROM VERSION $from leaves a " +
           s"version gap: tt.$source version ${from - 1} was never applied " +
           "to the target through this statement")

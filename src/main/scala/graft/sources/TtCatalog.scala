@@ -52,9 +52,10 @@ object TtCatalog {
 final class TtTable(tableName: String, dir: String, version: Option[Int])
   extends Table with SupportsRead with SupportsWrite {
 
-  private def snapshot(s: SparkSession): DataFrame =
-    graft.ops.Mutations.ttAsOf(s, dir,
-      version.getOrElse(TtLog.requireHead(s, dir)))
+  private def snapshot(s: SparkSession): DataFrame = {
+    val log = TtLog.listCommitted(s, dir)
+    graft.ops.Mutations.ttAsOf(s, dir, log, version.getOrElse(log.head))
+  }
 
   // schema is resolved once at table load (analysis time), per-snapshot:
   // a pre-evolution version genuinely lacks up17's added column
@@ -71,9 +72,10 @@ final class TtTable(tableName: String, dir: String, version: Option[Int])
   /** src35 — SQL `INSERT INTO tt.x SELECT ...`: the analyzer aligns the
     * query to the table schema and plans AppendData; the V1 write
     * bridge hands the rows to [[graft.ops.Mutations.ttSqlInsert]] — one
-    * plain append commit, OCC-retried. Overwrite (INSERT OVERWRITE /
-    * truncate) is refused: rewriting a versioned table's head wholesale
-    * is a restore or a COW verb, never a blind overwrite.
+    * plain append commit through [[graft.ops.Mutations.ttOcc]]. Overwrite
+    * (INSERT OVERWRITE / truncate) is refused: rewriting a versioned
+    * table's head wholesale is a restore or a COW verb, never a blind
+    * overwrite.
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -210,35 +212,29 @@ final class TtCatalog extends TableCatalog {
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val s = SparkSession.active
     val dir = dirOf(ident)
-    // OCC-retried like every other SQL verb (MERGE/DELETE/UPDATE use
-    // ttRetryVerb, INSERT uses ttCommitRetry): a schema-op commit is
-    // position-independent, so a lost claim just rebases to the new
-    // head instead of surfacing an uncaught FileAlreadyExistsException.
-    def retried(verb: Int => Unit): Unit =
-      graft.ops.Mutations.ttRetryVerb(s, dir,
-        TtLog.requireHead(s, dir) + 1)(verb)
-    changes.foreach {
-      case r: TableChange.RenameColumn =>
-        require(r.fieldNames.length == 1,
-          "tt tables have no nested columns to rename")
-        retried(v => graft.ops.Mutations.ttRenameColumn(s, dir, v,
-          r.fieldNames.head, r.newName))
-      case d: TableChange.DeleteColumn =>
-        require(d.fieldNames.length == 1,
-          "tt tables have no nested columns to drop")
-        retried(v => graft.ops.Mutations.ttDropColumn(s, dir, v,
-          d.fieldNames.head))
-      case a: TableChange.AddColumn =>
-        require(a.fieldNames.length == 1,
-          "tt tables have no nested columns to add into")
-        require(a.isNullable,
-          "tt ADD COLUMN must be nullable: pre-add files read the new " +
-            "column as NULL")
-        retried(v => graft.ops.Mutations.ttAddColumn(s, dir, v,
-          a.fieldNames.head, a.dataType))
-      case other => throw new UnsupportedOperationException(
-        "tt ALTER TABLE supports RENAME COLUMN, DROP COLUMN and " +
-          s"ADD COLUMN only, got $other")
+    changes.foreach { change =>
+      val verb: Int => Unit = change match {
+        case r: TableChange.RenameColumn =>
+          require(r.fieldNames.length == 1,
+            "tt tables have no nested columns to rename")
+          graft.ops.Mutations.ttRenameColumn(s, dir, _, r.fieldNames.head, r.newName)
+        case d: TableChange.DeleteColumn =>
+          require(d.fieldNames.length == 1,
+            "tt tables have no nested columns to drop")
+          graft.ops.Mutations.ttDropColumn(s, dir, _, d.fieldNames.head)
+        case a: TableChange.AddColumn =>
+          require(a.fieldNames.length == 1,
+            "tt tables have no nested columns to add into")
+          require(a.isNullable,
+            "tt ADD COLUMN must be nullable: pre-add files read the new " +
+              "column as NULL")
+          graft.ops.Mutations.ttAddColumn(s, dir, _, a.fieldNames.head, a.dataType)
+        case other => throw new UnsupportedOperationException(
+          "tt ALTER TABLE supports RENAME COLUMN, DROP COLUMN and " +
+            s"ADD COLUMN only, got $other")
+      }
+      // one metadata commit at head + 1, like every SQL verb
+      graft.ops.Mutations.ttOcc(TtLog.listCommitted(s, dir))(log => verb(log.head + 1))
     }
     loadTable(ident)
   }

@@ -224,7 +224,7 @@ private[graft] object TtLog {
     * by version and its checkpoint versions. Every file read through the
     * listing counts in [[opened]].
     */
-  final class Listing private[TtLog] (s: SparkSession, table: String, fs: FileSystem,
+  final class Listing private[TtLog] (s: SparkSession, val table: String, fs: FileSystem,
       val commits: SortedMap[Int, Path], val checkpoints: SortedSet[Int]) {
     private var n = 0
 
@@ -233,6 +233,9 @@ private[graft] object TtLog {
 
     /** The newest committed version, or -1. */
     def head: Int = commits.lastOption.fold(-1)(_._1)
+
+    /** A new listing of the same log. */
+    def relist: Listing = list(s, table)
 
     /** The newest checkpoint at or below `asOf`. */
     def checkpointAt(asOf: Int): Option[Int] = checkpoints.rangeTo(asOf).lastOption
@@ -300,10 +303,13 @@ private[graft] object TtLog {
   /** The newest committed version of `table`, or -1. */
   def head(s: SparkSession, table: String): Int = list(s, table).head
 
-  /** [[head]] for a caller that needs a committed version. */
-  def requireHead(s: SparkSession, table: String): Int = {
-    val h = head(s, table)
-    require(h >= 0, s"no committed tt version under $table")
-    h
+  /** [[list]] for a caller that needs a committed version. */
+  def listCommitted(s: SparkSession, table: String): Listing = {
+    val l = list(s, table)
+    require(l.head >= 0, s"no committed tt version under $table")
+    l
   }
+
+  /** [[head]] for a caller that needs a committed version. */
+  def requireHead(s: SparkSession, table: String): Int = listCommitted(s, table).head
 }

@@ -950,7 +950,10 @@ object EventStreams {
     * backlog drain (ingest directories fill in time order). st12 uses
     * this so its per-batch merge genuinely leaves out-of-slice day
     * partitions untouched; the hash staging above would make every batch
-    * touch every day and prove nothing about write locality.
+    * touch every day and prove nothing about write locality. The file
+    * source admits files in modification-time order, which the parallel
+    * write leaves to whichever task finished first, so the slices' mtimes
+    * are set afterwards in slice order, a second apart (st26's pinning).
     */
   private[graft] def rangeSrc(s: SparkSession, d: String): String =
     Staged.dir(s, "backfill_range", d) {
@@ -959,6 +962,10 @@ object EventStreams {
         Tables.events(s, d)
           .repartitionByRange(backfillFiles, col("ts"), col("event_id"))
           .write.mode("overwrite").parquet(dir)
+        val base = System.currentTimeMillis() - 3600000L // part-<i> holds slice i
+        new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+          .sortBy(_.getName).zipWithIndex
+          .foreach { case (f, i) => assert(f.setLastModified(base + i * 1000L)) }
         dir
       }
     }
@@ -1460,8 +1467,8 @@ object EventStreams {
     * rates the table dies of file count, not data volume — so after
     * each append the SAME foreachBatch driver checks the live layout
     * and, when any day reaches `threshold` files, lands up25's
-    * bin-packing OPTIMIZE as its own OCC-retried commit. The check is
-    * log metadata only (ttLiveFiles — checkpoint + suffix reads, no
+    * bin-packing OPTIMIZE as its own commit through `Mutations.ttOcc`.
+    * The check is log metadata only (checkpoint + suffix reads, no
     * data scan); the compaction cost is ∝ packed files and amortized
     * across the stream. With five micro-batches and a threshold of 3,
     * compaction fires deterministically after batches 3 and 5
@@ -1495,14 +1502,16 @@ object EventStreams {
           expr("cast(round(value * 100) as bigint)").as("cents"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
         Mutations.ttIdempotentAppend(sp, dir, rows, s"st32#$batchId")
-        val head = TtLog.head(sp, dir)
-        val dataF = Mutations.ttLiveFiles(sp, dir, head)
+        val log = TtLog.list(sp, dir)
+        val dataF = Mutations.ttResolve(log, log.head).live
           .filterNot(Mutations.ttIsDv).filter(_.startsWith("day="))
         val maxPerDay = dataF.groupBy(f => f.take(f.indexOf('/')))
           .values.map(_.size).maxOption.getOrElse(0)
         if (maxPerDay >= threshold)
-          Mutations.ttRetryVerb(sp, dir, head + 1)(v =>
-            Mutations.ttOptimize(sp, dir, v, s"ac$v", minFilesPerDay = 2))
+          Mutations.ttOcc(log) { l =>
+            val v = l.head + 1
+            Mutations.ttOptimize(sp, dir, v, s"ac$v", minFilesPerDay = 2)
+          }
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

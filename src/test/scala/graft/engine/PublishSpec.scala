@@ -201,6 +201,30 @@ class PublishSpec extends SparkSpec {
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("source lint: a lost tt claim is retried only in Mutations.ttOcc") {
+    // a lost claim surfaces only as FileAlreadyExistsException, so a loop
+    // that retries one must catch it: with the catch confined to ttOcc,
+    // ttOcc's bound is the only retry bound
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root: no $root")
+    val counter = "\\battempts\\s*[<>]".r
+    val offenders = Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith(Paths.get("engine/Publish.scala")))
+      .flatMap { p =>
+        val code = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+        // the body of ttOcc, up to the first line that closes a member
+        val rest = if (!p.endsWith(Paths.get("ops/Mutations.scala"))) code
+          else code.replaceFirst("(?s)def ttOcc\\[.*?\\n  \\}\\n", "")
+        (rest.split("\n").filter(_.contains("FileAlreadyExistsException")).map(l =>
+          s"$p: catches a lost claim outside Mutations.ttOcc: ${l.trim}") ++
+          rest.split("\n").filter(l => counter.findFirstIn(l).isDefined).map(l =>
+            s"$p: a hand-rolled retry bound (use Mutations.ttOcc): ${l.trim}")).toSeq
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val loops = Files.readString(Paths.get("src/main/scala/graft/ops/Mutations.scala"))
+    assert(loops.contains("def ttOcc[") && loops.contains("private[graft] val ttOccAttempts = 20"))
+  }
 }
 
 /** Test-only filesystem for the `faultfs` scheme: the local disk with two

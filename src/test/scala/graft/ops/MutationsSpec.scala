@@ -953,6 +953,7 @@ class MutationsSpec extends SparkSpec {
 
   test("snapshot-derived verbs RE-DERIVE after a lost commit race — a stale rewrite never publishes") {
     val dir = Mutations.ttStore(spark, sf0001) // head v3
+    val stale = graft.sources.TtLog.list(spark, dir)
     // a "concurrent" writer lands v4 first: an append introducing key K
     val k = 7500000001L
     val dayX = graft.Tables.events(spark, sf0001).agg(date_format(
@@ -961,15 +962,18 @@ class MutationsSpec extends SparkSpec {
       Seq((k, "moved", 999L, dayX))
         .toDF("event_id", "event_type", "cents", "day"), "race-derive"))
     assert(graft.sources.TtLog.head(spark, dir) == 4)
-    // the merge STARTS from the stale head (target 4, derived at v3):
+    // the merge STARTS from the stale listing (target 4, derived at v3):
     // its claim of v4 must fail, and the retry must re-derive at v4 —
     // where K now exists — so K is an UPDATE. A re-commit WITHOUT
     // re-derivation would treat K as unmatched and duplicate it.
     val dayY = java.time.LocalDate.parse(dayX).plusDays(4).toString
     val src = Seq((k, "merged", 111L, dayY))
       .toDF("event_id", "event_type", "cents", "day")
-    val landed = Mutations.ttRetryVerb(spark, dir, 4)(v =>
-      Mutations.ttMergeInto(spark, dir, src, v, s"m$v"))
+    val landed = Mutations.ttOcc(stale) { log =>
+      val v = log.head + 1
+      Mutations.ttMergeInto(spark, dir, src, v, s"m$v")
+      v
+    }
     assert(landed == 5, s"merge landed at v$landed")
     val rows = Mutations.ttAsOf(spark, dir, 5)
       .filter(col("event_id") === k)
@@ -978,6 +982,32 @@ class MutationsSpec extends SparkSpec {
       s"stale-derived merge duplicated the racing key: ${rows.toSeq}")
     assert(rows.head.getString(0) == "merged" &&
       rows.head.getLong(1) == 111L && rows.head.getString(2) == dayY)
+  }
+
+  test("ttOcc: an attempt that always loses its claim stops after 20 attempts, naming the dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_occ_bound").toString
+    var heads = Seq.empty[Int]
+    val err = intercept[IllegalStateException] {
+      Mutations.ttOcc(graft.sources.TtLog.list(spark, dir)) { log =>
+        heads :+= log.head
+        throw new org.apache.hadoop.fs.FileAlreadyExistsException("version 0 taken")
+      }
+    }
+    assert(heads == Seq.fill(20)(-1), heads.toString)
+    assert(Mutations.ttOccAttempts == 20)
+    assert(err.getMessage.contains(dir), err.getMessage)
+    // any other failure propagates from the first attempt
+    var calls = 0
+    intercept[java.io.IOException] {
+      Mutations.ttOcc(graft.sources.TtLog.list(spark, dir)) { _ =>
+        calls += 1
+        throw new java.io.IOException("disk gone")
+      }
+    }
+    assert(calls == 1)
+    // SQL verbs start from a listing with a committed version
+    val none = intercept[IllegalArgumentException](graft.sources.TtLog.listCommitted(spark, dir))
+    assert(none.getMessage.contains(s"no committed tt version under $dir"), none.getMessage)
   }
 
   test("up26 column mapping: rename/drop are pure metadata, snapshots keep their own names, mapped append writes physical") {

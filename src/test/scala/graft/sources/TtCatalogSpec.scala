@@ -969,6 +969,27 @@ class TtCatalogSpec extends SparkSpec {
     assert(beyond.getMessage.contains("outside"), beyond.getMessage)
   }
 
+  test("APPLY CHANGES: an unreadable target checkpoint fails with the read error, not a version gap") {
+    val bronze = graft.ops.Mutations.ttBaseScenario(spark, sf0001)
+    TtCatalog.install(spark)
+    TtCatalog.register("r19ac_bronze", bronze)
+    // a target at v4 whose checkpoint is not parquet
+    val target = java.nio.file.Files.createTempDirectory("graft_ac_badckpt")
+    val log = java.nio.file.Files.createDirectories(target.resolve("_log"))
+    (0 to 4).foreach(v => java.nio.file.Files.writeString(log.resolve(s"v$v.txt"), s"# ts=$v"))
+    java.nio.file.Files.writeString(log.resolve("ckpt-v4.parquet"), "not parquet")
+    TtCatalog.register("r19ac_badckpt", target.toString)
+    try {
+      val err = intercept[Throwable] {
+        spark.sql("APPLY CHANGES INTO tt.r19ac_badckpt FROM tt.r19ac_bronze " +
+          "FROM VERSION 1").collect()
+      }
+      val chain = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).map(String.valueOf).toSeq
+      assert(!chain.exists(_.contains("version gap")), chain.mkString("\n"))
+      assert(chain.exists(_.contains("ckpt-v4.parquet")), chain.mkString("\n"))
+    } finally Seq("r19ac_bronze", "r19ac_badckpt").foreach(TtCatalog.tables.remove)
+  }
+
   test("DESCRIBE DETAIL: filesystem columns match a direct listing; metadata columns match the log; constraints and schema ops surface") {
     import graft.ops.Mutations
     val dir = Mutations.ttStore(spark, sf0001)

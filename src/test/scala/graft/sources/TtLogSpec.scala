@@ -166,14 +166,17 @@ class TtLogSpec extends SparkSpec {
   }
 
   test("SQL DML on a tt table lists and opens its _log no more often than before") {
-    // (listStatus, open) calls under _log per statement, measured on the
-    // commit before the log reader was shared; round 2 runs over ckpt-v4
+    // (listStatus, open) calls under _log per statement, measured once
+    // each SQL statement resolved its table, and the fallback of its write
+    // candidates, from one listing, and every writer retried a lost claim
+    // through Mutations.ttOcc; round 2 runs over ckpt-v4
     val bound = Map(
-      "ctas" -> (5, 4), "version_as_of" -> (2, 4),
-      "merge1" -> (6, 6), "update1" -> (6, 9), "delete1" -> (9, 13),
-      "insert1" -> (6, 2), "read1" -> (4, 2),
-      "merge2" -> (7, 8), "update2" -> (7, 11), "delete2" -> (10, 15),
-      "insert2" -> (6, 2), "read2" -> (4, 2))
+      "ctas" -> (4, 4), "version_as_of" -> (2, 4),
+      "merge1" -> (4, 6), "update1" -> (4, 9), "delete1" -> (7, 13),
+      "insert1" -> (5, 1), "read1" -> (2, 2),
+      "merge2" -> (5, 5), "update2" -> (5, 8), "delete2" -> (8, 12),
+      "insert2" -> (5, 1), "read2" -> (2, 2),
+      "append_fresh" -> (2, 2), "append_replay" -> (1, 2), "apply_changes" -> (11, 15))
     val name = "ttlog_traffic"
     val loc = s"countfs://${tmp("graft_ttlog_traffic")}/store"
     events.createOrReplaceTempView("ttlog_base")
@@ -206,8 +209,24 @@ class TtLogSpec extends SparkSpec {
         }
         val asOf = counted("version_as_of")(
           spark.sql(agg.format(s"tt.$name VERSION AS OF $created")).collect())
-        (ctas +: rounds :+ asOf)
-      } finally TtCatalog.tables.remove(name)
+        // the writers that commit through the one loop outside SQL DML
+        val batch = shifted(37, 7000000000L)
+        val append = counted("append_fresh")(
+          assert(Mutations.ttIdempotentAppend(spark, loc, batch, "traffic#1")))
+        val replay = counted("append_replay")(
+          assert(!Mutations.ttIdempotentAppend(spark, loc, batch, "traffic#1")))
+        // a three-version bronze: two appends, then a DV delete
+        val (bronze, silver) = (s"countfs://${tmp("graft_ttlog_bronze")}/store",
+          s"countfs://${tmp("graft_ttlog_silver")}/store")
+        Seq(41, 43).foreach(m => assert(Mutations.ttIdempotentAppend(spark, bronze,
+          shifted(m, m * 100000000L), s"bronze#$m")))
+        Mutations.ttDvDelete(spark, bronze, 2, "dv2", col("event_id") % 2 === 0)
+        TtCatalog.register(s"${name}_bronze", bronze)
+        TtCatalog.register(s"${name}_silver", silver)
+        val apply = counted("apply_changes")(spark.sql(
+          s"APPLY CHANGES INTO tt.${name}_silver FROM tt.${name}_bronze").collect())
+        (ctas +: rounds) ++ Seq(asOf, append, replay, apply)
+      } finally Seq("", "_bronze", "_silver").foreach(x => TtCatalog.tables.remove(name + x))
     }
     info(counts.map { case (k, (l, o)) => s"$k=$l/$o" }.mkString(" "))
     assert(TtLog.head(spark, loc.stripPrefix("countfs://")) > 4)

@@ -476,6 +476,17 @@ class EventStreamsSpec extends SparkSpec {
       s"delete-commit maintenance read outside the CDF set: ${planned -- allowed}")
   }
 
+  test("rangeSrc: its files in modification-time order have non-decreasing min(ts)") {
+    val dir = EventStreams.rangeSrc(spark, sf0001)
+    val files = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.lastModified).toSeq
+    assert(files.size == EventStreams.backfillFiles, files.map(_.getName).toString)
+    assert(files.map(_.lastModified).distinct.size == files.size, "two slices share an mtime")
+    val lows = files.map(f => spark.read.parquet(f.getPath).agg(min("ts")).head.getTimestamp(0))
+    assert(lows == lows.sortBy(_.getTime), s"slices out of ts order: ${files.map(_.getName).zip(lows)}")
+  }
+
   test("update-merge sink: untouched day partitions keep byte-identical files") {
     // the st12 scaling claim made checkable: per-batch writes restate only
     // the day partitions containing changed keys, so a partition outside a
