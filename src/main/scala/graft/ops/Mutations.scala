@@ -484,7 +484,7 @@ object Mutations {
     * staging dir (on `dir`'s filesystem). `commit()` is one [[ttOcc]]
     * attempt per listing: the conflict check against the versions
     * committed since its base, a re-stage on overlap, then the claim of
-    * `head + 1` through [[graft.engine.Publish.claim]] and the move-in of
+    * `log.next` through [[graft.engine.Publish.claim]] and the move-in of
     * the staged days through [[graft.engine.Publish.swap]] — a touched
     * day the transform emptied is removed.
     */
@@ -513,9 +513,9 @@ object Mutations {
           myBase = log.head
           stage()
         } else if (newer.nonEmpty) rebased = true
-        Publish.claim(s, TtLog.dir(dir), log.head + 1, touched.mkString("\n"))
+        Publish.claim(s, TtLog.dir(dir), log.next, touched.mkString("\n"))
         Publish.swap(s, dir, "day", staging, touched)
-        OccResult(log.head + 1, attempts, stagings, rebased)
+        OccResult(log.next, attempts, stagings, rebased)
       }
     }
   }
@@ -655,8 +655,9 @@ object Mutations {
     * counts (up24) never re-scan data. DV sidecars and schema-less
     * stores carry no stat lines.
     */
-  private def ttAddStats(s: SparkSession, dir: String,
+  private def ttAddStats(s: SparkSession, log: TtLog.Listing,
       adds: Seq[String], canReAdd: Boolean): Seq[(String, TtStat)] = {
+    val dir = log.table
     val data = adds.filterNot(ttIsDv)
     if (data.isEmpty) return Nil
     // a RE-add (up22's restore) re-publishes files the log already
@@ -668,11 +669,10 @@ object Mutations {
     // O(commits) reads PER COMMIT, i.e. O(commits²) over a store's
     // lifetime, exactly the unbounded-resolution shape the checkpoint
     // tier exists to kill. Restore itself stays O(commits) and rare.
-    val known: Map[String, TtStat] = if (!canReAdd) Map.empty else {
-      val log = TtLog.list(s, dir)
-      log.commits.keys.toSeq.flatMap(log.entries)
+    val known: Map[String, TtStat] =
+      if (!canReAdd) Map.empty
+      else log.commits.keys.toSeq.flatMap(log.entries)
         .collect { case TtLog.Stat(f, st) => f -> st }.toMap
-    }
     val (have, need) = data.partition(known.contains)
     val scanned: Seq[(String, TtStat)] =
       if (need.isEmpty) Nil
@@ -690,8 +690,9 @@ object Mutations {
     have.map(f => f -> known(f)) ++ scanned
   }
 
-  /** Append log entry `v`: `a <path>` adds and `r <path>` removes,
-    * claimed through [[graft.engine.Publish.claim]]: the COMPLETE body
+  /** Append log entry `log.next` — the version right after the snapshot
+    * `log` read — with `a <path>` adds and `r <path>` removes, claimed
+    * through [[graft.engine.Publish.claim]]: the COMPLETE body
     * appears in one step, so a concurrent reader (the idempotent-append
     * txn probe, a snapshot resolution) never observes a half-written
     * commit. A bare exclusive create + write had exactly that window, and
@@ -700,26 +701,30 @@ object Mutations {
     * as hadoop's FileAlreadyExistsException, which only [[ttOcc]] catches:
     * a writer commits through it. Every `ttCheckpointInterval`-th commit
     * also writes a CHECKPOINT manifest (up19), so snapshot resolution
-    * never replays more than one interval's worth of commit files.
+    * never replays more than one interval's worth of commit files; that
+    * checkpoint write is the commit's only listing of `_log`. Returns the
+    * version committed.
     */
-  private def ttCommit(s: SparkSession, dir: String, v: Int,
+  private def ttCommit(s: SparkSession, log: TtLog.Listing,
       adds: Seq[String], removes: Seq[String],
-      meta: Seq[String] = Nil, tsMs: Long = -1L): Unit = {
+      meta: Seq[String] = Nil, tsMs: Long = -1L): Int = {
+    val (dir, v) = (log.table, log.next)
     // CHECK constraints (src42) are enforced HERE, in the one commit
     // path every write verb funnels through — Delta's invariant rule:
     // validation on every commit that adds data rows, not per frontend.
     // Running inside the commit (and therefore inside every OCC retry)
     // also closes the TOCTOU: a retry that rebases onto a newer head
-    // re-resolves and re-validates against the constraint set of the
-    // version it actually targets.
-    ttEnforceConstraints(s, dir, v, adds, meta)
+    // re-validates against the constraint set of the listing it commits
+    // from, the snapshot right before the version it claims.
+    ttEnforceConstraints(s, log, adds, meta)
     // metadata (the commit timestamp, st31's txn markers, per-file
     // stats) rides the commit body, in TtLog's grammar
     val ts = if (tsMs >= 0) tsMs else ttClockMs(v)
     val canReAdd = meta.exists(_.startsWith("op=restore"))
     Publish.claim(s, TtLog.dir(dir), v, TtLog.commitBody(s"ts=$ts" +: meta,
-      ttAddStats(s, dir, adds, canReAdd), adds, removes))
+      ttAddStats(s, log, adds, canReAdd), adds, removes))
     if (v > 0 && v % ttCheckpointInterval == 0) ttWriteCheckpoint(s, dir, v)
+    v
   }
 
   /** st31 — has a commit carrying `txn` already landed? The
@@ -757,7 +762,7 @@ object Mutations {
     * OCC (up27): the probe-then-commit pair is made atomic by ORDER,
     * not by a lock — the probe and the head come from one listing, the
     * probe covers every version up to that head, and the claim of
-    * head+1 fails if ANY commit (including a concurrent duplicate of
+    * `log.next` fails if ANY commit (including a concurrent duplicate of
     * this very txn) landed after the listing; a lost race therefore
     * re-lists through [[ttOcc]], RE-RUNS the probe against the log that
     * actually won, and retries — Delta's conflict-check-then-retry
@@ -773,13 +778,12 @@ object Mutations {
     // at a new version — no re-execution (the rebase half of OCC). The
     // txn hash keeps two racing writers' batch names disjoint.
     val adds = ttWriteBatch(s, dir,
-      s"b${first.head + 1}x${(txn.hashCode & 0x7fffffff).toHexString}",
+      s"b${first.next}x${(txn.hashCode & 0x7fffffff).toHexString}",
       df.repartition(col("day")))
     ttOcc(first) { log =>
       // the first listing was probed above
       ((log eq first) || !ttTxnIn(log, txn)) && {
-        ttCommit(s, dir, log.head + 1, adds, Nil,
-          meta = Seq("op=streaming-append", s"txn=$txn"))
+        ttCommit(s, log, adds, Nil, meta = Seq("op=streaming-append", s"txn=$txn"))
         true
       }
     }
@@ -889,12 +893,11 @@ object Mutations {
     * reads anyway.)
     */
   private[graft] def ttAsOf(s: SparkSession, dir: String, v: Int): DataFrame =
-    ttAsOf(s, dir, TtLog.list(s, dir), v)
+    ttAsOf(s, TtLog.list(s, dir), v)
 
-  /** [[ttAsOf]] resolved through the caller's listing of `dir`'s log. */
-  private[graft] def ttAsOf(s: SparkSession, dir: String, log: TtLog.Listing,
-      v: Int): DataFrame = {
-    val res = ttResolve(log, v)
+  /** [[ttAsOf]] resolved through the caller's listing. */
+  private[graft] def ttAsOf(s: SparkSession, log: TtLog.Listing, v: Int): DataFrame = {
+    val (dir, res) = (log.table, ttResolve(log, v))
     val (dvFiles, dataFiles) = res.live.partition(ttIsDv)
     if (dataFiles.isEmpty) {
       // a SQL-created table is legitimately empty between CREATE and its
@@ -938,7 +941,7 @@ object Mutations {
       sys.error("tt tables require a 'day' partition column"))
     require(day.dataType == org.apache.spark.sql.types.StringType,
       s"the 'day' partition column must be STRING, got ${day.dataType.sql}")
-    ttCommit(s, dir, 0, Nil, Nil,
+    ttCommit(s, TtLog.list(s, dir), Nil, Nil,
       meta = Seq("op=create", s"createschema=${schema.json}"))
   }
 
@@ -993,10 +996,9 @@ object Mutations {
     * old name stays visible AS OF pre-rename versions, and later
     * writers keep the PHYSICAL name via [[ttToPhysical]].
     */
-  private[graft] def ttRenameColumn(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttRenameColumn(s: SparkSession, log: TtLog.Listing,
       from: String, to: String): Unit =
-    ttCommit(s, dir, v, Nil, Nil,
-      meta = Seq("op=rename-column", s"rename=$from|$to"))
+    ttCommit(s, log, Nil, Nil, meta = Seq("op=rename-column", s"rename=$from|$to"))
 
   /** up26 — DROP COLUMN as ONE metadata commit: the column disappears
     * from head reads while every earlier snapshot still surfaces it —
@@ -1011,11 +1013,11 @@ object Mutations {
     * renamed, the drop of its current logical name is refused as well
     * (ttToPhysical would unwind it back onto the layout key).
     */
-  private[graft] def ttDropColumn(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttDropColumn(s: SparkSession, log: TtLog.Listing,
       c: String): Unit = {
     // physical resolution of the logical name being dropped: unwind the
     // rename chain as of the pre-drop snapshot
-    val physical = ttResolve(s, dir, v - 1).schemaOps.reverse
+    val physical = ttResolve(log, log.head).schemaOps.reverse
       .foldLeft(c) { (name, op) =>
         op.split("=", 2) match {
           case Array("rename", spec) =>
@@ -1028,8 +1030,7 @@ object Mutations {
       s"cannot drop column '$c': it is the store's physical partition " +
         "column (day) — every write keys the layout on it. Delta refuses " +
         "dropping partition columns for the same reason.")
-    ttCommit(s, dir, v, Nil, Nil,
-      meta = Seq("op=drop-column", s"dropcol=$c"))
+    ttCommit(s, log, Nil, Nil, meta = Seq("op=drop-column", s"dropcol=$c"))
   }
 
   /** src44 — ADD COLUMN as ONE metadata commit (Delta's `ALTER TABLE
@@ -1047,11 +1048,11 @@ object Mutations {
     * dropcol to new files). Name recycling is the one thing Delta's
     * id-based mapping buys that a name-based mapping must refuse.
     */
-  private[graft] def ttAddColumn(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttAddColumn(s: SparkSession, log: TtLog.Listing,
       name: String, dt: org.apache.spark.sql.types.DataType): Unit = {
     require(!name.contains("|"), "column name must be pipe-free")
-    val res = ttResolve(s, dir, v - 1)
-    val logical = ttAsOf(s, dir, v - 1).columns
+    val res = ttResolve(log, log.head)
+    val logical = ttAsOf(s, log, log.head).columns
     require(!logical.contains(name),
       s"cannot add column '$name': it already exists in the table schema")
     val shadowed = res.schemaOps.flatMap(op => op.split("=", 2) match {
@@ -1064,23 +1065,15 @@ object Mutations {
         "schema history (renamed away or dropped) — recycling a physical " +
         "name would weld old bytes onto the new column at schema " +
         "reconciliation; pick a fresh name")
-    ttCommit(s, dir, v, Nil, Nil,
-      meta = Seq("op=add-column", s"addcolumn=$name|${dt.json}"))
+    ttCommit(s, log, Nil, Nil, meta = Seq("op=add-column", s"addcolumn=$name|${dt.json}"))
   }
 
-  /** Inverse-map a LOGICAL-schema batch to the store's PHYSICAL names
-    * (renames unwound in reverse; a dropped column cannot be written)
-    * and append it — how a post-rename writer lands data that older
-    * snapshots (which read physical names through their own op prefix)
-    * still reconcile correctly.
+  /** Inverse-map a LOGICAL-schema batch to PHYSICAL names as of `log`'s
+    * head — renames unwound in reverse; a dropped column cannot be
+    * written back.
     */
-  /** Inverse-map a LOGICAL-schema batch to PHYSICAL names as of the
-    * current head — renames unwound in reverse; a dropped column
-    * cannot be written back.
-    */
-  private[graft] def ttToPhysical(s: SparkSession, dir: String, asOf: Int,
-      df: DataFrame): DataFrame =
-    ttResolve(s, dir, asOf).schemaOps.reverse.foldLeft(df) { (d, op) =>
+  private[graft] def ttToPhysical(log: TtLog.Listing, df: DataFrame): DataFrame =
+    ttResolve(log, log.head).schemaOps.reverse.foldLeft(df) { (d, op) =>
       op.split("=", 2) match {
         case Array("rename", spec) =>
           val Array(from, to) = spec.split('|')
@@ -1093,11 +1086,15 @@ object Mutations {
       }
     }
 
-  private[graft] def ttMappedAppend(s: SparkSession, dir: String, v: Int,
+  /** Append a LOGICAL-schema batch under the store's PHYSICAL names
+    * ([[ttToPhysical]]) — how a post-rename writer lands data that older
+    * snapshots (which read physical names through their own op prefix)
+    * still reconcile correctly.
+    */
+  private[graft] def ttMappedAppend(s: SparkSession, log: TtLog.Listing,
       sub: String, df: DataFrame): Unit =
-    ttCommit(s, dir, v,
-      ttWriteBatch(s, dir, sub,
-        ttToPhysical(s, dir, v - 1, df).repartition(col("day"))), Nil,
+    ttCommit(s, log,
+      ttWriteBatch(s, log.table, sub, ttToPhysical(log, df).repartition(col("day"))), Nil,
       meta = Seq("op=append"))
 
   // ---- up20: DELETION VECTORS (merge-on-read deletes) ----
@@ -1180,9 +1177,10 @@ object Mutations {
     * already-deleted row is impossible and the job is idempotent in
     * effect.
     */
-  private[graft] def ttDvDelete(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttDvDelete(s: SparkSession, log: TtLog.Listing,
       sub: String, pred: org.apache.spark.sql.Column,
       dayScope: Option[Set[String]] = None): Unit = {
+    val dir = log.table
     // tag the file BEFORE applying live DVs: input_file_name is a
     // single-source expression, and on an already-DV-bearing store the
     // DV-applied snapshot is a JOIN — tagging its output would throw
@@ -1192,17 +1190,16 @@ object Mutations {
     // a day-scoped delete (the caller guarantees pred only matches
     // rows inside dayScope's days) lists ONLY those days' files on the
     // driver; the unscoped form still resolves in-plan
-    val cand = ttWriteCandidates(s, dir, v - 1, dayScope)
+    val cand = ttWriteCandidates(s, log, log.head, dayScope)
     val (dvF, dataF) = (cand.dv, cand.data)
-    require(dataF.nonEmpty, s"version ${v - 1} has no live files")
+    require(dataF.nonEmpty, s"version ${log.head} has no live files")
     val doomed = ttApplyDv(s, dir,
         ttReadFiles(s, dir, dataF, mergeSchema = true)
           .withColumn("_pf", ttRelFile(dir)), dvF)
       .filter(pred)
       .select(col("_pf").as("file"), col("event_id"))
       .localCheckpoint(true) // pin before the commit changes the snapshot
-    ttCommit(s, dir, v, ttWriteDv(s, dir, sub, doomed), Nil,
-      meta = Seq("op=delete"))
+    ttCommit(s, log, ttWriteDv(s, dir, sub, doomed), Nil, meta = Seq("op=delete"))
   }
 
   /** up21 — MERGE-ON-READ UPDATE (Delta's DV-based UPDATE): ONE commit
@@ -1214,10 +1211,11 @@ object Mutations {
     * under its new day. The CDF sees exactly delete-of-old +
     * insert-of-new through the existing DV-aware diff.
     */
-  private[graft] def ttDvUpdate(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttDvUpdate(s: SparkSession, log: TtLog.Listing,
       sub: String, pred: org.apache.spark.sql.Column,
       set: Seq[(String, org.apache.spark.sql.Column)],
       dayScope: Option[Set[String]] = None): Unit = {
+    val dir = log.table
     // tag the file BEFORE applying live DVs (single-source expression —
     // see ttDvDelete) and BEFORE checkpointing (input_file_name is a
     // scan-time property and dies with the localCheckpoint's lineage cut)
@@ -1225,9 +1223,9 @@ object Mutations {
     // candidate files through the checkpoint RELATION (r17 #1): an
     // UPDATE scoped to one day (caller guarantees pred ⊆ dayScope's
     // days) never materializes the other days' file list on the driver
-    val cand = ttWriteCandidates(s, dir, v - 1, dayScope)
+    val cand = ttWriteCandidates(s, log, log.head, dayScope)
     val (dvF, dataF) = (cand.dv, cand.data)
-    require(dataF.nonEmpty, s"version ${v - 1} has no live files")
+    require(dataF.nonEmpty, s"version ${log.head} has no live files")
     val tagged = ttApplyDv(s, dir,
         ttReadFiles(s, dir, dataF, mergeSchema = true)
           .withColumn("_pf", ttRelFile(dir)), dvF)
@@ -1248,7 +1246,7 @@ object Mutations {
       setMap.get(c).map(_.as(c)).getOrElse(col(c))): _*)
     val adds = ttWriteBatch(s, dir, sub, updated.repartition(col("day"))) ++
       ttWriteDv(s, dir, s"$sub-dv", dvRows)
-    ttCommit(s, dir, v, adds, Nil, meta = Seq("op=update"))
+    ttCommit(s, log, adds, Nil, meta = Seq("op=update"))
   }
 
   /** Materialize all live DVs: rewrite each DV-bearing data file minus
@@ -1257,31 +1255,31 @@ object Mutations {
     * empty, spec-pinned), physically the read-amplification payback.
     * Cost ∝ DV-bearing files, never the table.
     */
-  private[graft] def ttDvCompact(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttDvCompact(s: SparkSession, log: TtLog.Listing,
       sub: String): Unit = {
+    val dir = log.table
     // two relation-scoped resolutions (r17 #1), never the full file
     // list: (1) the DV sidecars alone (dataFileFilter=Nil zeroes the
     // data side in-plan); (2) liveness of exactly the dv-REFERENCED
     // files, the referenced list pushed in-plan — inert entries (dead
     // files) drop because the relation only returns live ones
-    val dvF = ttWriteCandidates(s, dir, v - 1, dataFileFilter = Some(Nil)).dv
+    val dvF = ttWriteCandidates(s, log, log.head, dataFileFilter = Some(Nil)).dv
     require(dvF.nonEmpty, "no deletion vectors to compact")
     val dv = s.read.parquet(dvF.map(f => s"$dir/$f"): _*)
     val referenced = dv.select("file").distinct().collect()
       .map(_.getString(0)).toSeq
     val bearing =
-      ttWriteCandidates(s, dir, v - 1, dataFileFilter = Some(referenced)).data
+      ttWriteCandidates(s, log, log.head, dataFileFilter = Some(referenced)).data
     val rewritten = ttApplyDv(s, dir, ttReadFiles(s, dir, bearing), dvF)
       .localCheckpoint(true)
-    ttCommit(s, dir, v,
-      ttWriteBatch(s, dir, sub, rewritten.repartition(col("day"))),
+    ttCommit(s, log, ttWriteBatch(s, dir, sub, rewritten.repartition(col("day"))),
       (bearing ++ dvF).sorted, meta = Seq("op=optimize"))
   }
 
   /** The DV-delete + compaction suffix over an existing 4-version store. */
   private[graft] def ttBuildDvSuffix(s: SparkSession, dir: String): Unit = {
-    ttDvDelete(s, dir, 4, "dv4", pmod(col("event_id"), lit(23)) === 0)
-    ttDvCompact(s, dir, 5, "b5c")
+    ttDvDelete(s, TtLog.list(s, dir), "dv4", pmod(col("event_id"), lit(23)) === 0)
+    ttDvCompact(s, TtLog.list(s, dir), "b5c")
   }
 
   /** The declared up21 query: the merge-on-read UPDATE (+77 cents on
@@ -1292,13 +1290,13 @@ object Mutations {
     * snapshot isolation around it.
     */
   def morUpdateRollup(s: SparkSession, d: String): DataFrame = {
-    // memoized base store; the UPDATE verb runs (timed) at head+1 every
-    // call, and the declared reads are pinned at v3/v4 — the first
+    // memoized base store; the UPDATE verb commits (timed) a new head
+    // every call, and the declared reads are pinned at v3/v4 — the first
     // run's pre/post pair — so later runs' extra commits never surface
     val dir = ttDerivedScenario(s, d, "graft_up21_store",
       () => ttBaseScenario(s, d))(_ => ())
-    val v = TtLog.head(s, dir) + 1
-    ttDvUpdate(s, dir, v, s"u$v", col("event_type") === "purchase",
+    val log = TtLog.list(s, dir)
+    ttDvUpdate(s, log, s"u${log.next}", col("event_type") === "purchase",
       Seq("cents" -> (col("cents") + lit(77L))))
     (3 to 4).map { vv =>
       ttAsOf(s, dir, vv).groupBy(col("event_type"))
@@ -1440,10 +1438,10 @@ object Mutations {
     * where the relation is None; callers then resolve through
     * [[ttResolve]]. Returns the log files opened alongside.
     */
-  private[graft] def ttCheckpointSurvivors(s: SparkSession, dir: String,
+  private[graft] def ttCheckpointSurvivors(s: SparkSession, log: TtLog.Listing,
       asOf: Int, band: Option[(Long, Long)])
       : Option[(Seq[(String, TtStat)], Int)] =
-    ttCheckpointRelation(s, TtLog.list(s, dir), asOf, servesDv = false).map { case (rel, opened) =>
+    ttCheckpointRelation(s, log, asOf, servesDv = false).map { case (rel, opened) =>
       // a stat-less row (null lo/hi) cannot be pruned — it survives the
       // band and dies loudly below, exactly the driver path's contract
       val pruned = band.fold(rel) { case (lo, hi) =>
@@ -1470,10 +1468,9 @@ object Mutations {
   private[graft] final case class TtWriteCandidates(dv: Seq[String],
       data: Seq[String], opened: Int, viaRelation: Boolean)
 
-  private[graft] def ttWriteCandidates(s: SparkSession, dir: String,
+  private[graft] def ttWriteCandidates(s: SparkSession, log: TtLog.Listing,
       asOf: Int, dayScope: Option[Set[String]] = None,
-      dataFileFilter: Option[Seq[String]] = None): TtWriteCandidates = {
-    val log = TtLog.list(s, dir)
+      dataFileFilter: Option[Seq[String]] = None): TtWriteCandidates =
     ttCheckpointRelation(s, log, asOf, servesDv = true) match {
       case Some((rel, opened)) =>
         val isDv = col("file").startsWith("_dv/")
@@ -1493,7 +1490,6 @@ object Mutations {
             f.startsWith(s"day=$day/") || f.contains(s"/day=$day/"))) &&
             dataFileFilter.forall(_.contains(f))), r.opened, viaRelation = false)
     }
-  }
 
   /** src32 — DATA SKIPPING on tt snapshot reads: the snapshot relation
     * carries per-live-file key min/max and the FileIndex intersects
@@ -1507,17 +1503,19 @@ object Mutations {
     * the snapshot, the live set is resolved THROUGH THE CHECKPOINT
     * RELATION ([[ttCheckpointSurvivors]]) — and a known skip-key `band`
     * prunes in-plan there, so the FileIndex is built from survivors
-    * only and the driver never materializes the full live set.
+    * only and the driver never materializes the full live set. One
+    * listing of `_log` serves both paths.
     */
   private[graft] def ttSkippingRelation(s: SparkSession, dir: String,
       v: Int, band: Option[(Long, Long)] = None): DataFrame = {
+    val log = TtLog.list(s, dir)
     val entries: Seq[(String, TtStat)] =
-      ttCheckpointSurvivors(s, dir, v, band).map(_._1).getOrElse {
+      ttCheckpointSurvivors(s, log, v, band).map(_._1).getOrElse {
         // pre-checkpoint store: the bounded driver replay
-        val (live, stats, _) = ttLiveEntriesCounted(s, dir, v)
-        require(live.nonEmpty, s"version $v has no live files")
-        live.filterNot(ttIsDv).map { f =>
-          f -> stats.getOrElse(f,
+        val r = ttResolve(log, v)
+        require(r.live.nonEmpty, s"version $v has no live files")
+        r.live.filterNot(ttIsDv).map { f =>
+          f -> r.stats.getOrElse(f,
             sys.error(s"live file $f carries no commit-time stats"))
         }
       }
@@ -1558,7 +1556,7 @@ object Mutations {
     * the lake tier (r14 verdict next #5). Contract: the builder leaves
     * a COMPLETE read-only scenario under its own dir; a query over a
     * memoized store either reads pinned versions or applies verbs at
-    * head+1 whose pinned-version reads are run-invariant (each query's
+    * a new head whose pinned-version reads are run-invariant (each query's
     * scaladoc states which). Specs keep using the rebuild-always
     * builders (ttStore & co.) on their own dirs, so spec mutations
     * never collide with memoized query state.
@@ -1602,7 +1600,7 @@ object Mutations {
 
   /** The one optimistic-concurrency loop of the tt lake's writers: what a
     * writer does when another commit lands first. `attempt` commits at
-    * `log.head + 1` of the listing it is handed, either re-deriving from
+    * `log.next` of the listing it is handed, either re-deriving from
     * that listing (merge, update, delete: a verb that READ the snapshot
     * must not publish a stale rewrite) or re-committing what it staged
     * once (an append's files are immutable and position-independent until
@@ -1644,9 +1642,10 @@ object Mutations {
     * first — the two rewrites compose in either order but each owns
     * its own commit. Returns whether anything was packed.
     */
-  private[graft] def ttOptimize(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttOptimize(s: SparkSession, log: TtLog.Listing,
       sub: String, minFilesPerDay: Int = 2,
       onlyDays: Option[Set[String]] = None): Boolean = {
+    val dir = log.table
     // up31 — PARTITION-SCOPED compaction (Delta's `OPTIMIZE ... WHERE`):
     // at 100 TB nobody optimizes the whole table — the hot tail (the
     // days streaming ingest just fragmented) is compacted on a schedule
@@ -1656,7 +1655,7 @@ object Mutations {
     // OPTIMIZE never lists the other days' files on the driver — and
     // cost is ∝ the selected days' fragmentation, provably zero
     // elsewhere (untouched days keep byte-identical files, spec-pinned).
-    val cand = ttWriteCandidates(s, dir, v - 1, dayScope = onlyDays)
+    val cand = ttWriteCandidates(s, log, log.head, dayScope = onlyDays)
     require(cand.dv.isEmpty,
       "OPTIMIZE on a DV-bearing snapshot — materialize (ttDvCompact) first")
     val packed = cand.data.filter(_.startsWith("day="))
@@ -1668,8 +1667,7 @@ object Mutations {
     // one task, partitionBy(day) then writes a single file for it
     val rows = ttReadFiles(s, dir, packed, mergeSchema = true)
       .localCheckpoint(true)
-    ttCommit(s, dir, v,
-      ttWriteBatch(s, dir, sub, rows.repartition(col("day"))),
+    ttCommit(s, log, ttWriteBatch(s, dir, sub, rows.repartition(col("day"))),
       packed, meta = Seq("op=optimize"))
     true
   }
@@ -1698,14 +1696,15 @@ object Mutations {
     * aggregate scalars over the rewrite set — data the rewrite reads
     * anyway, never an extra table scan.
     */
-  private[graft] def ttOptimizeClustered(s: SparkSession, dir: String,
-      v: Int, sub: String, keys: Seq[String] = Seq("event_id"),
+  private[graft] def ttOptimizeClustered(s: SparkSession, log: TtLog.Listing,
+      sub: String, keys: Seq[String] = Seq("event_id"),
       filesPerDay: Int = 4, onlyDays: Option[Set[String]] = None): Boolean = {
+    val dir = log.table
     require(keys.nonEmpty && keys.size <= 8,
       s"ZORDER BY takes 1-8 columns, got ${keys.size}")
     // candidate files through the checkpoint relation, day scope
     // in-plan (r17 #1) — see ttOptimize
-    val cand = ttWriteCandidates(s, dir, v - 1, dayScope = onlyDays)
+    val cand = ttWriteCandidates(s, log, log.head, dayScope = onlyDays)
     require(cand.dv.isEmpty,
       "OPTIMIZE on a DV-bearing snapshot — materialize (ttDvCompact) first")
     val packed = cand.data.filter(_.startsWith("day="))
@@ -1751,7 +1750,7 @@ object Mutations {
             .reduce(_.bitwiseOR(_))
         }.reduce(_.bitwiseOR(_))
     }
-    ttCommit(s, dir, v,
+    ttCommit(s, log,
       ttWriteBatch(s, dir, sub,
         rows.withColumn("_zc", cluster)
           .repartitionByRange(days * filesPerDay, col("day"), col("_zc"))
@@ -1773,7 +1772,7 @@ object Mutations {
   def zorderOptimizeRollup(s: SparkSession, d: String): DataFrame = {
     val dir = ttDerivedScenario(s, d, "graft_up28_store",
       () => ttBaseScenario(s, d))(dd =>
-      require(ttOptimizeClustered(s, dd, 4, "z4", Seq("event_id"), 4),
+      require(ttOptimizeClustered(s, TtLog.list(s, dd), "z4", Seq("event_id"), 4),
         "up28 fixture had nothing to rewrite"))
     val cap = events(s, d).agg(max("event_id")).head.getLong(0) / 4
     // v4 is checkpoint-covered: the band prunes in-plan over the ckpt
@@ -1807,7 +1806,7 @@ object Mutations {
       val day0 = events(s, d)
         .agg(date_format(min(to_date(col("ts"))), "yyyy-MM-dd"))
         .head.getString(0)
-      require(ttOptimize(s, dd, 10, "w10", 2, Some(Set(day0))),
+      require(ttOptimize(s, TtLog.list(s, dd), "w10", 2, Some(Set(day0))),
         "up31 fixture had nothing to pack on the target day")
     }
     ttAsOf(s, dir, 10)
@@ -1816,8 +1815,8 @@ object Mutations {
       .orderBy("day", "event_type")
   }
 
-  /** src35 — the SQL INSERT INTO verb: one plain append commit at
-    * head+1 (`op=insert`), committed through [[ttOcc]]. The most
+  /** src35 — the SQL INSERT INTO verb: one plain append commit
+    * (`op=insert`), committed through [[ttOcc]]. The most
     * common lakehouse write finally has its SQL spelling — routed here
     * by [[graft.sources.TtTable]]'s V1 write bridge (DSv2
     * `SupportsWrite` → `InsertableRelation`), the same fallback shape
@@ -1828,7 +1827,6 @@ object Mutations {
   private[graft] def ttSqlInsert(s: SparkSession, dir: String,
       data: DataFrame): Unit = {
     val first = TtLog.list(s, dir)
-    val v = first.head + 1
     // CHECK constraints (src42) are enforced in the shared commit path
     // (ttEnforceConstraints) — every write verb validates, not just
     // this one, and a rebased OCC retry re-validates at its real target
@@ -1836,10 +1834,10 @@ object Mutations {
     // (order, arity, types); unwind column mapping so the batch lands
     // under physical names (src36) and write it whole — per-snapshot
     // mergeSchema reconciliation owns any generation differences
-    val rows = ttToPhysical(s, dir, v - 1, data)
+    val rows = ttToPhysical(first, data)
     require(rows.columns.contains("day"), "insert batch lost the day column")
-    val adds = ttWriteBatch(s, dir, s"i$v", rows.repartition(col("day")))
-    ttOcc(first)(log => ttCommit(s, dir, log.head + 1, adds, Nil, Seq("op=insert")))
+    val adds = ttWriteBatch(s, dir, s"i${first.next}", rows.repartition(col("day")))
+    ttOcc(first)(log => ttCommit(s, log, adds, Nil, Seq("op=insert")))
   }
 
   // ---- src42: CHECK constraints (Delta's ADD CONSTRAINT) ----
@@ -1868,25 +1866,26 @@ object Mutations {
     * (SQL three-valued logic) — the padded columns reproduce exactly
     * that. On violation the staged files are deleted (they are
     * referenced by no version) and the commit is refused loudly with
-    * the per-constraint row count. Cost: one metadata resolution per
-    * enforced commit (checkpoint-memoized), plus — only when
+    * the per-constraint row count. Cost: one snapshot of `log`'s head per
+    * enforced commit (checkpoint-memoized, no listing), plus — only when
     * constraints are active — one scan of the NEW batch per
     * constraint, ∝ the commit's churn, never the table.
     */
-  private def ttEnforceConstraints(s: SparkSession, dir: String, v: Int,
+  private def ttEnforceConstraints(s: SparkSession, log: TtLog.Listing,
       adds: Seq[String], meta: Seq[String]): Unit = {
-    if (v <= 0) return // v0 creates the store — no constraint can exist yet
+    if (log.head < 0) return // v0 creates the store — no constraint can exist yet
     val dataAdds = adds.filterNot(ttIsDv)
     if (dataAdds.isEmpty) return
     val op = meta.collectFirst {
       case m if m.startsWith("op=") => m.stripPrefix("op=")
     }.getOrElse("")
     if (ttConstraintExemptOps(op)) return
-    val res = ttResolve(s, dir, v - 1)
-    if (res.constraints.isEmpty) return
-    val batch = ttApplyMapping(res.schemaOps,
+    val snap = log.snapshot(log.head)
+    if (snap.constraints.isEmpty) return
+    val dir = log.table
+    val batch = ttApplyMapping(snap.schemaOps,
       ttReadFiles(s, dir, dataAdds, mergeSchema = true))
-    res.constraints.toSeq.sortBy(_._1).foreach { case (name, exprStr) =>
+    snap.constraints.toSeq.sortBy(_._1).foreach { case (name, exprStr) =>
       val refs = s.sessionState.sqlParser.parseExpression(exprStr).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
           a.name
@@ -1916,27 +1915,25 @@ object Mutations {
     * the table's logical columns; enforcement happens on the SQL write
     * path ([[ttSqlInsert]]) from then on.
     */
-  private[graft] def ttAddConstraint(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttAddConstraint(s: SparkSession, log: TtLog.Listing,
       name: String, exprStr: String): Unit = {
     require(!name.contains("|") && !exprStr.contains("\n"),
       "constraint name/expression must be single-line, name pipe-free")
-    val existing = ttAsOf(s, dir, v - 1).filter(!expr(exprStr)).count()
+    val existing = ttAsOf(s, log, log.head).filter(!expr(exprStr)).count()
     require(existing == 0L,
       s"cannot add CHECK $name ($exprStr): $existing existing row(s) violate it")
-    ttCommit(s, dir, v, Nil, Nil,
-      meta = Seq("op=add-constraint", s"constraint=$name|$exprStr"))
+    ttCommit(s, log, Nil, Nil, meta = Seq("op=add-constraint", s"constraint=$name|$exprStr"))
   }
 
   /** src42 — DROP CONSTRAINT: one metadata commit; unknown names are
     * refused (a silently-ignored drop would leave the caller believing
     * enforcement ended).
     */
-  private[graft] def ttDropConstraint(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttDropConstraint(s: SparkSession, log: TtLog.Listing,
       name: String): Unit = {
-    require(ttResolve(s, dir, v - 1).constraints.contains(name),
+    require(ttResolve(log, log.head).constraints.contains(name),
       s"no CHECK constraint named $name")
-    ttCommit(s, dir, v, Nil, Nil,
-      meta = Seq("op=drop-constraint", s"dropconstraint=$name"))
+    ttCommit(s, log, Nil, Nil, meta = Seq("op=drop-constraint", s"dropconstraint=$name"))
   }
 
   /** up30 — CONVERT a plain day-partitioned parquet directory into a tt
@@ -1963,7 +1960,7 @@ object Mutations {
       if (rel.endsWith(".parquet") && rel.startsWith("day=")) adds += rel
     }
     require(adds.nonEmpty, s"$dir holds no day-partitioned parquet files")
-    ttCommit(s, dir, 0, adds.toSeq.sorted, Nil, meta = Seq("op=convert"))
+    ttCommit(s, TtLog.list(s, dir), adds.toSeq.sorted, Nil, meta = Seq("op=convert"))
     adds.size
   }
 
@@ -1985,7 +1982,7 @@ object Mutations {
       val late = base.filter(col("event_id") % 17 === 0)
         .withColumn("event_id", col("event_id") + lit(2000000000L))
         .withColumn("cents", col("cents") + lit(40L))
-      ttCommit(s, dd, 1,
+      ttCommit(s, TtLog.list(s, dd),
         ttWriteBatch(s, dd, "b1", late.repartition(col("day"))), Nil,
         meta = Seq("op=append"))
     }
@@ -2013,12 +2010,12 @@ object Mutations {
     val base = events(s, d).select(col("event_id"), col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"),
       date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    ttCommit(s, dir, 0, writeBatch(base.repartition(col("day")), "b0"), Nil,
+    ttCommit(s, TtLog.list(s, dir), writeBatch(base.repartition(col("day")), "b0"), Nil,
       meta = Seq("op=write"))
     // v1: append late data — immutable files, metadata-only commit
     val late = base.filter(col("event_id") % 7 === 0)
       .withColumn("event_id", col("event_id") + lit(1000000000L))
-    ttCommit(s, dir, 1, writeBatch(late.repartition(col("day")), "b1"), Nil,
+    ttCommit(s, TtLog.list(s, dir), writeBatch(late.repartition(col("day")), "b1"), Nil,
       meta = Seq("op=append"))
     // day probes, calendar-bounded collects
     val d0 = events(s, d).agg(date_format(
@@ -2026,21 +2023,21 @@ object Mutations {
     val d1 = events(s, d).agg(date_format(
       date_add(min(to_date(col("ts"))), 5), "yyyy-MM-dd")).head.getString(0)
     // v2: COW update — read ONLY the touched day's live files, rewrite
-    def cow(v: Int, day: String, sub: String, op: String)(tf: DataFrame => DataFrame): Unit = {
+    def cow(day: String, sub: String, op: String)(tf: DataFrame => DataFrame): Unit = {
       // touched-day candidates through the checkpoint relation (r17 #1);
       // this scenario's v1-v3 predate the first checkpoint, so the
       // bounded replay serves here — the path is shared regardless
-      val touched = ttWriteCandidates(s, dir, v - 1, Some(Set(day))).data
+      val log = TtLog.list(s, dir)
+      val touched = ttWriteCandidates(s, log, log.head, Some(Set(day))).data
       val cur = withConf(s)(noPartitionInference) {
         s.read.option("basePath", dir)
           .parquet(touched.map(f => s"$dir/$f"): _*)
           .localCheckpoint(true) // materialize before the metadata swap
       }
-      ttCommit(s, dir, v, writeBatch(tf(cur), sub), touched,
-        meta = Seq(s"op=$op"))
+      ttCommit(s, log, writeBatch(tf(cur), sub), touched, meta = Seq(s"op=$op"))
     }
-    cow(2, d0, "b2", "update")(_.withColumn("cents", col("cents") + lit(9L)))
-    cow(3, d1, "b3", "delete")(_.filter(col("event_type") =!= "click"))
+    cow(d0, "b2", "update")(_.withColumn("cents", col("cents") + lit(9L)))
+    cow(d1, "b3", "delete")(_.filter(col("event_type") =!= "click"))
   }
 
   // ---- up15/up16: CHANGE DATA FEED between versions ----
@@ -2053,8 +2050,9 @@ object Mutations {
     */
   private[graft] def ttChangedFiles(s: SparkSession, dir: String,
       from: Int, to: Int): (Seq[String], Seq[String]) = {
-    val f = ttLiveFiles(s, dir, from).toSet
-    val t = ttLiveFiles(s, dir, to).toSet
+    val log = TtLog.list(s, dir)
+    val f = ttResolve(log, from).live.toSet
+    val t = ttResolve(log, to).live.toSet
     ((t -- f).toSeq.sorted, (f -- t).toSeq.sorted)
   }
 
@@ -2119,8 +2117,9 @@ object Mutations {
     */
   private[graft] def ttChanges(s: SparkSession, dir: String,
       from: Int, to: Int): DataFrame = {
-    val (dvFromF, dataFromF) = ttLiveFiles(s, dir, from).partition(ttIsDv)
-    val (dvToF, dataToF) = ttLiveFiles(s, dir, to).partition(ttIsDv)
+    val log = TtLog.list(s, dir)
+    val (dvFromF, dataFromF) = ttResolve(log, from).live.partition(ttIsDv)
+    val (dvToF, dataToF) = ttResolve(log, to).live.partition(ttIsDv)
     val fromSet = dataFromF.toSet
     val toSet = dataToF.toSet
     val addedF = (toSet -- fromSet).toSeq.sorted
@@ -2203,10 +2202,9 @@ object Mutations {
     // an append does not depend on the silver head: staged once
     val batchAdds =
       if (!hasIns) Nil
-      else ttWriteBatch(s, silverDir, s"cdc${first.head + 1}",
+      else ttWriteBatch(s, silverDir, s"cdc${first.next}",
         ins.repartition(col("day")))
     ttOcc(first) { log =>
-      val sv = log.head + 1
       // the first listing was probed above
       ((log eq first) || !ttTxnIn(log, txn)) && {
         // DV rows are silver-head-derived — recomputed on every attempt
@@ -2214,7 +2212,7 @@ object Mutations {
           if (!hasDel) Nil
           else {
             // silver-head candidates through the checkpoint relation (r17 #1)
-            val cdcCand = ttWriteCandidates(s, silverDir, sv - 1)
+            val cdcCand = ttWriteCandidates(s, log, log.head)
             val (dvF, dataF) = (cdcCand.dv, cdcCand.data)
             val tagged = ttApplyDv(s, silverDir,
               ttReadFiles(s, silverDir, dataF, mergeSchema = true)
@@ -2222,10 +2220,9 @@ object Mutations {
             val doomed = tagged.join(delKeys, Seq("event_id"))
               .select(col("_pf").as("file"), col("event_id"))
               .localCheckpoint(true)
-            ttWriteDv(s, silverDir, s"cdc$sv-dv", doomed)
+            ttWriteDv(s, silverDir, s"cdc${log.next}-dv", doomed)
           }
-        ttCommit(s, silverDir, sv, dvAdds ++ batchAdds, Nil,
-          meta = Seq("op=cdc-apply", s"txn=$txn"))
+        ttCommit(s, log, dvAdds ++ batchAdds, Nil, meta = Seq("op=cdc-apply", s"txn=$txn"))
         true
       }
     }
@@ -2304,8 +2301,9 @@ object Mutations {
     * the pre-merge state, the CDF shows exactly the merge's row-level
     * effect (spec-pinned).
     */
-  private[graft] def ttMergeInto(s: SparkSession, dir: String,
-      source: DataFrame, v: Int, sub: String): Unit = {
+  private[graft] def ttMergeInto(s: SparkSession, log: TtLog.Listing,
+      source: DataFrame, sub: String): Unit = {
+    val dir = log.table
     // TABLE-GLOBAL match scope (Delta/Iceberg MERGE semantics): touched
     // files are found by probing the LIVE file set for source keys — a
     // column-pruned (key, file) scan semi-joined against the broadcast
@@ -2332,7 +2330,7 @@ object Mutations {
     // same-commit metadata retirement Delta gets by rewriting sidecars;
     // ttDvCompact reaps inert entries with the rest.
     // candidate resolution through the checkpoint relation (r17 #1)
-    val mergeCand = ttWriteCandidates(s, dir, v - 1)
+    val mergeCand = ttWriteCandidates(s, log, log.head)
     val (dvLive, dataLive) = (mergeCand.dv, mergeCand.data)
     val srcKeys = source.select("event_id")
     val touched =
@@ -2357,8 +2355,7 @@ object Mutations {
         .join(srcKeys, Seq("event_id"), "left_anti")
         .unionByName(srcCols)
         .localCheckpoint(true) // materialize before the metadata swap
-    ttCommit(s, dir, v,
-      ttWriteBatch(s, dir, sub, merged.repartition(col("day"))), touched,
+    ttCommit(s, log, ttWriteBatch(s, dir, sub, merged.repartition(col("day"))), touched,
       meta = Seq("op=merge"))
   }
 
@@ -2391,14 +2388,14 @@ object Mutations {
 
   private[graft] def ttMergedStore(s: SparkSession, d: String): String = {
     val dir = ttStore(s, d)
-    ttMergeInto(s, dir, ttMergeSource(s, d), 4, "b4m")
+    ttMergeInto(s, TtLog.list(s, dir), ttMergeSource(s, d), "b4m")
     dir
   }
 
   def mergeIntoRollup(s: SparkSession, d: String): DataFrame = {
     val dir = ttDerivedScenario(s, d, "graft_up18q_store",
       () => ttBaseScenario(s, d))(dd =>
-      ttMergeInto(s, dd, ttMergeSource(s, d), 4, "b4m"))
+      ttMergeInto(s, TtLog.list(s, dd), ttMergeSource(s, d), "b4m"))
     ttAsOf(s, dir, 4)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -2434,7 +2431,7 @@ object Mutations {
         expr("cast(round(value * 100) as bigint)").as("cents"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         lit(2L).as("ingest_gen")) // the evolved column
-    ttCommit(s, dir, 4,
+    ttCommit(s, TtLog.list(s, dir),
       ttWriteBatch(s, dir, "b4", extra.repartition(col("day"))), Nil,
       meta = Seq("op=append"))
   }
@@ -2458,15 +2455,15 @@ object Mutations {
     * readable AS OF), and the restore itself is time-travelable and
     * CDF-consumable like any commit. O(log metadata).
     */
-  private[graft] def ttRestore(s: SparkSession, dir: String, v: Int,
+  private[graft] def ttRestore(s: SparkSession, log: TtLog.Listing,
       target: Int): Unit = {
     // a nonexistent target must die HERE, not resolve: replaying the log
     // "as of" a version beyond the head silently yields the head's own
     // state, and the restore would then report a misleading no-op
-    require(TtLog.committed(s, dir, target),
-      s"cannot restore to v$target: no such committed version under $dir")
-    val headRes = ttResolve(s, dir, v - 1)
-    val tgtRes = ttResolve(s, dir, target)
+    require(log.commits.contains(target),
+      s"cannot restore to v$target: no such committed version under ${log.table}")
+    val headRes = ttResolve(log, log.head)
+    val tgtRes = ttResolve(log, target)
     val head = headRes.live.toSet
     val tgt = tgtRes.live.toSet
     require(head != tgt || headRes.schemaOps != tgtRes.schemaOps ||
@@ -2492,8 +2489,7 @@ object Mutations {
       if (headRes.constraints == tgtRes.constraints) Nil
       else "constraintreset=1" +: tgtRes.constraints.toSeq.sortBy(_._1)
         .map { case (n, e) => s"constraint=$n|$e" }
-    ttCommit(s, dir, v, (tgt -- head).toSeq.sorted,
-      (head -- tgt).toSeq.sorted,
+    ttCommit(s, log, (tgt -- head).toSeq.sorted, (head -- tgt).toSeq.sorted,
       meta = Seq("op=restore") ++ schemaMeta ++ constraintMeta)
   }
 
@@ -2504,7 +2500,7 @@ object Mutations {
     */
   def restoreRollup(s: SparkSession, d: String): DataFrame = {
     val dir = ttDerivedScenario(s, d, "graft_up22_store",
-      () => ttBaseScenario(s, d))(dd => ttRestore(s, dd, 4, target = 1))
+      () => ttBaseScenario(s, d))(dd => ttRestore(s, TtLog.list(s, dd), target = 1))
     Seq(3, 4).map { v =>
       ttAsOf(s, dir, v).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -2540,7 +2536,7 @@ object Mutations {
     require(!live.exists(ttIsDv),
       s"shallow clone of a DV-bearing snapshot — compact v$asOf first")
     val srcBase = new org.apache.hadoop.fs.Path(srcDir).toUri.getPath
-    ttCommit(s, cloneDir, 0, live.map(f => s"$srcBase/$f"), Nil,
+    ttCommit(s, TtLog.list(s, cloneDir), live.map(f => s"$srcBase/$f"), Nil,
       meta = Seq("op=clone"))
   }
 
@@ -2572,7 +2568,7 @@ object Mutations {
       val srcRows = ttAsOf(s, cloneDir, 0).filter(col("event_type") === "view")
         .withColumn("cents", col("cents") + lit(5L))
         .select("event_id", "event_type", "cents", "day")
-      ttMergeInto(s, cloneDir, srcRows, 1, "c1")
+      ttMergeInto(s, TtLog.list(s, cloneDir), srcRows, "c1")
     }
     def head(table: String, tdir: String, v: Int): DataFrame =
       ttAsOf(s, tdir, v).groupBy(col("event_type"))
@@ -2622,19 +2618,17 @@ object Mutations {
           s"(earliest is $e)")))
   }
 
-  /** Stats-sourced snapshot row count: the sum of live data files'
-    * commit-time numRows — O(resolution metadata), never a scan. None
+  /** Stats-sourced row count of a resolved snapshot: the sum of live
+    * data files' commit-time numRows — no log read, never a scan. None
     * when any live file lacks stats (pre-stats generations) or when
     * deletion vectors are live (their logical subtraction is
     * entry-level; recount instead) — callers fall back to counting.
     */
-  private[graft] def ttStatsRowCount(s: SparkSession, dir: String,
-      v: Int): Option[Long] = {
-    val (live, stats, _) = ttLiveEntriesCounted(s, dir, v)
-    val (dv, data) = live.partition(ttIsDv)
+  private[graft] def ttStatsRowCount(res: TtResolution): Option[Long] = {
+    val (dv, data) = res.live.partition(ttIsDv)
     if (dv.nonEmpty) None
     else {
-      val sts = data.map(stats.get)
+      val sts = data.map(res.stats.get)
       if (sts.exists(_.isEmpty)) None
       else Some(sts.flatten.map(_.numRows).sum)
     }
@@ -2652,9 +2646,10 @@ object Mutations {
     import s.implicits._
     val dir = ttDerivedScenario(s, d, "graft_up18q_store",
       () => ttBaseScenario(s, d))(dd =>
-      ttMergeInto(s, dd, ttMergeSource(s, d), 4, "b4m"))
+      ttMergeInto(s, TtLog.list(s, dd), ttMergeSource(s, d), "b4m"))
+    val log = TtLog.list(s, dir)
     ttHistory(s, dir).map { ci =>
-      val n = ttStatsRowCount(s, dir, ci.version).getOrElse(
+      val n = ttStatsRowCount(ttResolve(log, ci.version)).getOrElse(
         sys.error(s"v${ci.version} lost its commit stats"))
       (ci.version.toLong, ci.op,
         new java.sql.Timestamp(ci.tsMs), n)
@@ -2680,13 +2675,13 @@ object Mutations {
     val base = events(s, d).select(col("event_id"), col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"),
       date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    ttCommit(s, dir, 0,
+    ttCommit(s, TtLog.list(s, dir),
       ttWriteBatch(s, dir, "b0", base.repartition(col("day"))), Nil,
       meta = Seq("op=write"))
     (1 to 9).foreach { i =>
       val slice = base.filter(col("event_id") % 9 === (i - 1))
         .withColumn("event_id", col("event_id") + lit(i * 1000000000L))
-      ttCommit(s, dir, i,
+      ttCommit(s, TtLog.list(s, dir),
         ttWriteBatch(s, dir, s"b$i", slice.repartition(col("day"))), Nil,
         meta = Seq("op=append"))
     }
@@ -2723,7 +2718,7 @@ object Mutations {
   def optimizeRollup(s: SparkSession, d: String): DataFrame = {
     val dir = ttDerivedScenario(s, d, "graft_up25_store",
       () => ttManyScenario(s, d))(dd =>
-      require(ttOptimize(s, dd, 10, "o10"), "up25 fixture had nothing to pack"))
+      require(ttOptimize(s, TtLog.list(s, dd), "o10"), "up25 fixture had nothing to pack"))
     Seq(9, 10).map { v =>
       ttAsOf(s, dir, v).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -2751,14 +2746,14 @@ object Mutations {
     val dir = ttDerivedScenario(s, d, "graft_up26_store",
       () => ttBaseScenario(s, d)) { dd =>
       ttBuildEvolvedSuffix(s, d, dd)
-      ttRenameColumn(s, dd, 5, "cents", "amount")
+      ttRenameColumn(s, TtLog.list(s, dd), "cents", "amount")
       val mapped = events(s, d).filter(col("event_id") % 21 === 0)
         .select((col("event_id") + lit(8000000000L)).as("event_id"),
           col("event_type"),
           (expr("cast(round(value * 100) as bigint)") + lit(330L)).as("amount"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      ttMappedAppend(s, dd, 6, "b6", mapped)
-      ttDropColumn(s, dd, 7, "ingest_gen")
+      ttMappedAppend(s, TtLog.list(s, dd), "b6", mapped)
+      ttDropColumn(s, TtLog.list(s, dd), "ingest_gen")
     }
     ttAsOf(s, dir, 7).groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("amount").as("sum_amount"))
@@ -2766,7 +2761,7 @@ object Mutations {
   }
 
   /** up27 — OCC APPEND under a FORCED commit race: two writers stage
-    * batches from the SAME head; writer B claims head+1 first, then
+    * batches from the SAME head; writer B claims the next version first, then
     * writer A attempts the same version from the same stale listing —
     * its claim fails and it REBASES ([[ttOcc]] re-lists and it re-commits
     * its already-published files at the next version, no re-execution:
@@ -2781,25 +2776,22 @@ object Mutations {
     val dir = ttDerivedScenario(s, d, "graft_up27_store",
       () => ttBaseScenario(s, d))(_ => ())
     val stale = TtLog.list(s, dir)
-    val h = stale.head
     val base = events(s, d).select(col("event_id"), col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"),
       date_format(col("ts"), "yyyy-MM-dd").as("day"))
     def slice(m: Int, off: Long): DataFrame =
       base.filter(col("event_id") % m === 0)
         .withColumn("event_id", col("event_id") + lit(off))
-    val addsA = ttWriteBatch(s, dir, s"oa${h + 1}",
+    val addsA = ttWriteBatch(s, dir, s"oa${stale.next}",
       slice(31, 4000000000L).repartition(col("day")))
-    val addsB = ttWriteBatch(s, dir, s"ob${h + 1}",
+    val addsB = ttWriteBatch(s, dir, s"ob${stale.next}",
       slice(37, 5000000000L).repartition(col("day")))
-    def append(adds: Seq[String]): Int = ttOcc(stale) { log =>
-      ttCommit(s, dir, log.head + 1, adds, Nil, Seq("op=append"))
-      log.head + 1
-    }
+    def append(adds: Seq[String]): Int =
+      ttOcc(stale)(log => ttCommit(s, log, adds, Nil, Seq("op=append")))
     val vB = append(addsB)
     val vA = append(addsA)
-    require(vB == h + 1 && vA == h + 2,
-      s"forced race resolved wrong: B=$vB A=$vA from head $h")
+    require(vB == stale.next && vA == stale.next + 1,
+      s"forced race resolved wrong: B=$vB A=$vA from head ${stale.head}")
     ttAsOf(s, dir, 5).groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")

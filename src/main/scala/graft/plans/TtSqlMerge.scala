@@ -102,7 +102,7 @@ case class TtSqlMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** The substituted command: one ttMergeInto commit at head+1 through
+/** The substituted command: one ttMergeInto commit through
   * [[graft.ops.Mutations.ttOcc]], which re-runs the probe/rewrite against
   * the head that won a lost claim, never publishing a stale rewrite. Runs
   * eagerly under `spark.sql` like every command.
@@ -114,12 +114,12 @@ case class TtSqlMergeCommand(dir: String, source: LogicalPlan)
     val src = org.apache.spark.sql.GraftColumns.ofRows(spark, source)
       .select("event_id", "event_type", "cents", "day")
     Mutations.ttOcc(TtLog.listCommitted(spark, dir))(log =>
-      Mutations.ttMergeInto(spark, dir, src, log.head + 1, s"m${log.head + 1}"))
+      Mutations.ttMergeInto(spark, log, src, s"m${log.next}"))
     Seq.empty
   }
 }
 
-/** SQL DELETE → one DV commit at head+1, re-derived per attempt of
+/** SQL DELETE → one DV commit, re-derived per attempt of
   * [[graft.ops.Mutations.ttOcc]]. The parsed predicate re-binds
   * to the snapshot DataFrame by column NAME (exprIds belong to the SQL
   * relation instance and mean nothing to the snapshot read).
@@ -127,27 +127,23 @@ case class TtSqlMergeCommand(dir: String, source: LogicalPlan)
 case class TtSqlDeleteCommand(dir: String, condition: Expression)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
-      val v = log.head + 1
-      Mutations.ttDvDelete(spark, dir, v, s"dv$v", TtSqlCommands.byName(condition),
-        dayScope = TtSqlCommands.dayScope(condition))
-    }
+    Mutations.ttOcc(TtLog.listCommitted(spark, dir))(log =>
+      Mutations.ttDvDelete(spark, log, s"dv${log.next}", TtSqlCommands.byName(condition),
+        dayScope = TtSqlCommands.dayScope(condition)))
     Seq.empty
   }
 }
 
-/** SQL UPDATE → one up21 merge-on-read update commit at head+1,
+/** SQL UPDATE → one up21 merge-on-read update commit,
   * re-derived per attempt of [[graft.ops.Mutations.ttOcc]].
   */
 case class TtSqlUpdateCommand(dir: String, sets: Seq[(String, Expression)],
     condition: Expression) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
-      val v = log.head + 1
-      Mutations.ttDvUpdate(spark, dir, v, s"u$v", TtSqlCommands.byName(condition),
+    Mutations.ttOcc(TtLog.listCommitted(spark, dir))(log =>
+      Mutations.ttDvUpdate(spark, log, s"u${log.next}", TtSqlCommands.byName(condition),
         sets.map { case (c, e) => c -> TtSqlCommands.byName(e) },
-        dayScope = TtSqlCommands.dayScope(condition))
-    }
+        dayScope = TtSqlCommands.dayScope(condition)))
     Seq.empty
   }
 }

@@ -233,7 +233,7 @@ object TtSqlParser {
   }
 }
 
-/** The executed statement: one `op=restore` commit at head+1 through
+/** The executed statement: one `op=restore` commit through
   * [[graft.ops.Mutations.ttOcc]]. Returns (table, restored_to,
   * committed_as) so the caller sees which version the rollback landed at.
   */
@@ -247,9 +247,8 @@ case class TtSqlRestoreCommand(table: String, target: Int)
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val committed = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
-      val v = log.head + 1
-      Mutations.ttRestore(spark, dir, v, target)
-      v
+      Mutations.ttRestore(spark, log, target)
+      log.next
     }
     Seq(Row(s"tt.$table", target.toLong, committed.toLong))
   }
@@ -275,10 +274,9 @@ case class TtSqlOptimizeCommand(table: String, zorderBy: Seq[String],
     val dir = TtSqlParser.dirOf(table)
     val days = whereDay.map(Set(_))
     val (did, v) = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
-      val tv = log.head + 1
       (if (zorderBy.nonEmpty)
-        Mutations.ttOptimizeClustered(spark, dir, tv, s"z$tv", zorderBy, onlyDays = days)
-      else Mutations.ttOptimize(spark, dir, tv, s"o$tv", onlyDays = days), tv)
+        Mutations.ttOptimizeClustered(spark, log, s"z${log.next}", zorderBy, onlyDays = days)
+      else Mutations.ttOptimize(spark, log, s"o${log.next}", onlyDays = days), log.next)
     }
     Seq(Row(s"tt.$table", zorderBy.nonEmpty, if (did) v.toLong else -1L))
   }
@@ -321,9 +319,8 @@ case class TtSqlAddConstraintCommand(table: String, cname: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val v = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
-      val tv = log.head + 1
-      Mutations.ttAddConstraint(spark, dir, tv, cname, cexpr)
-      tv
+      Mutations.ttAddConstraint(spark, log, cname, cexpr)
+      log.next
     }
     Seq(Row(s"tt.$table", cname, v.toLong))
   }
@@ -339,9 +336,8 @@ case class TtSqlDropConstraintCommand(table: String, cname: String)
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
     val v = Mutations.ttOcc(TtLog.listCommitted(spark, dir)) { log =>
-      val tv = log.head + 1
-      Mutations.ttDropConstraint(spark, dir, tv, cname)
-      tv
+      Mutations.ttDropConstraint(spark, log, cname)
+      log.next
     }
     Seq(Row(s"tt.$table", cname, v.toLong))
   }
@@ -368,8 +364,7 @@ case class TtSqlCloneCommand(newTable: String, srcTable: String,
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(Seq("tt", newTable))
     val srcDir = TtSqlParser.dirOf(srcTable)
-    val asOf = version.getOrElse(
-      graft.sources.TtLog.requireHead(spark, srcDir))
+    val asOf = version.getOrElse(TtLog.listCommitted(spark, srcDir).head)
     graft.ops.Mutations.ttShallowClone(spark, srcDir, location, asOf)
     graft.sources.TtCatalog.register(newTable, location)
     Seq(Row(s"tt.$newTable", s"tt.$srcTable", asOf.toLong, location))
@@ -414,9 +409,10 @@ case class TtSqlHistoryCommand(table: String) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = TtSqlParser.dirOf(table)
-    graft.ops.Mutations.ttHistory(spark, dir).map { ci =>
-      val n = graft.ops.Mutations.ttStatsRowCount(spark, dir, ci.version)
-        .getOrElse(graft.ops.Mutations.ttAsOf(spark, dir, ci.version).count())
+    val log = TtLog.list(spark, dir)
+    Mutations.ttHistory(spark, dir).map { ci =>
+      val n = Mutations.ttStatsRowCount(Mutations.ttResolve(log, ci.version))
+        .getOrElse(Mutations.ttAsOf(spark, log, ci.version).count())
       Row(ci.version.toLong, ci.op, new java.sql.Timestamp(ci.tsMs), n)
     }
   }
@@ -449,7 +445,7 @@ case class TtSqlApplyChangesCommand(target: String, source: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val srcDir = TtSqlParser.dirOf(source)
     val tgtDir = TtSqlParser.dirOf(target)
-    val head = graft.sources.TtLog.requireHead(spark, srcDir)
+    val head = TtLog.listCommitted(spark, srcDir).head
     val from = fromVersion.getOrElse(0)
     require(from >= 0 && from <= head,
       s"APPLY CHANGES: FROM VERSION $from is outside tt.$source's " +
@@ -497,8 +493,9 @@ case class TtSqlDescribeDetailCommand(table: String)
   override def run(spark: SparkSession): Seq[Row] = {
     import graft.ops.Mutations
     val dir = TtSqlParser.dirOf(table)
-    val head = graft.sources.TtLog.requireHead(spark, dir)
-    val res = Mutations.ttResolve(spark, dir, head)
+    val log = TtLog.listCommitted(spark, dir)
+    val head = log.head
+    val res = Mutations.ttResolve(log, head)
     val (dvF, dataF) = res.live.partition(Mutations.ttIsDv)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -507,8 +504,8 @@ case class TtSqlDescribeDetailCommand(table: String)
         else new org.apache.hadoop.fs.Path(s"$dir/$f")
       fs.getFileStatus(p).getLen
     }.sum
-    val nRows = Mutations.ttStatsRowCount(spark, dir, head)
-      .getOrElse(Mutations.ttAsOf(spark, dir, head).count())
+    val nRows = Mutations.ttStatsRowCount(res)
+      .getOrElse(Mutations.ttAsOf(spark, log, head).count())
     // partition columns read off the live layout (the store's layout
     // key is its directory scheme — day-partitioned or flat)
     val partCols =

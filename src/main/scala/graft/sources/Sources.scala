@@ -1643,8 +1643,8 @@ object Sources {
     * then the head read back through the catalog.
     */
   def sqlUpdate(s: SparkSession, d: String): DataFrame = {
-    // memoized base store (staged); the UPDATE verb runs (timed) at
-    // head+1 every call, and the declared read is PINNED at v4 (the
+    // memoized base store (staged); the UPDATE verb commits (timed) a
+    // new head every call, and the declared read is PINNED at v4 (the
     // first run's post-update snapshot) — later runs' extra +77
     // commits never surface
     val dir = graft.ops.Mutations.ttDerivedScenario(s, d, "graft_src31_store",

@@ -54,7 +54,7 @@ final class TtTable(tableName: String, dir: String, version: Option[Int])
 
   private def snapshot(s: SparkSession): DataFrame = {
     val log = TtLog.listCommitted(s, dir)
-    graft.ops.Mutations.ttAsOf(s, dir, log, version.getOrElse(log.head))
+    graft.ops.Mutations.ttAsOf(s, log, version.getOrElse(log.head))
   }
 
   // schema is resolved once at table load (analysis time), per-snapshot:
@@ -213,28 +213,28 @@ final class TtCatalog extends TableCatalog {
     val s = SparkSession.active
     val dir = dirOf(ident)
     changes.foreach { change =>
-      val verb: Int => Unit = change match {
+      val verb: TtLog.Listing => Unit = change match {
         case r: TableChange.RenameColumn =>
           require(r.fieldNames.length == 1,
             "tt tables have no nested columns to rename")
-          graft.ops.Mutations.ttRenameColumn(s, dir, _, r.fieldNames.head, r.newName)
+          graft.ops.Mutations.ttRenameColumn(s, _, r.fieldNames.head, r.newName)
         case d: TableChange.DeleteColumn =>
           require(d.fieldNames.length == 1,
             "tt tables have no nested columns to drop")
-          graft.ops.Mutations.ttDropColumn(s, dir, _, d.fieldNames.head)
+          graft.ops.Mutations.ttDropColumn(s, _, d.fieldNames.head)
         case a: TableChange.AddColumn =>
           require(a.fieldNames.length == 1,
             "tt tables have no nested columns to add into")
           require(a.isNullable,
             "tt ADD COLUMN must be nullable: pre-add files read the new " +
               "column as NULL")
-          graft.ops.Mutations.ttAddColumn(s, dir, _, a.fieldNames.head, a.dataType)
+          graft.ops.Mutations.ttAddColumn(s, _, a.fieldNames.head, a.dataType)
         case other => throw new UnsupportedOperationException(
           "tt ALTER TABLE supports RENAME COLUMN, DROP COLUMN and " +
             s"ADD COLUMN only, got $other")
       }
-      // one metadata commit at head + 1, like every SQL verb
-      graft.ops.Mutations.ttOcc(TtLog.listCommitted(s, dir))(log => verb(log.head + 1))
+      // one metadata commit, like every SQL verb
+      graft.ops.Mutations.ttOcc(TtLog.listCommitted(s, dir))(verb)
     }
     loadTable(ident)
   }

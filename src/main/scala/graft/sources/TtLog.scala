@@ -104,10 +104,6 @@ private[graft] object TtLog {
       stats.map { case (f, st) => s"# stat=$f|${st.numRows}|${st.lo}|${st.hi}" }.sorted ++
       adds.sorted.map("a " + _) ++ removes.sorted.map("r " + _)).mkString("\n")
 
-  /** Whether `table` has committed version `v` (one status call). */
-  def committed(s: SparkSession, table: String, v: Int): Boolean =
-    fs(s, table).exists(new Path(dir(table), commitName(v)))
-
   /** Commit `v`'s entries, or None if it is not committed; no listing. */
   def entries(s: SparkSession, table: String, v: Int): Option[Seq[Entry]] = {
     val p = new Path(dir(table), commitName(v))
@@ -234,6 +230,11 @@ private[graft] object TtLog {
     /** The newest committed version, or -1. */
     def head: Int = commits.lastOption.fold(-1)(_._1)
 
+    /** The version a commit made from this listing claims: the one right
+      * after the snapshot it read.
+      */
+    def next: Int = head + 1
+
     /** A new listing of the same log. */
     def relist: Listing = list(s, table)
 
@@ -309,7 +310,4 @@ private[graft] object TtLog {
     require(l.head >= 0, s"no committed tt version under $table")
     l
   }
-
-  /** [[head]] for a caller that needs a committed version. */
-  def requireHead(s: SparkSession, table: String): Int = listCommitted(s, table).head
 }

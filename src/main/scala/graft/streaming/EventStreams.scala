@@ -1403,6 +1403,12 @@ object EventStreams {
         graft.ops.Mutations.ttBuildDvSuffix(s, dd)),
       fromCheckpoint = false) // the declared feed is the FULL history
 
+  /** The head snapshot of the tt table at `dir`, through one listing. */
+  private def ttHeadRead(s: SparkSession, dir: String): DataFrame = {
+    val log = TtLog.list(s, dir)
+    graft.ops.Mutations.ttAsOf(s, log, log.head)
+  }
+
   /** st31 — EXACTLY-ONCE STREAMING WRITE into the tt store: each
     * micro-batch lands as ONE tt commit tagged with its batch id
     * (Delta's txnAppId/txnVersion idempotence); a replayed batch — the
@@ -1455,7 +1461,7 @@ object EventStreams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    Mutations.ttAsOf(s, dir, TtLog.head(s, dir))
+    ttHeadRead(s, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")
@@ -1508,16 +1514,13 @@ object EventStreams {
         val maxPerDay = dataF.groupBy(f => f.take(f.indexOf('/')))
           .values.map(_.size).maxOption.getOrElse(0)
         if (maxPerDay >= threshold)
-          Mutations.ttOcc(log) { l =>
-            val v = l.head + 1
-            Mutations.ttOptimize(sp, dir, v, s"ac$v", minFilesPerDay = 2)
-          }
+          Mutations.ttOcc(log)(l => Mutations.ttOptimize(sp, l, s"ac${l.next}", minFilesPerDay = 2))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    Mutations.ttAsOf(s, dir, TtLog.head(s, dir))
+    ttHeadRead(s, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")
@@ -1577,7 +1580,7 @@ object EventStreams {
       .start()
     try q.awaitTermination() finally q.stop()
     require(nextV == 4, s"replication stopped at v$nextV of 4")
-    Mutations.ttAsOf(s, silver, TtLog.head(s, silver))
+    ttHeadRead(s, silver)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .orderBy("event_type")
@@ -1615,11 +1618,12 @@ object EventStreams {
     // (the declared st28 scenario) this is a no-op and the tail starts
     // at v0 exactly as before.
     locally {
-      val ckptV = TtLog.list(s, dir).checkpoints.lastOption.getOrElse(-1)
+      val log = TtLog.list(s, dir)
+      val ckptV = log.checkpoints.lastOption.getOrElse(-1)
       if (ckptV >= 0 && fromCheckpoint) {
         // ttAsOf, not a raw live-set read: the checkpointed set may carry
         // deletion vectors, which the snapshot read applies
-        Mutations.ttAsOf(s, dir, ckptV).groupBy("event_type")
+        Mutations.ttAsOf(s, log, ckptV).groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("cents").as("c"))
           .collect().foreach { r =>
             partials(r.getString(0)) = (r.getLong(1), r.getLong(2))

@@ -80,7 +80,7 @@ class TtCatalogSpec extends SparkSpec {
       """SELECT event_type, count(*) AS n, sum(cents) AS sum_cents
         FROM tt.up20_spec_store GROUP BY event_type ORDER BY event_type"""))
     val dfDir = graft.ops.Mutations.ttStore(spark, sf0001)
-    graft.ops.Mutations.ttDvDelete(spark, dfDir, 4, "dv4",
+    graft.ops.Mutations.ttDvDelete(spark, TtLog.list(spark, dfDir), "dv4",
       pmod(col("event_id"), lit(23)) === 0)
     val viaDf = rows(graft.ops.Mutations.ttAsOf(spark, dfDir, 4)
       .groupBy("event_type")
@@ -92,7 +92,7 @@ class TtCatalogSpec extends SparkSpec {
   test("SQL UPDATE routes to a merge-on-read update commit ≡ DataFrame ttDvUpdate") {
     val viaSql = rows(Sources.sqlUpdate(spark, sf0001))
     val dfDir = graft.ops.Mutations.ttStore(spark, sf0001)
-    graft.ops.Mutations.ttDvUpdate(spark, dfDir, 4, "u4",
+    graft.ops.Mutations.ttDvUpdate(spark, TtLog.list(spark, dfDir), "u4",
       col("event_type") === "purchase",
       Seq("cents" -> (col("cents") + lit(77L))))
     val viaDf = rows(graft.ops.Mutations.ttAsOf(spark, dfDir, 4)
@@ -568,7 +568,7 @@ class TtCatalogSpec extends SparkSpec {
     TtCatalog.register("r17_3vl", dir)
     // evolve the schema by writing the column (up17's discipline), then
     // constrain it — older-generation writers keep appending WITHOUT it
-    Mutations.ttMappedAppend(spark, dir, 4, "b4",
+    Mutations.ttMappedAppend(spark, TtLog.list(spark, dir), "b4",
       spark.range(2).select((col("id") + 9710000000L).as("event_id"),
         lit("gen2").as("event_type"), (col("id") + 10L).as("cents"),
         lit("2024-01-04").as("day"), lit(5L).as("ingest_gen")))
@@ -1059,7 +1059,7 @@ class TtCatalogSpec extends SparkSpec {
     val tp = new org.apache.hadoop.fs.Path(twin)
     tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
     Mutations.ttBuildStore(spark, sf0001, twin)
-    Mutations.ttDvUpdate(spark, twin, 4, "u4",
+    Mutations.ttDvUpdate(spark, TtLog.list(spark, twin), "u4",
       col("day") === day0 && col("event_type") === "view",
       Seq("cents" -> (col("cents") + lit(3L)))) // unscoped
     def state(d: String) = rows(Mutations.ttAsOf(spark, d, 4)

@@ -35,17 +35,17 @@ class TtLogSpec extends SparkSpec {
   private lazy val store: String = {
     val dir = s"${tmp("graft_ttlog_store")}/store"
     Mutations.ttBuildManyCommits(spark, sf0001, dir)
-    Mutations.ttDvDelete(spark, dir, 10, "dv10", pmod(col("event_id"), lit(23)) === 0)
-    Mutations.ttDvCompact(spark, dir, 11, "c11")
+    Mutations.ttDvDelete(spark, TtLog.list(spark, dir), "dv10", pmod(col("event_id"), lit(23)) === 0)
+    Mutations.ttDvCompact(spark, TtLog.list(spark, dir), "c11")
     assert(Mutations.ttIdempotentAppend(spark, dir, shifted(17, 5000000000L), "spec#1"))
     assert(!Mutations.ttIdempotentAppend(spark, dir, shifted(17, 5000000000L), "spec#1"))
-    Mutations.ttAddConstraint(spark, dir, 13, "pos", "event_id >= 0")
-    Mutations.ttRenameColumn(spark, dir, 14, "cents", "amount")
-    Mutations.ttAddColumn(spark, dir, 15, "note", StringType)
-    Mutations.ttDropColumn(spark, dir, 16, "note")
-    Mutations.ttDropConstraint(spark, dir, 17, "pos")
-    Mutations.ttAddConstraint(spark, dir, 18, "typed", "event_type IS NOT NULL")
-    Mutations.ttRestore(spark, dir, 19, target = 9)
+    Mutations.ttAddConstraint(spark, TtLog.list(spark, dir), "pos", "event_id >= 0")
+    Mutations.ttRenameColumn(spark, TtLog.list(spark, dir), "cents", "amount")
+    Mutations.ttAddColumn(spark, TtLog.list(spark, dir), "note", StringType)
+    Mutations.ttDropColumn(spark, TtLog.list(spark, dir), "note")
+    Mutations.ttDropConstraint(spark, TtLog.list(spark, dir), "pos")
+    Mutations.ttAddConstraint(spark, TtLog.list(spark, dir), "typed", "event_type IS NOT NULL")
+    Mutations.ttRestore(spark, TtLog.list(spark, dir), target = 9)
     assert(Mutations.ttIdempotentAppend(spark, dir, shifted(19, 6000000000L), "spec#2"))
     dir
   }
@@ -84,13 +84,13 @@ class TtLogSpec extends SparkSpec {
       assert(r.opened == opened(v), s"v$v opened ${r.opened}")
       assert(full.opened == v + 1, s"v$v log-only opened ${full.opened}")
       val (dv, data) = r.live.partition(Mutations.ttIsDv)
-      val surv = Mutations.ttCheckpointSurvivors(spark, store, v, None)
+      val surv = Mutations.ttCheckpointSurvivors(spark, TtLog.list(spark, store), v, None)
       assert(surv.isDefined == survivorsAt(v), s"v$v survivors ${surv.isDefined}")
       surv.foreach { case (files, n) =>
         assert(files == data.map(f => f -> r.stats(f)), s"v$v survivors")
         assert(n == opened(v), s"v$v survivors opened $n")
       }
-      val cand = Mutations.ttWriteCandidates(spark, store, v)
+      val cand = Mutations.ttWriteCandidates(spark, TtLog.list(spark, store), v)
       assert(cand.viaRelation == relationAt(v), s"v$v candidates via relation ${cand.viaRelation}")
       assert(cand.dv == dv && cand.data == data, s"v$v candidates")
       if (cand.viaRelation) assert(cand.opened == opened(v), s"v$v candidates opened ${cand.opened}")
@@ -109,7 +109,7 @@ class TtLogSpec extends SparkSpec {
 
   test("write candidates' replay fallback reports the log files it opened") {
     // v0-v9 of the store are the many-commit store; v3 has no checkpoint
-    val cand = Mutations.ttWriteCandidates(spark, store, 3)
+    val cand = Mutations.ttWriteCandidates(spark, TtLog.list(spark, store), 3)
     assert(!cand.viaRelation)
     assert(cand.opened == 4, s"opened ${cand.opened}")
   }
@@ -128,9 +128,9 @@ class TtLogSpec extends SparkSpec {
     commit(6, s"# stat=$f1|3|1|3", s"a $f1")
     commit(7, s"r $f1")
     assert(Mutations.ttResolve(spark, dir, 7).live == Seq(f2))
-    val surv = Mutations.ttCheckpointSurvivors(spark, dir, 7, None)
+    val surv = Mutations.ttCheckpointSurvivors(spark, TtLog.list(spark, dir), 7, None)
     assert(surv.map(_._1.map(_._1)).contains(Seq(f2)), surv.toString)
-    val cand = Mutations.ttWriteCandidates(spark, dir, 7)
+    val cand = Mutations.ttWriteCandidates(spark, TtLog.list(spark, dir), 7)
     assert(cand.viaRelation && cand.data == Seq(f2), cand.toString)
   }
 
@@ -165,18 +165,11 @@ class TtLogSpec extends SparkSpec {
     }
   }
 
-  test("SQL DML on a tt table lists and opens its _log no more often than before") {
-    // (listStatus, open) calls under _log per statement, measured once
-    // each SQL statement resolved its table, and the fallback of its write
-    // candidates, from one listing, and every writer retried a lost claim
-    // through Mutations.ttOcc; round 2 runs over ckpt-v4
-    val bound = Map(
-      "ctas" -> (4, 4), "version_as_of" -> (2, 4),
-      "merge1" -> (4, 6), "update1" -> (4, 9), "delete1" -> (7, 13),
-      "insert1" -> (5, 1), "read1" -> (2, 2),
-      "merge2" -> (5, 5), "update2" -> (5, 8), "delete2" -> (8, 12),
-      "insert2" -> (5, 1), "read2" -> (2, 2),
-      "append_fresh" -> (2, 2), "append_replay" -> (1, 2), "apply_changes" -> (11, 15))
+  /** The counted-traffic store on the `countfs` scheme, built by SQL DML
+    * and the other writers, with each statement's (listStatus, open) calls
+    * under `_log`.
+    */
+  private lazy val traffic: (String, Seq[(String, (Int, Int))]) = {
     val name = "ttlog_traffic"
     val loc = s"countfs://${tmp("graft_ttlog_traffic")}/store"
     events.createOrReplaceTempView("ttlog_base")
@@ -207,6 +200,11 @@ class TtLogSpec extends SparkSpec {
             counted(s"insert$r")(spark.sql(s"INSERT INTO tt.$name SELECT * FROM ttlog_insert")),
             counted(s"read$r")(spark.sql(agg.format(s"tt.$name")).collect()))
         }
+        // src32 on a version no checkpoint covers, and the table summary
+        assert(created < Mutations.ttCheckpointInterval)
+        val skipping = counted("skipping_read")(
+          Mutations.ttSkippingRelation(spark, loc, created, Some((0L, Long.MaxValue))))
+        val detail = counted("describe_detail")(spark.sql(s"DESCRIBE DETAIL tt.$name").collect())
         val asOf = counted("version_as_of")(
           spark.sql(agg.format(s"tt.$name VERSION AS OF $created")).collect())
         // the writers that commit through the one loop outside SQL DML
@@ -220,20 +218,91 @@ class TtLogSpec extends SparkSpec {
           s"countfs://${tmp("graft_ttlog_silver")}/store")
         Seq(41, 43).foreach(m => assert(Mutations.ttIdempotentAppend(spark, bronze,
           shifted(m, m * 100000000L), s"bronze#$m")))
-        Mutations.ttDvDelete(spark, bronze, 2, "dv2", col("event_id") % 2 === 0)
+        Mutations.ttDvDelete(spark, TtLog.list(spark, bronze), "dv2", col("event_id") % 2 === 0)
         TtCatalog.register(s"${name}_bronze", bronze)
         TtCatalog.register(s"${name}_silver", silver)
         val apply = counted("apply_changes")(spark.sql(
           s"APPLY CHANGES INTO tt.${name}_silver FROM tt.${name}_bronze").collect())
-        (ctas +: rounds) ++ Seq(asOf, append, replay, apply)
+        (ctas +: rounds) ++ Seq(skipping, detail, asOf, append, replay, apply)
       } finally Seq("", "_bronze", "_silver").foreach(x => TtCatalog.tables.remove(name + x))
     }
+    (loc, counts)
+  }
+
+  test("SQL DML on a tt table lists and opens its _log no more often than before") {
+    // (listStatus, open) calls under _log per statement, measured once
+    // every tt verb read its base and committed through the one listing
+    // of its ttOcc attempt; round 2 runs over ckpt-v4
+    val bound = Map(
+      "ctas" -> (3, 4), "version_as_of" -> (2, 4),
+      "merge1" -> (2, 6), "update1" -> (2, 9), "delete1" -> (6, 13),
+      "insert1" -> (3, 1), "read1" -> (2, 2),
+      "merge2" -> (3, 5), "update2" -> (3, 8), "delete2" -> (7, 12),
+      "insert2" -> (3, 1), "read2" -> (2, 2),
+      "skipping_read" -> (1, 2), "describe_detail" -> (1, 2),
+      "append_fresh" -> (1, 2), "append_replay" -> (1, 2), "apply_changes" -> (7, 15))
+    val (loc, counts) = traffic
     info(counts.map { case (k, (l, o)) => s"$k=$l/$o" }.mkString(" "))
     assert(TtLog.head(spark, loc.stripPrefix("countfs://")) > 4)
     val over = counts.filter { case (k, (l, o)) =>
       bound.get(k).forall { case (bl, bo) => l > bl || o > bo }
     }
     assert(over.isEmpty, s"over the bound: ${over.mkString(", ")}")
+  }
+
+  test("a tt verb handed a listing touches _log only to write a checkpoint") {
+    val (loc, _) = traffic
+    val base = TtLog.head(spark, loc.stripPrefix("countfs://"))
+    def verb(name: String)(run: TtLog.Listing => Any) = name -> run
+    val verbs = Seq(
+      verb("merge")(Mutations.ttMergeInto(spark, _, shifted(11, 0L), "vm")),
+      verb("delete")(Mutations.ttDvDelete(spark, _, "vd", col("event_id") % 19 === 0)),
+      verb("update")(Mutations.ttDvUpdate(spark, _, "vu", col("event_id") % 23 === 0,
+        Seq("cents" -> (col("cents") + lit(1L))))),
+      verb("dv_compact")(Mutations.ttDvCompact(spark, _, "vc")),
+      verb("optimize")(l => assert(Mutations.ttOptimize(spark, l, "vo"))),
+      verb("optimize_clustered")(l =>
+        assert(Mutations.ttOptimizeClustered(spark, l, "vz", filesPerDay = 2))),
+      verb("add_constraint")(Mutations.ttAddConstraint(spark, _, "pos", "event_id >= 0")),
+      verb("drop_constraint")(Mutations.ttDropConstraint(spark, _, "pos")),
+      verb("add_column")(Mutations.ttAddColumn(spark, _, "note", StringType)),
+      verb("rename_column")(Mutations.ttRenameColumn(spark, _, "cents", "amount")),
+      verb("mapped_append")(Mutations.ttMappedAppend(spark, _, "vma",
+        shifted(13, 9500000000L).withColumnRenamed("cents", "amount"))),
+      verb("drop_column")(Mutations.ttDropColumn(spark, _, "note")),
+      verb("restore")(Mutations.ttRestore(spark, _, target = base)))
+    // listings of the _log dir itself per verb (a Spark read of a
+    // checkpoint file lists that file, not the log)
+    val counts = withCountFs {
+      verbs.map { case (verb, run) =>
+        val log = TtLog.list(spark, loc)
+        CountFs.reset()
+        run(log)
+        val n = CountFs.logDirLists.get
+        assert(TtLog.head(spark, loc) == log.next, s"$verb did not commit at ${log.next}")
+        (verb, log.next, n)
+      }
+    }
+    info(counts.map { case (k, v, n) => s"$k@v$v=$n" }.mkString(" "))
+    assert(counts.map(_._2) == (base + 1 to base + verbs.size))
+    assert(counts.exists(_._2 % Mutations.ttCheckpointInterval == 0))
+    val over = counts.filter { case (_, v, n) =>
+      n > (if (v % Mutations.ttCheckpointInterval == 0) 1 else 0)
+    }
+    assert(over.isEmpty, s"listed _log beyond a checkpoint write: ${over.mkString(", ")}")
+  }
+
+  test("source lint: only TtLog.Listing.next adds one to a head") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: no $root")
+    val plusOne = "head(\\([^)]*\\))?\\s*\\+\\s*1\\b".r
+    val hits = Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala
+        .filter(l => plusOne.findFirstIn(l).isDefined)
+        .map(l => s"${root.relativize(p)}: ${l.trim}"))
+    assert(hits == Seq("graft/sources/TtLog.scala: def next: Int = head + 1"),
+      "a tt commit version is picked only by log.next:\n" + hits.mkString("\n"))
   }
 }
 
@@ -258,6 +327,7 @@ class CountFs extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     if (inLog(f)) CountFs.lists.incrementAndGet()
+    if (f.getName == "_log") CountFs.logDirLists.incrementAndGet()
     super.listStatus(f).map(plain)
   }
 
@@ -268,7 +338,8 @@ class CountFs extends RawLocalFileSystem {
 }
 
 object CountFs {
-  val lists = new AtomicInteger
+  /** listStatus calls under `_log`, and those of the `_log` dir itself. */
+  val lists, logDirLists = new AtomicInteger
   val opens = new AtomicInteger
-  def reset(): Unit = { lists.set(0); opens.set(0) }
+  def reset(): Unit = { lists.set(0); logDirLists.set(0); opens.set(0) }
 }
